@@ -6,13 +6,9 @@ from light_curve_spark.kernels.compression import (
     decode_chunk,
     decode_timestamps,
     decode_values,
-    decode_values_columnar,
     encode_chunk,
     encode_timestamps,
     encode_values,
-    encode_values_batch,
-    encode_values_batch_columnar,
-    encode_values_columnar,
 )
 from light_curve_spark.kernels.features import (
     FEATURE_NAMES,
@@ -40,13 +36,9 @@ __all__ = [
     "decode_chunk",
     "decode_timestamps",
     "decode_values",
-    "decode_values_columnar",
     "encode_chunk",
     "encode_timestamps",
     "encode_values",
-    "encode_values_batch",
-    "encode_values_batch_columnar",
-    "encode_values_columnar",
     "feature_vector",
     "interpolate",
     "linspace",

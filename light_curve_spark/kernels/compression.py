@@ -36,12 +36,14 @@ Values (§4.1.2, one deliberate deviation):
     shapes, vectorized both directions. Round-trip exactness (the actual
     correctness gate) holds for every codec.
 
-Both encoders are fully vectorized: per-element payloads are materialized
+Every encoder is fully vectorized: per-element payloads are materialized
 as (hi, lo) uint64 pairs + bit lengths, then flattened to a bit array with
 repeat/cumsum indexing and np.packbits — no per-element Python in encode.
-Decode of the default xor-blocked codec is vectorized batch-wide
-(block envelopes decode with numpy gathers; see decode_values_batch_blocked);
-only the legacy irregular-stream fallback decodes as a sequential bit-walk.
+The chunk table stores values in the xor-blocked codec, whose decode is
+vectorized batch-wide (block envelopes decode with numpy gathers; see
+decode_values_batch_blocked). The paper-faithful interleaved values
+(:func:`decode_values`) and irregular timestamp streams decode as a
+sequential bit-walk.
 """
 
 from __future__ import annotations
@@ -386,124 +388,6 @@ def decode_values(buf: bytes) -> np.ndarray:
     return out
 
 
-def _xor_payloads(xor: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(hi, lo, bit-lengths) for an array of XOR tokens (vectorized core
-    shared by the single-series and batch encoders)."""
-    m = xor.shape[0]
-    lengths = np.ones(m, dtype=np.int64)
-    lo = np.zeros(m, dtype=_U64)
-    hi = np.zeros(m, dtype=_U64)
-    nz = np.flatnonzero(xor != 0)
-    if nz.size:
-        lead = _clz64(xor[nz])
-        trail = _ctz64(xor[nz])
-        mlen = np.maximum(64 - lead - trail, 1)
-        L = lead.astype(_U64)
-        ml = mlen.astype(_U64)
-        meaningful = xor[nz] >> trail.astype(_U64)
-        head = (_U64(1) << _U64(12)) | (L << _U64(6)) | (ml - _U64(1))
-        s1 = np.minimum(ml, _U64(63))
-        s2 = ml - s1
-        lo[nz] = ((head << s1) << s2) | meaningful
-        hi[nz] = head >> (_U64(64) - ml)
-        lengths[nz] = 13 + mlen
-    return hi, lo, lengths
-
-
-def encode_values_batch(values_list: list[np.ndarray]) -> list[bytes]:
-    """Batch Gorilla-XOR encode: MANY series in one vectorized pass.
-
-    Same output format as :func:`encode_values` per series (byte-for-byte
-    — tested), but the clz/ctz/payload computation and the bit packing
-    run over the CONCATENATION of all series; each series' bitstream is
-    byte-aligned by appending a zero-payload pad element of
-    ``(-bits) % 8`` bits, and the packed buffer is sliced at the per-row
-    byte offsets. Removes the ~1 ms/row Python overhead of calling the
-    single-series encoder in a loop — the difference between the encode
-    stage scaling with cores and being flat (BENCH.md).
-    """
-    R = len(values_list)
-    if R == 0:
-        return []
-    arrs = [np.asarray(v, dtype=np.int64) for v in values_list]
-    # cache blocking: a full Arrow batch (~1.5M tokens) drags a ~100 MB
-    # working set through every vector op, saturating the shared LLC and
-    # killing multi-core scaling; ~128k-token groups keep the working set
-    # in-cache (same output, groups are independent). Groups go straight
-    # to the non-blocking core — re-entering this function would recurse
-    # forever on a group made of a single > 2*CHUNK_TOKENS array.
-    CHUNK_TOKENS = 128_000
-    if R > 1 and sum(a.shape[0] for a in arrs) > 2 * CHUNK_TOKENS:
-        out: list[bytes] = []
-        group: list[np.ndarray] = []
-        acc = 0
-        for a in arrs:
-            group.append(a)
-            acc += a.shape[0]
-            if acc >= CHUNK_TOKENS:
-                out.extend(_encode_values_batch_core(group))
-                group, acc = [], 0
-        if group:
-            out.extend(_encode_values_batch_core(group))
-        return out
-    return _encode_values_batch_core(arrs)
-
-
-def _encode_values_batch_core(arrs: list[np.ndarray]) -> list[bytes]:
-    """Non-blocking vectorized body of :func:`encode_values_batch`;
-    ``arrs`` are int64 ndarrays. Handles any sizes, including a single
-    oversized series (cache-suboptimal but correct)."""
-    R = len(arrs)
-    lengths = np.fromiter((a.shape[0] for a in arrs), dtype=np.int64, count=R)
-    headers = []
-    for a, n in zip(arrs, lengths):
-        h = struct.pack("<I", int(n))
-        if n:
-            h += struct.pack("<Q", int(a[0].view(_U64)))
-        headers.append(h)
-    if (lengths <= 1).all():
-        return headers
-
-    flat = np.concatenate(arrs).view(_U64)
-    total = flat.shape[0]
-    starts = np.cumsum(lengths) - lengths
-    elem = np.repeat(np.arange(R), lengths)
-    prev = np.empty_like(flat)
-    prev[1:] = flat[:-1]
-    prev[0] = 0
-    xor = flat ^ prev
-    first = np.zeros(total, dtype=bool)
-    first[starts[lengths > 0]] = True
-    sel = ~first
-    hi, lo, bits = _xor_payloads(xor[sel])
-    row_of = elem[sel]
-    m = bits.shape[0]
-
-    bits_per_row = np.bincount(row_of, weights=bits, minlength=R).astype(np.int64)
-    pad = (-bits_per_row) % 8
-    cnt = np.maximum(lengths - 1, 0)
-    starts_nf = np.cumsum(cnt) - cnt
-    # interleave: row r's tokens at starts_nf[r]+r .., then its pad element
-    full_n = m + R
-    hi_f = np.zeros(full_n, dtype=_U64)
-    lo_f = np.zeros(full_n, dtype=_U64)
-    len_f = np.zeros(full_n, dtype=np.int64)
-    idx_nf = np.arange(m) + row_of
-    hi_f[idx_nf] = hi
-    lo_f[idx_nf] = lo
-    len_f[idx_nf] = bits
-    idx_pad = starts_nf + cnt + np.arange(R)
-    len_f[idx_pad] = pad
-
-    buf = _pack_varbits(hi_f, lo_f, len_f)
-    nbytes = (bits_per_row + pad) // 8
-    offs = np.cumsum(nbytes) - nbytes
-    mv = memoryview(buf)
-    return [
-        headers[r] + bytes(mv[offs[r] : offs[r] + nbytes[r]]) for r in range(R)
-    ]
-
-
 def _pack_varbits_rows(
     hi: np.ndarray,
     lo: np.ndarray,
@@ -536,95 +420,6 @@ def _pack_varbits_rows(
     nbytes = (bits_per_row + pad) // 8
     offs = np.cumsum(nbytes) - nbytes
     return buf, offs, nbytes
-
-
-def encode_values_batch_columnar(values_list: list[np.ndarray]) -> list[bytes]:
-    """Batch columnar-codec encode (see :func:`encode_values_columnar`):
-    MANY rows in one vectorized pass — bitmap/window/meaningful sections
-    for the whole batch are packed once each with per-row byte alignment,
-    then sliced. Byte-identical to the single-row encoder (tested)."""
-    R = len(values_list)
-    if R == 0:
-        return []
-    arrs = [np.asarray(v, dtype=np.int64) for v in values_list]
-    lengths = np.fromiter((a.shape[0] for a in arrs), dtype=np.int64, count=R)
-    headers = []
-    for a, n in zip(arrs, lengths):
-        h = struct.pack("<I", int(n))
-        if n:
-            h += struct.pack("<Q", int(a[0].view(_U64)))
-        headers.append(h)
-    if (lengths <= 1).all():
-        return headers
-
-    flat = np.concatenate(arrs).view(_U64)
-    total = flat.shape[0]
-    starts = np.cumsum(lengths) - lengths
-    elem = np.repeat(np.arange(R), lengths)
-    prev = np.empty_like(flat)
-    prev[1:] = flat[:-1]
-    prev[0] = 0
-    xor = flat ^ prev
-    first = np.zeros(total, dtype=bool)
-    first[starts[lengths > 0]] = True
-    sel = ~first
-    xor_nf = xor[sel]
-    row_nf = elem[sel]  # row of each xor token (ordered by row)
-    nonzero = xor_nf != 0
-
-    # section A: 1-bit control per token, row-aligned
-    buf_a, offs_a, len_a = _pack_varbits_rows(
-        np.zeros(xor_nf.shape[0], dtype=_U64),
-        nonzero.astype(_U64),
-        np.ones(xor_nf.shape[0], dtype=np.int64),
-        row_nf,
-        R,
-    )
-    # sections B + C over nonzero tokens only
-    nzi = np.flatnonzero(nonzero)
-    nz = xor_nf[nzi]
-    row_nz = row_nf[nzi]
-    m_per_row = np.bincount(row_nz, minlength=R).astype(np.int64)
-    if nz.size:
-        lead = _clz64(nz)
-        trail = _ctz64(nz)
-        mlen = np.maximum(64 - lead - trail, 1)
-        window = (lead.astype(_U64) << _U64(6)) | (mlen.astype(_U64) - _U64(1))
-        buf_b, offs_b, len_b = _pack_varbits_rows(
-            np.zeros(nz.size, dtype=_U64),
-            window,
-            np.full(nz.size, 12, dtype=np.int64),
-            row_nz,
-            R,
-        )
-        meaningful = nz >> trail.astype(_U64)
-        buf_c, offs_c, len_c = _pack_varbits_rows(
-            np.zeros(nz.size, dtype=_U64), meaningful, mlen, row_nz, R
-        )
-    else:
-        buf_b = buf_c = b""
-        offs_b = offs_c = np.zeros(R, dtype=np.int64)
-        len_b = len_c = np.zeros(R, dtype=np.int64)
-
-    mv_a, mv_b, mv_c = memoryview(buf_a), memoryview(buf_b), memoryview(buf_c)
-    out = []
-    for r in range(R):
-        if lengths[r] <= 1:
-            out.append(headers[r])
-            continue
-        row = (
-            headers[r]
-            + struct.pack("<I", int(m_per_row[r]))
-            + bytes(mv_a[offs_a[r] : offs_a[r] + len_a[r]])
-        )
-        if m_per_row[r]:  # all-constant rows carry no B/C sections
-            row += (
-                struct.pack("<I", int(len_b[r]))
-                + bytes(mv_b[offs_b[r] : offs_b[r] + len_b[r]])
-                + bytes(mv_c[offs_c[r] : offs_c[r] + len_c[r]])
-            )
-        out.append(row)
-    return out
 
 
 def encode_values_batch_blocked(values_list: list[np.ndarray]) -> list[bytes]:
@@ -725,58 +520,6 @@ def encode_values_batch_blocked(values_list: list[np.ndarray]) -> list[bytes]:
     return out
 
 
-def encode_values_columnar(v: np.ndarray) -> bytes:
-    """Columnar layout of the same Gorilla XOR math: instead of the
-    paper's interleaved token stream ('1' + window + meaningful per
-    value), the three field kinds are packed into separate sections:
-
-        header:  n (u32 LE) + v0 (u64 LE)
-        A: control bitmap, 1 bit per xor token (1 = nonzero)
-        B: fixed 12-bit (lead:6, mlen-1:6) windows for nonzero tokens
-        C: meaningful bits, variable length
-
-    Identical information, ~same size; the win is DECODE: every section
-    is fixed-width or offset-computable, so decoding is pure vectorized
-    numpy (see :func:`decode_values_columnar`) instead of the inherently
-    sequential bit-walk the interleaved layout forces. This is the chunk
-    table's default codec; the paper-faithful interleaved codec stays
-    available as encode_values/decode_values.
-    """
-    v = np.asarray(v)
-    if v.dtype != _U64:
-        v = v.astype(np.int64).view(_U64)
-    n = v.shape[0]
-    header = struct.pack("<I", n)
-    if n == 0:
-        return header
-    header += struct.pack("<Q", int(v[0]))
-    if n == 1:
-        return header
-    xor = v[1:] ^ v[:-1]
-    nonzero = xor != 0
-    bitmap = np.packbits(nonzero.astype(np.uint8)).tobytes()
-    nz = xor[nonzero]
-    if nz.size == 0:
-        return header + struct.pack("<I", 0) + bitmap
-    lead = _clz64(nz)
-    trail = _ctz64(nz)
-    mlen = np.maximum(64 - lead - trail, 1)
-    window = (lead.astype(_U64) << _U64(6)) | (mlen.astype(_U64) - _U64(1))
-    sec_b = _pack_varbits(
-        np.zeros(nz.size, dtype=_U64), window, np.full(nz.size, 12, dtype=np.int64)
-    )
-    meaningful = nz >> trail.astype(_U64)
-    sec_c = _pack_varbits(np.zeros(nz.size, dtype=_U64), meaningful, mlen)
-    return (
-        header
-        + struct.pack("<I", nz.size)
-        + bitmap
-        + struct.pack("<I", len(sec_b))
-        + sec_b
-        + sec_c
-    )
-
-
 BLOCK_K = 8  # nonzero tokens per shared-window block ('xor-blocked')
 
 
@@ -793,9 +536,10 @@ def _block_envelopes(
 
 
 def encode_values_blocked(v: np.ndarray) -> bytes:
-    """Blocked-window variant of :func:`encode_values_columnar` — the
-    engine's answer to the paper's '10' window-reuse branch (Pelkonen
-    §4.1.2), measured in scripts/experiment_window_reuse.py:
+    """Blocked-window layout of the Gorilla XOR tokens — the chunk
+    table's value codec and the engine's answer to the paper's '10'
+    window-reuse branch (Pelkonen §4.1.2), measured in
+    scripts/experiment_window_reuse.py:
 
     The paper's rule reuses the window of the most recent explicit-window
     token — an inherently SEQUENTIAL encoder decision (and pathological
@@ -917,47 +661,6 @@ def _extract_varbits(buf: bytes, offsets: np.ndarray, lengths: np.ndarray) -> np
     lm1 = lengths.view(_U64) - _U64(1)
     mask = (((_U64(1) << lm1) - _U64(1)) << _U64(1)) | _U64(1)
     return val & mask
-
-
-def decode_values_columnar(buf: bytes) -> np.ndarray:
-    """Fully vectorized inverse of :func:`encode_values_columnar`."""
-    (n,) = struct.unpack_from("<I", buf, 0)
-    if n == 0:
-        return np.empty(0, dtype=_U64)
-    (v0,) = struct.unpack_from("<Q", buf, 4)
-    if n == 1:
-        return np.array([v0], dtype=_U64)
-    (m,) = struct.unpack_from("<I", buf, 12)
-    pos = 16
-    bitmap_len = (n - 1 + 7) // 8
-    nonzero = np.unpackbits(
-        np.frombuffer(buf, dtype=np.uint8, count=bitmap_len, offset=pos)
-    )[: n - 1].astype(bool)
-    pos += bitmap_len
-    xors = np.zeros(n - 1, dtype=_U64)
-    if m:
-        (b_len,) = struct.unpack_from("<I", buf, pos)
-        pos += 4
-        sec_b = buf[pos : pos + b_len]
-        pos += b_len
-        win = _extract_varbits(
-            sec_b,
-            np.arange(m, dtype=np.int64) * 12,
-            np.full(m, 12, dtype=np.int64),
-        )
-        lead = (win >> _U64(6)).astype(np.int64)
-        mlen = (win & _MASK6).astype(np.int64) + 1
-        trail = 64 - lead - mlen
-        offs = np.cumsum(mlen) - mlen
-        meaningful = _extract_varbits(buf[pos:], offs, mlen)
-        xors[nonzero] = meaningful << trail.astype(_U64)
-    # prefix-XOR reconstruction, seeded with v0 — one vectorized scan
-    out = np.empty(n, dtype=_U64)
-    out[0] = v0
-    np.bitwise_xor.accumulate(
-        np.concatenate([np.array([v0], dtype=_U64), xors]), out=out
-    )
-    return out
 
 
 def decode_values_batch_blocked(buffers: list[bytes]) -> list[np.ndarray]:

@@ -18,10 +18,8 @@ from __future__ import annotations
 
 import time
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -34,10 +32,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from light_curve_spark.kernels.compression import (
-    decode_timestamps,
-    decode_values,
-)
+from light_curve_spark.kernels.compression import decode_timestamps
+
+# the chunk table's one value codec: block-envelope XOR windows (see
+# kernels.compression.encode_values_blocked), vectorized both ways
+CHUNK_CODEC = "xor-blocked"
 
 CHUNK_SCHEMA = StructType(
     [
@@ -49,10 +48,8 @@ CHUNK_SCHEMA = StructType(
         StructField("ts_dod", BinaryType(), False),
         StructField("vals_gorilla", BinaryType(), False),
         StructField("checksum", LongType(), False),
-        # self-describing value codec: 'xor-blocked' (default; block-
-        # envelope windows, ~30% smaller on token data, vectorized both
-        # ways), 'xor-columnar' (per-token windows), or 'xor-interleaved'
-        # (paper-faithful layout)
+        # self-describing value codec: always CHUNK_CODEC; decode_chunks
+        # rejects any other value
         StructField("codec", StringType(), False),
     ]
 )
@@ -102,7 +99,6 @@ def encode_chunks(
     seq: DataFrame,
     max_len: int = 4096,
     with_lineage: bool = False,
-    codec: str = "xor-blocked",
 ) -> DataFrame:
     """sequences -> chunk table. t_i is the global token position, so a
     chunk of a split outlier starts at chunk_no * max_len.
@@ -113,8 +109,6 @@ def encode_chunks(
     measured inside the same kernel pass — the pipeline aggregates them
     into the metrics table without a second scan.
     """
-    if codec not in ("xor-columnar", "xor-interleaved", "xor-blocked"):
-        raise ValueError(f"unknown codec {codec!r}")
     if "chunk_no" not in seq.columns:
         seq = chunk_outliers(seq, max_len=max_len)
     cols = [
@@ -135,16 +129,8 @@ def encode_chunks(
 
         from light_curve_spark.kernels.compression import (
             encode_timestamps_regular,
-            encode_values_batch,
             encode_values_batch_blocked,
-            encode_values_batch_columnar,
         )
-
-        batch_encoder = {
-            "xor-columnar": encode_values_batch_columnar,
-            "xor-blocked": encode_values_batch_blocked,
-            "xor-interleaved": encode_values_batch,
-        }[codec]
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
@@ -161,7 +147,7 @@ def encode_chunks(
             toks_list = [
                 flat[s : s + ln] for s, ln in zip(starts, lengths)
             ]
-            vals = batch_encoder(toks_list)  # one vectorized pass
+            vals = encode_values_batch_blocked(toks_list)  # one vectorized pass
             chunk_nos = b.column(b.schema.get_field_index("chunk_no")).to_numpy()
             t0s = chunk_nos.astype(np.int64) * max_len
             ts_bufs, crcs = [], np.empty(nrows, dtype=np.int64)
@@ -182,7 +168,7 @@ def encode_chunks(
                 pa.array(ts_bufs, type=pa.binary()),
                 pa.array(vals, type=pa.binary()),
                 pa.array(crcs),
-                pa.array([codec] * nrows),
+                pa.array([CHUNK_CODEC] * nrows),
             ]
             names = list(cols)
             if with_lineage:
@@ -209,9 +195,17 @@ def encode_chunks(
     )
 
 
+def _cell(batch, name: str, i: int):
+    """One value of an Arrow record batch, for error messages."""
+    return batch.column(batch.schema.get_field_index(name))[i].as_py()
+
+
 def decode_chunks(chunks: DataFrame) -> DataFrame:
     """chunk table -> (doc_id, chunk_no, t, tokens); the round-trip
-    half of the per-row invariant.
+    half of the per-row invariant. Every row's crc32 over the decoded
+    (t, tokens) is checked against its stored ``checksum``, so a corrupt
+    buffer raises ``ValueError`` instead of decoding to wrong tokens; a
+    ``codec`` other than ``CHUNK_CODEC`` raises too.
 
     ``mapInArrow`` + direct ``ListArray.from_arrays`` construction: the
     decoded arrays go flat-buffer -> Arrow with NO per-row Python
@@ -223,39 +217,44 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
 
         from light_curve_spark.kernels.compression import (
             decode_values_batch_blocked,
-            decode_values_blocked,
-            decode_values_columnar,
         )
 
-        decoders = {
-            "xor-columnar": decode_values_columnar,
-            "xor-blocked": decode_values_blocked,
-            "xor-interleaved": decode_values,
-        }
         for b in batches:
             if b.num_rows == 0:
                 continue
+            codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
+            for i, c in enumerate(codecs):
+                if c != CHUNK_CODEC:
+                    raise ValueError(
+                        f"chunk of doc_id {_cell(b, 'doc_id', i)!r} has "
+                        f"unknown codec {c!r}; only {CHUNK_CODEC!r} decodes"
+                    )
             # timestamps: the regular-axis fast path inside
             # decode_timestamps makes this loop ~free
             ts = [
                 decode_timestamps(v)
                 for v in b.column(b.schema.get_field_index("ts_dod")).to_pylist()
             ]
-            bufs = b.column(b.schema.get_field_index("vals_gorilla")).to_pylist()
-            codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-            toks: list = [None] * len(bufs)
-            # default codec decodes as ONE vectorized batch (4x over the
-            # per-chunk loop — numpy dispatch dominated); other codecs
-            # (legacy chunks are self-describing) fall back per row
-            blocked = [i for i, c in enumerate(codecs) if c == "xor-blocked"]
-            if blocked:
-                for i, d in zip(
-                    blocked, decode_values_batch_blocked([bufs[i] for i in blocked])
-                ):
-                    toks[i] = d
-            for i, c in enumerate(codecs):
-                if toks[i] is None:
-                    toks[i] = decoders[c](bufs[i])
+            # ONE vectorized batch decode (4x over a per-chunk loop —
+            # numpy dispatch dominated)
+            toks = decode_values_batch_blocked(
+                b.column(b.schema.get_field_index("vals_gorilla")).to_pylist()
+            )
+            # same byte order as the encoder: crc32 over little-endian
+            # int64 t, continued over the int64 token bytes
+            crcs = b.column(b.schema.get_field_index("checksum")).to_numpy()
+            for i, (t, v) in enumerate(zip(ts, toks)):
+                crc = zlib.crc32(
+                    v.astype("<u8", copy=False),
+                    zlib.crc32(t.astype("<i8", copy=False)),
+                )
+                if crc != crcs[i]:
+                    raise ValueError(
+                        f"chunk checksum mismatch for doc_id "
+                        f"{_cell(b, 'doc_id', i)!r} chunk_no "
+                        f"{_cell(b, 'chunk_no', i)}: stored {crcs[i]}, "
+                        f"decoded {crc}"
+                    )
 
             t_cum = np.cumsum(
                 np.fromiter((a.shape[0] for a in ts), dtype=np.int64, count=len(ts))

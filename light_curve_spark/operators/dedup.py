@@ -41,7 +41,6 @@ inverted-index pruning, and it bounds the join fan-out at 100 TB).
 
 from __future__ import annotations
 
-import re
 import threading
 
 import numpy as np
@@ -567,23 +566,22 @@ def _content_batch_id(docs: DataFrame, text_col: str) -> str:
     return f"n{row['n']}-s{s:016x}"
 
 
-_PRE_R5_BATCH_ID = r"^n\d+-x[0-9a-f]{16}$"
-
-
-def _manifest_batch_ids(storage, table: str) -> set[str] | None:
+def _manifest_batch_ids(storage, table: str) -> set[str]:
     """Batch ids recorded in the table's snapshot manifest metas
-    (``batch_id`` per append, ``batch_ids`` on a compacted snapshot), or
-    ``None`` when the backend has no meta support or any snapshot lacks
-    a stamp — callers then fall back to scanning the data. Turns the
-    per-delivery idempotency/era probes from full-index Spark jobs into
-    an O(#snapshots) manifest read (round-5 ADVICE: the probe cost grew
-    with index size on every arriving batch)."""
-    metas_fn = getattr(storage, "snapshot_metas", None)
-    if metas_fn is None:
-        return None
-    metas = metas_fn(table)
+    (``batch_id`` per append, ``batch_ids`` on a compacted snapshot) —
+    the one idempotency probe, an O(#snapshots) manifest read instead of
+    a full-index Spark job per delivery (round-5 ADVICE: the probe cost
+    grew with index size on every arriving batch). Every append this
+    library makes to a probed table is stamped, so a snapshot without a
+    stamp means the table was written out of band: raise rather than
+    guess which batches it holds."""
+    metas = storage.snapshot_metas(table)
     if metas is None:
-        return None
+        raise ValueError(
+            f"table {table!r} has a snapshot without a batch stamp in its "
+            "manifest; its folded batches cannot be probed — rebuild it "
+            "from the corpus"
+        )
     ids: set[str] = set()
     for m in metas:
         if m.get("batch_id"):
@@ -597,13 +595,10 @@ def _check_index_config(storage, table: str, config: dict) -> None:
     config disagrees with the caller's arguments. Stored bucket keys are
     a pure function of the config, so a mismatched call would silently
     join incompatible keys and miss duplicates forever (round-5 ADVICE
-    on the embedding index — same failure mode as the MinHash era
-    guard). Legacy tables without metas are unvalidatable and pass."""
-    metas_fn = getattr(storage, "snapshot_metas", None)
-    metas = metas_fn(table) if metas_fn else None
-    if not metas:
-        return
-    stored = {k: metas[0][k] for k in config if k in metas[0]}
+    on the embedding index). Call after :func:`_manifest_batch_ids`,
+    which refuses unstamped tables."""
+    first = storage.snapshot_metas(table)[0]
+    stored = {k: first[k] for k in config if k in first}
     bad = {k: (stored[k], config[k]) for k in stored if stored[k] != config[k]}
     if bad:
         detail = ", ".join(
@@ -614,26 +609,6 @@ def _check_index_config(storage, table: str, config: dict) -> None:
             f"({detail}); its stored bucket keys are incompatible with "
             "this call — use matching parameters or rebuild the index"
         )
-
-
-def _era_guard_scan(storage, idx: DataFrame, index_table: str) -> None:
-    """Legacy-table era probe (no manifest metas): one full-index rlike
-    scan, cached per (storage, table) so a clean verdict is paid once
-    per process, not once per arriving batch (round-5 ADVICE)."""
-    checked = storage.__dict__.setdefault("_era_checked_tables", set())
-    if index_table in checked:
-        return
-    stale = (
-        idx.filter(F.col("batch_id").rlike(_PRE_R5_BATCH_ID)).limit(1).count() > 0
-    )
-    if stale:
-        raise ValueError(
-            f"index table {index_table!r} contains batch ids from "
-            "a pre-round-5 hash-family spec (xor ids / int32 "
-            "MinHash salt); its band hashes are incompatible "
-            "with this build — rebuild the index from the corpus"
-        )
-    checked.add(index_table)
 
 
 def _band_pb(band_id: F.Column, band_hash: F.Column, partitions: int) -> F.Column:
@@ -677,19 +652,21 @@ def incremental_minhash_pairs(
     bands against the stored ``{prefix}_index`` table (only collided
     buckets are touched), (c) band-joins within itself, (d) verifies
     with exact gram Jaccard (old gram sets are fetched from the index
-    for matched docs only), and (e) appends one index row per doc —
-    ``(batch_id, doc_id, grams, bands)`` — as a SINGLE snapshot.
+    for matched docs only), and (e) appends its band rows and gram rows
+    (layout below) as a SINGLE snapshot.
 
     Atomicity + idempotency (round-3 ADVICE): the index is ONE table, so
     a batch commit is one atomic snapshot append (Iceberg snapshot /
     parquet manifest rename) — there is no cross-table partial state to
     crash into. Each row carries a ``batch_id`` (content-derived via
-    :func:`_content_batch_id` unless the caller supplies one); when the
-    incoming batch's id is already present in the index the append is
-    SKIPPED, so re-running a batch is a no-op for the index. The re-run
-    still returns the batch's pairs (recomputed against the index minus
-    its own rows — a superset of the original delivery if later batches
-    have landed since).
+    :func:`_content_batch_id` unless the caller supplies one), and each
+    append stamps that id and the hash-family config into the snapshot
+    manifest. When the incoming batch's id is already among the stamps
+    the append is SKIPPED, so re-running a batch is a no-op for the
+    index. The re-run still returns the batch's pairs (recomputed
+    against the index minus its own rows — a superset of the original
+    delivery if later batches have landed since). An index with an
+    unstamped snapshot raises ``ValueError``.
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b. The union of
     the returned pairs over any batch split equals the one-shot
@@ -697,8 +674,8 @@ def incremental_minhash_pairs(
     tested) — incremental processing changes the SCHEDULE, not the
     result.
 
-    Index layout (round 6): new indexes are written BANDED-PARTITIONED —
-    still ONE ``{prefix}_index`` table with one atomic snapshot per
+    Index layout (round 6): the index is BANDED-PARTITIONED — still
+    ONE ``{prefix}_index`` table with one atomic snapshot per
     batch, but rows are exploded to (band row | gram row) granularity
     and hive-partitioned on ``_pb``: band rows land in directory
     ``pmod(hash(band_key), P)`` and gram rows in ``P + pmod(hash(doc),
@@ -707,9 +684,7 @@ def incremental_minhash_pairs(
     partitions of matched docs (PartitionFilters, plan-asserted in
     tests) — per-delivery wall stops scaling with total index size
     (round-5 verdict item 2; the IVF layout at similarity.py:620 proved
-    the pattern). Pre-round-6 indexes (``bands`` array column) keep the
-    full-scan join path for read compatibility; compaction rewrites
-    them into the partitioned layout.
+    the pattern).
 
     Deletes: ids appended to ``{prefix}_tombstones``
     (:func:`tombstone_minhash` on a standalone index,
@@ -761,87 +736,42 @@ def incremental_minhash_pairs(
         )
         old = None  # (old_bands, old_grams) exploded form, or None
         already_folded = False
-        legacy_layout = False
         if storage.exists(index_table):
-            idx = storage.read(index_table)
-            legacy_layout = "bands" in idx.columns
-            # era guard (round-5 review): round 5 changed BOTH the
-            # batch-id derivation (xor 'n..-x..' -> sum 'n..-s..') and
-            # the MinHash salt type (int32 -> int64 hash family). An
-            # index written under the old spec would silently break in
-            # two ways — re-submitted batches never match their stored
-            # id (duplicate index rows), and new band hashes never
-            # collide with stored ones (missed duplicates forever).
-            # Refuse to mix eras instead. Only the old CONTENT-DERIVED
-            # id format is flagged — caller-supplied ids pass through.
             known = _manifest_batch_ids(storage, index_table)
-            if known is not None:
-                if any(re.match(_PRE_R5_BATCH_ID, b) for b in known):
-                    raise ValueError(
-                        f"index table {index_table!r} contains batch ids "
-                        "from a pre-round-5 hash-family spec (xor ids / "
-                        "int32 MinHash salt); its band hashes are "
-                        "incompatible with this build — rebuild the index"
-                    )
-                _check_index_config(storage, index_table, config)
-                already_folded = batch_id in known
-                have_old = bool(known - {batch_id})
-            else:
-                # legacy manifest (no metas): scan probes, era verdict
-                # cached per storage/table
-                _era_guard_scan(storage, idx, index_table)
-                already_folded = (
-                    idx.filter(F.col("batch_id") == batch_id).limit(1).count() > 0
-                )
-                have_old = (
-                    idx.filter(F.col("batch_id") != batch_id).limit(1).count() > 0
-                    if already_folded
-                    else True
-                )
-            if have_old:
+            _check_index_config(storage, index_table, config)
+            already_folded = batch_id in known
+            if known - {batch_id}:
+                idx = storage.read(index_table)
                 stored = (
                     idx.filter(F.col("batch_id") != batch_id)
                     if already_folded
                     else idx
                 )
                 if tombs is not None:
-                    # read-time delete on the stored side — AFTER the
-                    # idempotency probes above (a fully-tombstoned
-                    # batch must still read as folded, or a legacy
-                    # data-scan probe would re-append its rows);
-                    # physical erasure happens at compact_stream_state
+                    # read-time delete on the stored side; physical
+                    # erasure happens at compact_stream_state
                     stored = stored.join(
                         F.broadcast(tombs), "doc_id", "left_anti"
                     )
-                if legacy_layout:
-                    # pre-round-6 row-per-doc layout: explode stored
-                    # bands back to join keys map-side (full scan)
-                    old = (
-                        stored.select("doc_id", F.explode("bands").alias("band"))
-                        .select("doc_id", "band.band_id", "band.band_hash"),
-                        stored.select("doc_id", "grams"),
+                # restrict the scan to the partitions this batch's band
+                # keys occupy. The pb set is at most ``index_partitions``
+                # small ints — a bounded driver collect that buys
+                # directory-level pruning on the stored side of the join.
+                pbs = [
+                    r[0]
+                    for r in banded.select(
+                        _band_pb(
+                            F.col("band_id"), F.col("band_hash"),
+                            index_partitions,
+                        ).alias("pb")
                     )
-                else:
-                    # banded-partitioned layout: restrict the scan to the
-                    # partitions this batch's band keys occupy. The pb
-                    # set is at most ``index_partitions`` small ints — a
-                    # bounded driver collect that buys directory-level
-                    # pruning on the stored side of the join.
-                    pbs = [
-                        r[0]
-                        for r in banded.select(
-                            _band_pb(
-                                F.col("band_id"), F.col("band_hash"),
-                                index_partitions,
-                            ).alias("pb")
-                        )
-                        .distinct()
-                        .collect()
-                    ]
-                    old_bands = stored.filter(F.col("_pb").isin(pbs)).select(
-                        "doc_id", "band_id", "band_hash"
-                    )
-                    old = (old_bands, stored)  # gram side pruned below
+                    .distinct()
+                    .collect()
+                ]
+                old_bands = stored.filter(F.col("_pb").isin(pbs)).select(
+                    "doc_id", "band_id", "band_hash"
+                )
+                old = (old_bands, stored)  # gram side pruned below
 
         a = banded.alias("a")
         b = banded.alias("b")
@@ -868,24 +798,21 @@ def incremental_minhash_pairs(
                 .filter(F.col("doc_a") != F.col("doc_b"))
             )
             cand = keep_cached(cached(new_new.unionByName(cross).distinct()))
-            if legacy_layout:
-                old_grams = old_store
-            else:
-                # gram fetch pruned to the partitions of MATCHED docs:
-                # cand is cached (verification reuses it), so this tiny
-                # agg costs one pass over the already-materialized pairs
-                gpbs = [
-                    r[0]
-                    for r in cand.select(
-                        F.explode(F.array("doc_a", "doc_b")).alias("d")
-                    )
-                    .select(_gram_pb(F.col("d"), index_partitions).alias("pb"))
-                    .distinct()
-                    .collect()
-                ]
-                old_grams = old_store.filter(F.col("_pb").isin(gpbs)).filter(
-                    F.col("grams").isNotNull()
-                ).select("doc_id", "grams")
+            # gram fetch pruned to the partitions of MATCHED docs: cand
+            # is cached (verification reuses it), so this tiny agg costs
+            # one pass over the already-materialized pairs
+            gpbs = [
+                r[0]
+                for r in cand.select(
+                    F.explode(F.array("doc_a", "doc_b")).alias("d")
+                )
+                .select(_gram_pb(F.col("d"), index_partitions).alias("pb"))
+                .distinct()
+                .collect()
+            ]
+            old_grams = old_store.filter(F.col("_pb").isin(gpbs)).filter(
+                F.col("grams").isNotNull()
+            ).select("doc_id", "grams")
             grams = with_sig.select("doc_id", "grams").unionByName(old_grams)
         else:
             cand = new_new.distinct()
@@ -897,52 +824,39 @@ def incremental_minhash_pairs(
         pairs.count()
         if not already_folded:
             rows_per_band = num_hashes // bands
-            if legacy_layout:
-                # appends to a pre-round-6 index keep its layout — mixing
-                # row shapes in one table would corrupt both join paths
-                index_rows = with_sig.select(
+            band_rows = (
+                with_sig.select(
+                    "doc_id",
+                    F.explode(
+                        _band_array(F.col("sig"), bands, rows_per_band)
+                    ).alias("band"),
+                )
+                .select(
                     F.lit(batch_id).alias("batch_id"),
                     "doc_id",
-                    "grams",
-                    _band_array(F.col("sig"), bands, rows_per_band).alias("bands"),
+                    F.col("band.band_id").alias("band_id"),
+                    F.col("band.band_hash").alias("band_hash"),
+                    F.lit(None).cast("array<bigint>").alias("grams"),
+                    _band_pb(
+                        F.col("band.band_id"), F.col("band.band_hash"),
+                        index_partitions,
+                    ).alias("_pb"),
                 )
-                storage.append(
-                    index_rows, index_table, meta={"batch_id": batch_id, **config}
-                )
-            else:
-                band_rows = (
-                    with_sig.select(
-                        "doc_id",
-                        F.explode(
-                            _band_array(F.col("sig"), bands, rows_per_band)
-                        ).alias("band"),
-                    )
-                    .select(
-                        F.lit(batch_id).alias("batch_id"),
-                        "doc_id",
-                        F.col("band.band_id").alias("band_id"),
-                        F.col("band.band_hash").alias("band_hash"),
-                        F.lit(None).cast("array<bigint>").alias("grams"),
-                        _band_pb(
-                            F.col("band.band_id"), F.col("band.band_hash"),
-                            index_partitions,
-                        ).alias("_pb"),
-                    )
-                )
-                gram_rows = with_sig.select(
-                    F.lit(batch_id).alias("batch_id"),
-                    "doc_id",
-                    F.lit(None).cast("int").alias("band_id"),
-                    F.lit(None).cast("bigint").alias("band_hash"),
-                    "grams",
-                    _gram_pb(F.col("doc_id"), index_partitions).alias("_pb"),
-                )
-                storage.append(
-                    band_rows.unionByName(gram_rows),
-                    index_table,
-                    partition_by=["_pb"],
-                    meta={"batch_id": batch_id, **config},
-                )
+            )
+            gram_rows = with_sig.select(
+                F.lit(batch_id).alias("batch_id"),
+                "doc_id",
+                F.lit(None).cast("int").alias("band_id"),
+                F.lit(None).cast("bigint").alias("band_hash"),
+                "grams",
+                _gram_pb(F.col("doc_id"), index_partitions).alias("_pb"),
+            )
+            storage.append(
+                band_rows.unionByName(gram_rows),
+                index_table,
+                partition_by=["_pb"],
+                meta={"batch_id": batch_id, **config},
+            )
     return pairs
 
 

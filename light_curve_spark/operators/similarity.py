@@ -372,24 +372,24 @@ def incremental_embedding_pairs(
 
     Same idempotency contract as the MinHash index: one atomic append
     per batch of ``(batch_id, id, vec, norm, tbl, bucket)`` rows, with a
-    content-derived ``batch_id`` (xxhash64 folds the float array) making
-    a re-submitted batch an index no-op. ``n_tables`` is the same
-    OR-amplification as :func:`embedding_cosine_pairs_lsh` — the index
-    stores one row per (vector, table) with that table's bucket (same
-    ``lsh_bucket_expr`` derivation as the join-key form so the stored
-    and probe forms cannot drift) and a pair is a candidate on ANY
-    table's collision. Returns (id_a, id_b, cosine) with id_a < id_b.
+    content-derived ``batch_id`` (xxhash64 folds the float array)
+    stamped into the snapshot manifest, making a re-submitted batch an
+    index no-op; an index with an unstamped snapshot raises
+    ``ValueError``. ``n_tables`` is the same OR-amplification as
+    :func:`embedding_cosine_pairs_lsh` — the index stores one row per
+    (vector, table) with that table's bucket (same ``lsh_bucket_expr``
+    derivation as the join-key form so the stored and probe forms
+    cannot drift) and a pair is a candidate on ANY table's collision.
+    Returns (id_a, id_b, cosine) with id_a < id_b.
 
     Index layout (round 6): hive-partitioned on ``_pb = pmod(hash(tbl,
     bucket), index_partitions)`` — a delivery equi-joins only the
     partitions its own buckets occupy (PartitionFilters), so the
     per-delivery join cost follows the batch's bucket footprint, not
-    the total index size. Pre-round-6 indexes (``_buckets`` array
-    column) keep the full-scan path for read compatibility. The plane
-    config (n_planes/seed/n_tables/dim) is stamped into every snapshot's
-    manifest meta and validated on each call — a call with different
-    planes would silently bucket into an incompatible key space and
-    miss duplicates forever (round-5 ADVICE).
+    the total index size. The plane config (n_planes/seed/n_tables/dim)
+    is stamped into every snapshot's manifest meta and validated on each
+    call — a call with different planes would silently bucket into an
+    incompatible key space and miss duplicates forever (round-5 ADVICE).
 
     Deletes: ids appended to ``{prefix}_tombstones`` (see
     :func:`tombstone_vectors`) are excluded from BOTH join sides from
@@ -458,26 +458,13 @@ def incremental_embedding_pairs(
             )
         )
         old = None
-        legacy_layout = False
         already_folded = False
         if storage.exists(index_table):
-            idx = storage.read(index_table)
-            legacy_layout = "_buckets" in idx.columns
             known = _manifest_batch_ids(storage, index_table)
-            if known is not None:
-                _check_index_config(storage, index_table, config)
-                already_folded = batch_id in known
-                have_old = bool(known - {batch_id})
-            else:
-                already_folded = (
-                    idx.filter(F.col("batch_id") == batch_id).limit(1).count() > 0
-                )
-                have_old = (
-                    idx.filter(F.col("batch_id") != batch_id).limit(1).count() > 0
-                    if already_folded
-                    else True
-                )
-            if have_old:
+            _check_index_config(storage, index_table, config)
+            already_folded = batch_id in known
+            if known - {batch_id}:
+                idx = storage.read(index_table)
                 old = (
                     idx.filter(F.col("batch_id") != batch_id)
                     if already_folded
@@ -515,28 +502,22 @@ def incremental_embedding_pairs(
         )
         cand = within
         if old is not None:
-            if legacy_layout:
-                o = old.select(
-                    "_id", "_v", "_n",
-                    F.posexplode("_buckets").alias("_tbl", "_bucket"),
-                ).alias("o")
-            else:
-                # prune the stored scan to the partitions this batch's
-                # buckets occupy — at most index_partitions small ints,
-                # a bounded driver collect over the cached batch keys
-                pbs = [
-                    r[0]
-                    for r in keyed.select(
-                        _emb_pb(
-                            F.col("_tbl"), F.col("_bucket"), index_partitions
-                        ).alias("pb")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-                o = old.filter(F.col("_pb").isin(pbs)).select(
-                    "_id", "_v", "_n", "_tbl", "_bucket"
-                ).alias("o")
+            # prune the stored scan to the partitions this batch's
+            # buckets occupy — at most index_partitions small ints, a
+            # bounded driver collect over the cached batch keys
+            pbs = [
+                r[0]
+                for r in keyed.select(
+                    _emb_pb(
+                        F.col("_tbl"), F.col("_bucket"), index_partitions
+                    ).alias("pb")
+                )
+                .distinct()
+                .collect()
+            ]
+            o = old.filter(F.col("_pb").isin(pbs)).select(
+                "_id", "_v", "_n", "_tbl", "_bucket"
+            ).alias("o")
             nw = keyed.alias("n")
             cross = o.join(
                 nw,
@@ -557,33 +538,18 @@ def incremental_embedding_pairs(
         )
         pairs.count()  # materialize before releasing keyed / appending
         if not already_folded:
-            if legacy_layout:
-                # appends to a pre-round-6 index keep its row shape
-                bucketed = new_emb.select(
+            storage.append(
+                keyed.select(
                     F.lit(batch_id).alias("batch_id"),
-                    F.col(id_col).alias("_id"),
-                    _f64(vec_col).alias("_v"),
-                    _norm_expr(vec_col).alias("_n"),
-                    F.array(
-                        *[lsh_bucket_expr(vec_col, p) for p in all_planes]
-                    ).alias("_buckets"),
-                )
-                storage.append(
-                    bucketed, index_table, meta={"batch_id": batch_id, **config}
-                )
-            else:
-                storage.append(
-                    keyed.select(
-                        F.lit(batch_id).alias("batch_id"),
-                        "_id", "_v", "_n", "_tbl", "_bucket",
-                        _emb_pb(
-                            F.col("_tbl"), F.col("_bucket"), index_partitions
-                        ).alias("_pb"),
-                    ),
-                    index_table,
-                    partition_by=["_pb"],
-                    meta={"batch_id": batch_id, **config},
-                )
+                    "_id", "_v", "_n", "_tbl", "_bucket",
+                    _emb_pb(
+                        F.col("_tbl"), F.col("_bucket"), index_partitions
+                    ).alias("_pb"),
+                ),
+                index_table,
+                partition_by=["_pb"],
+                meta={"batch_id": batch_id, **config},
+            )
     return pairs
 
 

@@ -152,8 +152,8 @@ class ParquetSnapshotStorage:
         ``meta`` (round 6) attaches small JSON-able key/values to the
         snapshot manifest entry — the Iceberg snapshot-summary analogue.
         The incremental operators stamp each append with its content
-        batch id (and the index hash-family config), so idempotency /
-        era probes become an O(#snapshots) manifest read instead of a
+        batch id (and the index hash-family config), so idempotency
+        probes become an O(#snapshots) manifest read instead of a
         full-index Spark scan per delivery (round-5 ADVICE: the probe
         jobs grew with index size on every arriving batch)."""
         snap_id = uuid.uuid4().hex[:16]
@@ -188,10 +188,10 @@ class ParquetSnapshotStorage:
 
     def snapshot_metas(self, table: str) -> list[dict] | None:
         """The per-snapshot ``meta`` dicts in commit order, or ``None``
-        if ANY committed snapshot lacks one (legacy table — callers fall
-        back to scanning the data). All-or-nothing on purpose: a partial
-        meta list would let an idempotency probe miss a legacy batch and
-        double-fold it."""
+        if ANY committed snapshot lacks one (written out of band — the
+        batch-id probe then refuses the table). All-or-nothing on
+        purpose: a partial meta list would let an idempotency probe miss
+        an unstamped batch and double-fold it."""
         snaps = self.snapshots(table)
         metas = [s.get("meta") for s in snaps]
         if any(m is None for m in metas):

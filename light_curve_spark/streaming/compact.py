@@ -20,15 +20,13 @@ invariants the compaction must (and does — pytest-gated) preserve:
   the batch ids recorded per snapshot; the compacted snapshot carries
   the UNION of all folded batch ids in its manifest meta
   (``batch_ids``), so a crash-window re-delivery after compaction is
-  still a no-op. Legacy tables without metas recover the ids from the
-  ``batch_id`` column (one bounded distinct per table, paid once).
+  still a no-op. A table with an unstamped snapshot raises instead of
+  being compacted.
 - **Index layout and config survive.** Partitioned tables are rewritten
   with the same hive partition key (``_pb``), and the hash-family
   config stamped by the incremental operators is carried onto the
-  compacted snapshot, so the post-compaction config/era guards keep
-  working. A pre-round-6 row-per-doc MinHash index is MIGRATED to the
-  banded-partitioned layout here (the designated migration path — the
-  operators themselves never mix layouts within a table).
+  compacted snapshot, so the post-compaction config guards keep
+  working.
 - **Replace-on-write tables truncate, not merge.** ``_labels`` history
   is superseded by its latest snapshot by construction; compaction
   keeps exactly that snapshot.
@@ -47,69 +45,15 @@ from pyspark.sql import functions as F
 def _carry_config(storage, table: str) -> dict:
     """Config keys (everything except the batch stamps) of the table's
     first snapshot meta — carried verbatim onto the compacted snapshot
-    so the config/era guards keep validating after compaction."""
-    metas_fn = getattr(storage, "snapshot_metas", None)
-    metas = metas_fn(table) if metas_fn else None
-    if not metas:
-        return {}
+    so the config guards keep validating after compaction."""
     return {
         k: v
-        for k, v in metas[0].items()
+        for k, v in storage.snapshot_metas(table)[0].items()
         if k not in ("batch_id", "batch_ids", "compacted")
     }
 
 
-def _all_batch_ids(storage, table: str, df: DataFrame) -> list[str]:
-    from light_curve_spark.operators.dedup import _manifest_batch_ids
-
-    known = _manifest_batch_ids(storage, table)
-    if known is None and "batch_id" in df.columns:
-        # legacy (pre-meta) table: recover the ids from the data — one
-        # distinct over a low-cardinality column, paid once at compaction
-        known = {
-            r[0]
-            for r in df.select("batch_id").distinct().collect()
-            if r[0] is not None
-        }
-    return sorted(known or set())
-
-
-def _migrate_minhash_index(df: DataFrame, partitions: int) -> DataFrame:
-    """Pre-round-6 row-per-doc MinHash index -> banded-partitioned
-    layout (band rows keyed by band-hash, gram rows keyed by doc-hash;
-    see incremental_minhash_pairs). Same one-table/one-commit contract;
-    after migration every delivery's join prunes at the directory
-    level."""
-    from light_curve_spark.operators.dedup import _band_pb, _gram_pb
-
-    gram_type = df.schema["grams"].dataType.simpleString()
-    band_rows = (
-        df.select("batch_id", "doc_id", F.explode("bands").alias("band"))
-        .select(
-            "batch_id",
-            "doc_id",
-            F.col("band.band_id").alias("band_id"),
-            F.col("band.band_hash").alias("band_hash"),
-            F.lit(None).cast(gram_type).alias("grams"),
-            _band_pb(
-                F.col("band.band_id"), F.col("band.band_hash"), partitions
-            ).alias("_pb"),
-        )
-    )
-    gram_rows = df.select(
-        "batch_id",
-        "doc_id",
-        F.lit(None).cast("int").alias("band_id"),
-        F.lit(None).cast("bigint").alias("band_hash"),
-        "grams",
-        _gram_pb(F.col("doc_id"), partitions).alias("_pb"),
-    )
-    return band_rows.unionByName(gram_rows)
-
-
-def compact_stream_state(
-    storage, prefix: str = "dpx", index_partitions: int = 16
-) -> dict:
+def compact_stream_state(storage, prefix: str = "dpx") -> dict:
     """Compact every persisted table of a stream pipeline run (document
     pipeline or plain stream dedup) under ``prefix`` into one snapshot
     each. Safe to run between deliveries at any time; returns
@@ -128,6 +72,8 @@ def compact_stream_state(
     :func:`read_document_status` finds no tombstoned id in the forest
     and returns to the fast persisted-forest path; only the tombstone
     id list itself persists (audit metadata, not document content)."""
+    from light_curve_spark.operators.dedup import _manifest_batch_ids
+
     stats: dict[str, dict] = {}
 
     tomb_table = f"{prefix}_tombstones"
@@ -174,24 +120,9 @@ def compact_stream_state(
         if not storage.exists(table):
             continue
         n_snaps = len(storage.snapshots(table))
-        df = storage.read(table)
-        batch_ids = _all_batch_ids(storage, table, df)
+        batch_ids = sorted(_manifest_batch_ids(storage, table))
         config = _carry_config(storage, table)
-        if suffix == "_index" and "bands" in df.columns:
-            df = _migrate_minhash_index(df, index_partitions)
-            config.setdefault("index_partitions", index_partitions)
-        if suffix == "_attrs" and "digest" in df.columns and "_pb" not in df.columns:
-            # migrate a pre-round-6 attrs table to the digest-hash
-            # partitioned layout the per-delivery exact-dup join prunes
-            # on — the modulus is the fold's pinned constant, NOT
-            # index_partitions (a mismatched modulus would silently
-            # unprune or, worse, mis-prune future deliveries)
-            from light_curve_spark.streaming.documents import ATTRS_PARTITIONS
-
-            df = df.withColumn(
-                "_pb",
-                F.pmod(F.xxhash64("digest"), F.lit(ATTRS_PARTITIONS).cast("long")),
-            )
+        df = storage.read(table)
         # distinct pre-applies the read-side crash-window normalization
         # (identical re-delivered rows collapse once, here, instead of
         # on every read)

@@ -34,9 +34,9 @@ from pyspark.sql.types import StructField, StructType
 _SCOPED_UNIONFIND_MAX = 200_000
 
 # digest-hash partition modulus for {prefix}_attrs — a single pinned
-# constant shared by the fold (write + pruned read) and by compaction's
-# legacy migration: _pb is only prunable if every writer used the SAME
-# modulus, so this is deliberately not a tunable
+# constant shared by the fold's write and its pruned read (compaction
+# keeps the stored _pb): _pb is only prunable if every writer used the
+# SAME modulus, so this is deliberately not a tunable
 ATTRS_PARTITIONS = 16
 
 
@@ -256,19 +256,9 @@ def run_stream_document_pipeline(
                 # idempotency probe shared by every per-batch append: a
                 # re-delivered batch (crash after append, before stream
                 # checkpoint) must not double its rows. Manifest metas
-                # answer it in O(#snapshots) without a Spark job; only
-                # legacy tables (no stamps) pay the data scan.
-                if not storage.exists(table):
-                    return False
-                known = _manifest_batch_ids(storage, table)
-                if known is not None:
-                    return cid in known
-                return (
-                    storage.read(table)
-                    .filter(F.col("batch_id") == cid)
-                    .limit(1)
-                    .count()
-                    > 0
+                # answer it in O(#snapshots) without a Spark job.
+                return storage.exists(table) and cid in _manifest_batch_ids(
+                    storage, table
                 )
 
             # 1. attributes + digest, one pass, once per doc ever. The
@@ -284,36 +274,22 @@ def run_stream_document_pipeline(
                 "_pb",
                 F.pmod(F.xxhash64("digest"), F.lit(ATTRS_PARTITIONS).cast("long")),
             )
-            # a pre-round-6 attrs table has no _pb column — appends must
-            # match its schema (compaction migrates it to the
-            # partitioned layout; mixing shapes would break the union
-            # read)
-            legacy_attrs = storage.exists(f"{prefix}_attrs") and (
-                "_pb" not in storage.read(f"{prefix}_attrs").columns
-            )
             if not _present(f"{prefix}_attrs"):
-                if legacy_attrs:
-                    storage.append(
-                        attrs.drop("_pb"), f"{prefix}_attrs",
-                        meta={"batch_id": cid},
-                    )
-                else:
-                    storage.append(
-                        attrs, f"{prefix}_attrs", partition_by=["_pb"],
-                        meta={"batch_id": cid},
-                    )
+                storage.append(
+                    attrs, f"{prefix}_attrs", partition_by=["_pb"],
+                    meta={"batch_id": cid},
+                )
 
             # 2. exact-digest pairs: batch vs stored corpus + within batch
-            stored_all = storage.read(f"{prefix}_attrs").filter(
-                F.col("batch_id") != cid
+            dpbs = [
+                r[0] for r in attrs.select(F.col("_pb")).distinct().collect()
+            ]
+            stored = (
+                storage.read(f"{prefix}_attrs")
+                .filter(F.col("batch_id") != cid)
+                .filter(F.col("_pb").isin(dpbs))
+                .select("doc_id", "digest")
             )
-            if "_pb" in stored_all.columns:
-                dpbs = [
-                    r[0]
-                    for r in attrs.select(F.col("_pb")).distinct().collect()
-                ]
-                stored_all = stored_all.filter(F.col("_pb").isin(dpbs))
-            stored = stored_all.select("doc_id", "digest")
             bd = attrs.select("doc_id", "digest")
             cross = (
                 stored.alias("o")
@@ -423,9 +399,7 @@ def run_stream_document_pipeline(
                     # corpus: matches appended against a different eval
                     # set would combine with stale eval-side dfs into
                     # decisions matching neither corpus (round-5 ADVICE)
-                    metas = getattr(storage, "snapshot_metas", lambda t: None)(
-                        f"{prefix}_gramdf"
-                    )
+                    metas = storage.snapshot_metas(f"{prefix}_gramdf")
                     stored_eval = metas[0].get("eval_id") if metas else None
                     if stored_eval is not None and stored_eval != eval_cid:
                         raise ValueError(
@@ -500,7 +474,7 @@ def tombstone_documents(storage, doc_ids, prefix: str = "dpx") -> None:
         if storage.exists(f"{prefix}_pairs")
         else set()
     )
-    if attrs_ids is None or pairs_ids is None or (attrs_ids - pairs_ids):
+    if attrs_ids - pairs_ids:
         raise ValueError(
             f"{prefix} state predates per-delivery edge persistence "
             f"({prefix}_pairs does not cover every delivery): cluster "

@@ -109,30 +109,7 @@ def test_vals_random_tokens_property():
         vals_roundtrip(rng.integers(0, 50257, size=n))
 
 
-# --- batch encoders (vectorized-across-rows fast path) -----------------------
-
-def test_batch_values_byte_identical_to_single():
-    from light_curve_spark.kernels.compression import encode_values_batch
-
-    rng = np.random.default_rng(11)
-    series = [
-        rng.integers(-(2**40), 2**40, size=int(n))
-        for n in [1, 2, 3, 17, 128, 1000, 1]
-    ] + [np.full(64, 9), np.array([0]), np.arange(5)]
-    batch = encode_values_batch([s.astype(np.int64) for s in series])
-    for s, b in zip(series, batch):
-        assert b == encode_values(s.astype(np.int64)), s[:5]
-
-
-def test_batch_values_empty_and_roundtrip():
-    from light_curve_spark.kernels.compression import encode_values_batch
-
-    assert encode_values_batch([]) == []
-    series = [np.array([], dtype=np.int64), np.array([7], dtype=np.int64)]
-    batch = encode_values_batch(series)
-    assert decode_values(batch[0]).shape == (0,)
-    assert decode_values(batch[1]).view(np.int64).tolist() == [7]
-
+# --- regular time axis fast path ---------------------------------------------
 
 def test_regular_timestamps_byte_identical_to_general():
     from light_curve_spark.kernels.compression import encode_timestamps_regular
@@ -174,87 +151,7 @@ def test_chunk_compresses_regular_token_stream():
     assert packed < raw / 3
 
 
-# --- columnar codec -----------------------------------------------------------
-
-def _col_roundtrip(v):
-    from light_curve_spark.kernels.compression import (
-        decode_values_columnar,
-        encode_values_columnar,
-    )
-
-    v = np.asarray(v, dtype=np.int64)
-    out = decode_values_columnar(encode_values_columnar(v)).view(np.int64)
-    assert out.tolist() == v.tolist()
-
-
-def test_columnar_roundtrip_cases():
-    _col_roundtrip([])
-    _col_roundtrip([7])
-    _col_roundtrip(np.full(300, 42))              # all-zero xors
-    _col_roundtrip(np.arange(1000))
-    _col_roundtrip([0, -1, (1 << 62) | 1, 0])     # 64-bit meaningful
-    _col_roundtrip([0, 2**31 - 1, -(2**31), 1, -1])
-
-
-def test_columnar_roundtrip_random_property():
-    rng = np.random.default_rng(13)
-    for _ in range(30):
-        n = int(rng.integers(1, 900))
-        _col_roundtrip(rng.integers(-(2**62), 2**62, size=n))
-
-
-def test_columnar_batch_byte_identical_to_single():
-    from light_curve_spark.kernels.compression import (
-        encode_values_batch_columnar,
-        encode_values_columnar,
-    )
-
-    rng = np.random.default_rng(14)
-    series = [
-        rng.integers(0, 50257, size=int(n)).astype(np.int64)
-        for n in [1, 2, 3, 17, 128, 1000]
-    ] + [np.full(64, 9, dtype=np.int64), np.array([5], dtype=np.int64),
-         np.array([], dtype=np.int64), np.arange(5, dtype=np.int64)]
-    batch = encode_values_batch_columnar(series)
-    for s, b in zip(series, batch):
-        assert b == encode_values_columnar(s)
-
-
-def test_columnar_size_close_to_interleaved():
-    from light_curve_spark.kernels.compression import (
-        encode_values,
-        encode_values_columnar,
-    )
-
-    rng = np.random.default_rng(15)
-    v = rng.integers(0, 50257, size=4096).astype(np.int64)
-    a, b = len(encode_values(v)), len(encode_values_columnar(v))
-    assert b < a * 1.05  # same information, ~same size
-
-
-def test_batch_values_single_oversized_series_no_recursion():
-    """A single series above 2x the cache-block size used to recurse
-    forever (ADVICE r1); it must encode directly and round-trip."""
-    import numpy as np
-
-    from light_curve_spark.kernels.compression import (
-        decode_values,
-        encode_values,
-        encode_values_batch,
-    )
-
-    rng = np.random.default_rng(7)
-    big = rng.integers(0, 50257, size=300_000, dtype=np.int64)
-    out = encode_values_batch([big])
-    assert out[0] == encode_values(big)
-    assert np.array_equal(decode_values(out[0]), big)
-    # mixed batch containing the oversized series still matches per-series
-    small = rng.integers(0, 50257, size=100, dtype=np.int64)
-    mixed = encode_values_batch([small, big, small])
-    assert mixed[0] == encode_values(small)
-    assert mixed[1] == encode_values(big)
-    assert mixed[2] == encode_values(small)
-
+# --- blocked codec (the chunk table's value codec) ----------------------------
 
 def _blk_roundtrip(vals):
     from light_curve_spark.kernels.compression import (
@@ -315,19 +212,16 @@ def test_blocked_batch_byte_identical_to_single():
 
 def test_blocked_smaller_than_columnar_on_tokens():
     """The point of the blocked codec: window amortization must beat the
-    per-token-window layout on the input_hint token distribution."""
-    from light_curve_spark.kernels.compression import (
-        encode_values_batch_blocked,
-        encode_values_batch_columnar,
-    )
-
+    paper's per-token-window layout (the interleaved
+    :func:`encode_values`) on the input_hint token distribution."""
+    from light_curve_spark.kernels.compression import encode_values_batch_blocked
     from light_curve_spark.sources.synthetic import row_fields
 
     _, _, tokens = row_fields(np.arange(500), seed=42)
     tl = [t.astype(np.int64) for t in tokens]
-    col = sum(len(x) for x in encode_values_batch_columnar(tl))
+    per_token = sum(len(encode_values(t)) for t in tl)
     blk = sum(len(x) for x in encode_values_batch_blocked(tl))
-    assert blk < 0.8 * col  # measured ~0.70
+    assert blk < 0.8 * per_token  # measured ~0.70
 
 
 def test_batch_decode_blocked_matches_single():
@@ -391,3 +285,55 @@ def test_decode_timestamps_fastpath_and_irregular():
     # irregular stream still takes the bit-walk
     t = np.array([0, 5, 6, 100, 101, 102, 10_000_000], dtype=np.int64)
     assert decode_timestamps(encode_timestamps(t)).tolist() == t.tolist()
+
+
+# --- chunk table on Spark: stored-format validation on the read path -------
+
+@pytest.mark.parametrize(
+    "corruption, message",
+    [
+        ("checksum", r"checksum mismatch for doc_id 'b' chunk_no 0"),
+        ("payload", r"checksum mismatch for doc_id 'b' chunk_no 0"),
+        ("codec", r"doc_id 'b' has unknown codec 'xor-columnar'"),
+    ],
+    ids=["checksum", "payload", "codec"],
+)
+def test_decode_chunks_rejects_corrupt_row(spark, corruption, message):
+    """decode_chunks verifies every row: a wrong stored checksum, a
+    flipped payload bit and an unknown codec each raise a ValueError
+    naming the row instead of decoding to wrong tokens."""
+    from light_curve_spark.operators.compress import (
+        CHUNK_SCHEMA,
+        decode_chunks,
+        encode_chunks,
+    )
+
+    rng = np.random.default_rng(9)
+    seq = spark.createDataFrame(
+        [
+            (doc, "web", rng.integers(0, 50257, size=n).tolist(), n)
+            for doc, n in (("a", 40), ("b", 300), ("c", 7))
+        ],
+        "doc_id string, source string, tokens array<int>, n_tok int",
+    )
+    rows = [r.asDict() for r in encode_chunks(seq).collect()]
+
+    def table(rs):
+        return spark.createDataFrame(
+            [tuple(r[f] for f in CHUNK_SCHEMA.names) for r in rs], CHUNK_SCHEMA
+        )
+
+    assert decode_chunks(table(rows)).count() == 3  # intact rows decode
+    row = next(r for r in rows if r["doc_id"] == "b")
+    if corruption == "checksum":
+        row["checksum"] += 1
+    elif corruption == "payload":
+        # the last byte holds meaningful bits of a multi-token chunk;
+        # its MSB is never byte-alignment padding
+        buf = bytearray(row["vals_gorilla"])
+        buf[-1] ^= 0x80
+        row["vals_gorilla"] = bytes(buf)
+    else:
+        row["codec"] = "xor-columnar"
+    with pytest.raises(Exception, match=message):
+        decode_chunks(table(rows)).collect()

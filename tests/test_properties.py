@@ -15,7 +15,10 @@ from light_curve_spark.kernels import (
     encode_values,
     interpolate,
 )
-from light_curve_spark.kernels.compression import encode_values_batch
+from light_curve_spark.kernels.compression import (
+    encode_values_batch_blocked,
+    encode_values_blocked,
+)
 
 finite = st.floats(
     min_value=-1e12, max_value=1e12, allow_nan=False, allow_infinity=False
@@ -93,9 +96,9 @@ def test_values_roundtrip_full_int64_domain(vs):
 )
 def test_batch_encode_equals_single_encode(rows):
     arrs = [np.array(r, dtype=np.int64) for r in rows]
-    batch = encode_values_batch(arrs)
+    batch = encode_values_batch_blocked(arrs)
     for a, b in zip(arrs, batch):
-        assert b == encode_values(a)
+        assert b == encode_values_blocked(a)
 
 
 @settings(max_examples=60, deadline=None)

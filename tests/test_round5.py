@@ -1024,33 +1024,6 @@ def test_stream_contamination_df_counts_survivors_like_batch(spark, tmp_path):
     assert stream_kept == batch_kept
 
 
-def test_incremental_index_rejects_pre_r5_era(spark, tmp_path):
-    """An index written under the old hash-family spec (xor batch ids /
-    int32 MinHash salt) must be refused, not silently mixed — old band
-    hashes can never collide with new ones, so mixing means missed
-    duplicates forever."""
-    import pandas as pd
-
-    from light_curve_spark.operators.dedup import incremental_minhash_pairs
-    from light_curve_spark.sources.catalog import ParquetSnapshotStorage
-
-    st = ParquetSnapshotStorage(spark, str(tmp_path / "era"))
-    batch = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "text": ["alpha one two", "beta three four"]})
-    )
-    incremental_minhash_pairs(st, batch, prefix="g", n=2)
-    # forge an old-era row into the index
-    old_row = st.read("g_index").limit(1).withColumn(
-        "batch_id", F.lit("n5-x00deadbeef00aa11")
-    )
-    st.append(old_row, "g_index")
-    nxt = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [3], "text": ["gamma five six"]})
-    )
-    with pytest.raises(ValueError, match="pre-round-5"):
-        incremental_minhash_pairs(st, nxt, prefix="g", n=2)
-
-
 def test_semantic_stage_survives_empty_embedding_overlap(spark, tmp_path):
     """Embeddings disjoint from the surviving corpus (or an empty batch)
     must yield an empty semantic stage, not a TypeError from head()."""

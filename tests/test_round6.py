@@ -121,70 +121,6 @@ def test_materialize_document_status_matches_live_view(spark, tmp_path):
     assert meta["policy"]["min_quality"] == 0.05
 
 
-def test_compact_migrates_legacy_minhash_index(spark, tmp_path):
-    """A pre-round-6 row-per-doc index (bands array column, no manifest
-    metas) is rewritten into the banded-partitioned layout by
-    compaction, after which incremental folds keep the union==one-shot
-    contract."""
-    from light_curve_spark.operators.dedup import (
-        _band_array,
-        _minhash_sig_and_bands,
-        incremental_minhash_pairs,
-        minhash_lsh_pairs,
-    )
-    from light_curve_spark.plans.caching import release_operator_caches
-    from light_curve_spark.sources.catalog import ParquetSnapshotStorage
-    from light_curve_spark.streaming.compact import compact_stream_state
-
-    rows = [
-        (i, " ".join(f"w{i % 9}_{j} shared{j % 4}" for j in range(20)))
-        for i in range(40)
-    ]
-    rows += [(500 + i, rows[i][1] + " tail") for i in range(4)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    b1 = docs.filter(F.col("doc_id") % 2 == 0)
-    b2 = docs.filter(F.col("doc_id") % 2 == 1)
-
-    st = ParquetSnapshotStorage(spark, str(tmp_path / "st"))
-    # hand-write batch 1 in the LEGACY layout (what round 5 persisted)
-    with_sig, _ = _minhash_sig_and_bands(
-        b1, n=3, num_hashes=16, bands=4, text_col="text"
-    )
-    st.append(
-        with_sig.select(
-            F.lit("n22-s" + "0" * 16).alias("batch_id"),
-            "doc_id",
-            "grams",
-            _band_array(F.col("sig"), 4, 4).alias("bands"),
-        ),
-        "mg_index",
-    )
-    release_operator_caches()
-    assert "bands" in st.read("mg_index").columns
-    assert st.snapshot_metas("mg_index") is None  # legacy: no stamps
-
-    compact_stream_state(st, prefix="mg")
-    migrated = st.read("mg_index")
-    assert "_pb" in migrated.columns and "bands" not in migrated.columns
-    # recovered batch id keeps the idempotency contract
-    assert st.snapshot_metas("mg_index")[0]["batch_ids"] == [
-        "n22-s" + "0" * 16
-    ]
-
-    p2 = incremental_minhash_pairs(st, b2, prefix="mg")
-    got = {(r.doc_a, r.doc_b) for r in p2.collect()}
-    want = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(docs).collect()
-    }
-    # batch-2 fold discovers every cross pair and all within-b2 pairs
-    within_b1 = {
-        (r.doc_a, r.doc_b) for r in minhash_lsh_pairs(b1).collect()
-    }
-    assert got == want - within_b1
-    release_operator_caches()
-
-
 def test_minhash_index_banded_layout_prunes_partitions(spark, tmp_path):
     """New indexes are hive-partitioned on the band/doc hash key, and a
     key-restricted read shows PartitionFilters (directory pruning) in
@@ -242,16 +178,17 @@ def test_minhash_index_config_guard(spark, tmp_path):
 
 
 def test_manifest_probe_and_era_cache(spark, tmp_path):
-    """Idempotency/era probes read the snapshot manifest (no Spark job)
-    when every snapshot is stamped; legacy tables fall back to ONE scan
-    whose clean verdict is cached per storage object (round-5 ADVICE:
-    the rlike probe re-scanned the full index on every delivery)."""
+    """The idempotency probe reads the snapshot manifest (no Spark job):
+    every append the operator makes is stamped with its batch id, and a
+    snapshot appended without a stamp makes the next fold and the next
+    compaction raise."""
     from light_curve_spark.operators.dedup import (
         _manifest_batch_ids,
         incremental_minhash_pairs,
     )
     from light_curve_spark.plans.caching import release_operator_caches
     from light_curve_spark.sources.catalog import ParquetSnapshotStorage
+    from light_curve_spark.streaming.compact import compact_stream_state
 
     docs = spark.createDataFrame(
         [(i, f"p{i} q{i} r{i} s{i} t{i}") for i in range(8)],
@@ -260,15 +197,15 @@ def test_manifest_probe_and_era_cache(spark, tmp_path):
     st = ParquetSnapshotStorage(spark, str(tmp_path / "st"))
     pairs = incremental_minhash_pairs(st, docs, prefix="mp")
     pairs.count()
-    ids = _manifest_batch_ids(st, "mp_index")
-    assert ids is not None and len(ids) == 1
+    assert len(_manifest_batch_ids(st, "mp_index")) == 1
 
-    # un-stamped append (legacy shape) -> manifest probe disabled
+    # an unstamped append (written out of band) -> the probe refuses
     st.append(st.read("mp_index").limit(1), "mp_index")
-    assert _manifest_batch_ids(st, "mp_index") is None
     docs2 = docs.withColumn("doc_id", F.col("doc_id") + 100)
-    incremental_minhash_pairs(st, docs2, prefix="mp")
-    assert "mp_index" in st.__dict__.get("_era_checked_tables", set())
+    with pytest.raises(ValueError, match="mp_index.*without a batch stamp"):
+        incremental_minhash_pairs(st, docs2, prefix="mp")
+    with pytest.raises(ValueError, match="mp_index.*without a batch stamp"):
+        compact_stream_state(st, prefix="mp")
     release_operator_caches()
 
 
@@ -501,55 +438,6 @@ def test_embedding_lsh_bucket_cap(spark):
         ).collect()
     }
     assert capped <= full and capped  # subset, still finds within-salt pairs
-
-
-def test_legacy_attrs_table_append_and_migration(spark, tmp_path):
-    """A pre-round-6 attrs table (no _pb partition column) keeps
-    working: new deliveries append in the legacy shape (no schema
-    drift in the union read), cross-era exact dups are still found,
-    and compaction migrates the table to the digest-partitioned
-    layout without changing status."""
-    from light_curve_spark.operators.dedup import _content_batch_id, _norm_text
-    from light_curve_spark.operators.text import document_attributes
-    from light_curve_spark.sources.catalog import ParquetSnapshotStorage
-    from light_curve_spark.streaming.compact import compact_stream_state
-
-    st = ParquetSnapshotStorage(spark, str(tmp_path / "st"))
-    b1 = spark.createDataFrame(
-        [(i, f"legacy doc {i} body words {i}") for i in range(10)],
-        "doc_id long, text string",
-    )
-    cid1 = _content_batch_id(b1, "text")
-    legacy_attrs = document_attributes(b1, text_col="text").join(
-        b1.select("doc_id", F.md5(_norm_text("text")).alias("digest")),
-        "doc_id",
-    ).withColumn("batch_id", F.lit(cid1))
-    st.append(legacy_attrs, "dpx_attrs")  # pre-round-6: no _pb, no meta
-    assert "_pb" not in st.read("dpx_attrs").columns
-
-    # delivery 2 contains an exact dup of legacy doc 3
-    b2_rows = [(100 + i, f"new doc {i} other words {i}") for i in range(5)]
-    b2_rows.append((200, "legacy doc 3 body words 3"))
-    b2 = spark.createDataFrame(b2_rows, "doc_id long, text string")
-    in_dir = str(tmp_path / "in")
-    b2.coalesce(1).write.parquet(f"{in_dir}/b2")
-    _stream_deliver(spark, st, in_dir, str(tmp_path / "ck"), None)
-    assert "_pb" not in st.read("dpx_attrs").columns  # legacy shape kept
-    status = _status_map(st)
-    assert status[200] == "dup" and status[3] is None
-
-    compact_stream_state(st, prefix="dpx")
-    assert "_pb" in st.read("dpx_attrs").columns
-    assert _status_map(st) == status
-
-    # post-migration delivery appends in the partitioned shape
-    b3 = spark.createDataFrame(
-        [(300, "legacy doc 4 body words 4")], "doc_id long, text string"
-    )
-    b3.coalesce(1).write.parquet(f"{in_dir}/b3")
-    _stream_deliver(spark, st, in_dir, str(tmp_path / "ck"), None)
-    status3 = _status_map(st)
-    assert status3[300] == "dup" and status3[4] is None
 
 
 def test_stream_pipeline_compact_every(spark, tmp_path):
@@ -835,6 +723,16 @@ def test_tombstone_semantic_winner_restores_partner(spark, tmp_path):
             semantic_threshold=0.98, semantic_n_planes=6,
         )
         release_operator_caches()
+    # every table the idempotency probe reads is batch-stamped by the
+    # fold, so none can hit the probe's unstamped-table refusal
+    probed = [
+        f"dpx_{t}" for t in (
+            "attrs", "index", "pairs", "sem_index", "sem_pairs",
+            "contam_matches", "gramdf",
+        )
+    ]
+    for t in probed:
+        assert st.snapshot_metas(t) is not None, t
     pre = {
         r.doc_id: r.drop_stage
         for r in read_document_status(st, min_quality=0.05).collect()
@@ -868,6 +766,8 @@ def test_tombstone_semantic_winner_restores_partner(spark, tmp_path):
     }
 
     compact_stream_state(st, prefix="dpx")
+    for t in probed:
+        assert st.snapshot_metas(t) is not None, t
     assert {
         r.doc_id: r.drop_stage
         for r in read_document_status(st, min_quality=0.05).collect()
