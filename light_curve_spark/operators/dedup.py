@@ -26,8 +26,8 @@ Spark-first (driver mandate; graded alongside SURVEY.md §2):
   persisted band/gram index: signatures are mined once per document,
   ever; union over batches equals the one-shot output.
 - :func:`dedup_clusters` — connected components over discovered pairs
-  (label propagation for shallow clusters; large-star/small-star for
-  huge-diameter graphs, O(log n) rounds), durable checkpointing.
+  by large-star/small-star contraction (O(log n) rounds even on
+  huge-diameter graphs), durable checkpointing.
 - :func:`embedding_cosine_pairs` — near-dup by embedding cosine (see
   operators/similarity.py for the kernels).
 
@@ -1025,7 +1025,6 @@ def dedup_clusters(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 50,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Connected components over near-dup pairs -> (doc_id, keep_id):
     every member of a duplicate cluster labeled with the cluster's
@@ -1034,90 +1033,28 @@ def dedup_clusters(
     pair emitters (ngram/minhash/simhash) say who MATCHES whom; this
     says which row to KEEP.
 
-    ``algorithm='auto'`` (default) resolves to ``'star'``: on an UNKNOWN
-    pair graph the contraction's O(log n) round bound is the safe
-    posture — label propagation needs diameter rounds, and a single
-    chained corpus (every doc matching only its neighbor, the round-3
-    stress shape) turns that into tens of thousands of shuffle rounds.
-    Both algorithms produce identical labels (min id per component);
-    pick ``'label-prop'`` explicitly only when the cluster diameter is
-    KNOWN to be shallow and the lighter per-round plan matters.
-
-    ``algorithm='label-prop'``: iterative min-label
-    propagation, all declarative — each round joins the undirected edge
-    list against current labels and takes the min over the closed
-    neighborhood. Rounds needed = cluster diameter; near-dup clusters are
-    shallow in practice (pairs within a cluster are mutually similar).
-    The per-round plan is one shuffle join + one groupBy, AQE-owned, and
-    label tables shrink as clusters collapse.
-
-    ``algorithm='star'``: the large-star/small-star edge contraction of
-    Kiveris et al., "Connected Components in MapReduce and Beyond" —
+    The algorithm is the large-star/small-star edge contraction of
+    Kiveris et al., "Connected Components in MapReduce and Beyond" — it
     converges in O(log n) rounds even on huge-diameter graphs (a chained
-    corpus where every doc matches only its neighbor), where label
-    propagation needs diameter rounds. Same join shapes per round (one
-    groupBy-min + one equi-join per star step).
+    corpus where every doc matches only its neighbor, the round-3 stress
+    shape), so an UNKNOWN pair graph cannot turn into thousands of
+    shuffle rounds. Per round: one groupBy-min + one equi-join per star
+    step.
 
     Per-round intermediates are persisted in a scoped registry (released
     on exit WITHOUT touching caches other in-flight operators hold), and
     the result's lineage is truncated durably when a checkpoint dir is
     configured (see :func:`_truncate_lineage`).
     """
-    from light_curve_spark.plans.caching import cache_scope, cached
+    from light_curve_spark.plans.caching import cache_scope
 
-    if algorithm == "auto":
-        algorithm = "star"
-    if algorithm == "star":
-        sc = pairs.sparkSession.sparkContext
-        with cache_scope():
-            labels, _rounds, edge_ckpts = _star_labels(pairs, a_col, b_col, max_iter)
-            labels = _truncate_lineage(labels)
-            # the final edge checkpoint is superseded once labels are
-            # eagerly materialized above
-            _delete_ckpt_dirs(sc, edge_ckpts)
-        return labels
-    if algorithm != "label-prop":
-        raise ValueError(f"unknown algorithm {algorithm!r}: auto | label-prop | star")
-
+    sc = pairs.sparkSession.sparkContext
     with cache_scope():
-        fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        edges = cached(
-            fwd.unionByName(
-                pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-            )
-        )
-        labels = cached(
-            edges.select(F.col("src").alias("doc_id"))
-            .distinct()
-            .withColumn("keep_id", F.col("doc_id"))
-        )
-        for _ in range(max_iter):
-            nbr = (
-                edges.join(labels, edges.src == labels.doc_id)
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(F.min("keep_id").alias("nbr_min"))
-            )
-            new_labels = cached(
-                labels.join(nbr, "doc_id", "left").select(
-                    "doc_id",
-                    F.least(
-                        F.col("keep_id"), F.coalesce(F.col("nbr_min"), F.col("keep_id"))
-                    ).alias("keep_id"),
-                )
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "doc_id")
-                .filter(F.col("n.keep_id") != F.col("o.keep_id"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        # truncate the iteration's join lineage (distributed, no driver
-        # collect) so the per-round caches can be released safely
+        labels, _rounds, edge_ckpts = _star_labels(pairs, a_col, b_col, max_iter)
         labels = _truncate_lineage(labels)
+        # the final edge checkpoint is superseded once labels are
+        # eagerly materialized above
+        _delete_ckpt_dirs(sc, edge_ckpts)
     return labels
 
 
@@ -1170,7 +1107,6 @@ def _star_labels(
     a_col: str,
     b_col: str,
     max_iter: int,
-    checkpoint_every: int = 1,
 ) -> tuple[DataFrame, int, set[str]]:
     """Large-star/small-star contraction ->
     ((doc_id, keep_id), rounds, live_checkpoint_dirs).
@@ -1231,28 +1167,28 @@ def _star_labels(
     rounds = 0
     for rounds in range(1, max_iter + 1):
         new_edges = small_star(large_star(edges))
-        # checkpoint_every=1 is the MEASURED best cadence: sparser
+        # checkpointing EVERY round is the MEASURED best cadence: sparser
         # truncation looked cheaper on paper (fewer materializations)
         # but ran 1.7x SLOWER at 2M edges (238.5 s -> 405.5 s for
         # every-3) — the compact checkpointed scan beats reads through a
         # deepening cached-plan stack. Negative experiment kept here so
         # nobody "optimizes" this again without re-measuring.
+        #
+        # attribution comes from the checkpointed RDD handle — the
+        # deletion set is exactly this round's rdd-N dir, immune to
+        # concurrent checkpoints from OTHER applications sharing the
+        # checkpoint dir (round-5 residual). The locked before/after
+        # listing diff survives only as the fallback for when the
+        # handle is unreadable; the lock still guards that window
+        # against in-process library checkpoints.
         created: set[str] = set()
-        if rounds % checkpoint_every == 0:
-            # attribution comes from the checkpointed RDD handle — the
-            # deletion set is exactly this round's rdd-N dir, immune to
-            # concurrent checkpoints from OTHER applications sharing the
-            # checkpoint dir (round-5 residual). The locked before/after
-            # listing diff survives only as the fallback for when the
-            # handle is unreadable; the lock still guards that window
-            # against in-process library checkpoints.
-            with _CKPT_LOCK:
-                before = _ckpt_subdirs(sc)
-                new_edges, own_path = _truncate_lineage_attributed(new_edges)
-                if own_path is not None:
-                    created = {own_path}
-                elif sc.getCheckpointDir() is not None:
-                    created = _ckpt_subdirs(sc) - before
+        with _CKPT_LOCK:
+            before = _ckpt_subdirs(sc)
+            new_edges, own_path = _truncate_lineage_attributed(new_edges)
+            if own_path is not None:
+                created = {own_path}
+            elif sc.getCheckpointDir() is not None:
+                created = _ckpt_subdirs(sc) - before
         new_edges = cached(new_edges)
         same_size = new_edges.count() == edges.count()
         unchanged = (

@@ -4,14 +4,20 @@ The rollup partials (n_points, v_sum, v_min, v_max) form a commutative
 monoid, so folding a new snapshot into an existing rollup is a groupBy
 over the union of partials — identical math to the tier cascade
 (operators/rollup.py), applied across TIME instead of across tiers.
-This is the batch twin of a streaming windowed aggregation: per new
-Iceberg snapshot the scheduler runs
+Per new Iceberg snapshot the scheduler runs
 
     new_partials = rollup_tiers(explode_series(new_rows))
     rollup_table = merge_rollups(rollup_table, new_partials)
 
 and appends the result — no state store, no watermark, exactly-once by
 snapshot id (the checkpoint records which input snapshots are folded).
+
+This is the engine's one continuous-aggregate fold: the stream-fed
+rollup (streaming/structured.py) runs the same read-merge-append per
+micro-batch, so both write the same ``rollup_tiers`` state shape. Every
+writer stamps its snapshot's manifest ``batch_ids``: the stream fold
+with its input file paths, the snapshot-fed fold and the retraction
+with an empty list.
 """
 
 from __future__ import annotations
@@ -36,6 +42,26 @@ def merge_rollups(existing: DataFrame, new: DataFrame, keys: list[str] | None = 
     ).withColumn("v_mean", F.col("v_sum") / F.col("n_points"))
 
 
+def _fold_append(
+    storage,
+    table: str,
+    partials: DataFrame,
+    keys: list[str] | None,
+    batch_ids: list[str],
+) -> str:
+    """Merge rollup ``partials`` into the table's latest full-state
+    snapshot and append the result as a new snapshot stamped with
+    ``batch_ids``; returns the snapshot id. The one read-merge-append of
+    the continuous-aggregate state, shared by the snapshot-fed and the
+    stream-fed fold."""
+    try:
+        # each snapshot holds the FULL merged state -> read latest only
+        merged = merge_rollups(storage.read_snapshot(table), partials, keys=keys)
+    except ValueError:
+        merged = partials
+    return storage.append(merged, table, meta={"batch_ids": batch_ids})
+
+
 def incremental_rollup(
     spark,
     storage,
@@ -50,20 +76,18 @@ def incremental_rollup(
     The merged table is written whole (rollup tables are ~10^6x smaller
     than raw at tier 100); at true 10^12 scale the write switches to a
     MERGE INTO on (key, tier, bucket), which Iceberg supports natively.
+    The tier partials ``rollup_tiers`` caches are released before this
+    returns.
     """
     from light_curve_spark.operators.rollup import rollup_tiers
     from light_curve_spark.operators.series import explode_series
+    from light_curve_spark.plans.caching import cache_scope
 
-    new_partials = rollup_tiers(
-        explode_series(new_rows), keys=keys, base_width=base_width, tiers=tiers
-    )
-    try:
-        # each snapshot holds the FULL merged state -> read latest only
-        existing = storage.read_snapshot("rollup_continuous")
-        merged = merge_rollups(existing, new_partials, keys=keys)
-    except ValueError:
-        merged = new_partials
-    return storage.append(merged, "rollup_continuous")
+    with cache_scope():
+        new_partials = rollup_tiers(
+            explode_series(new_rows), keys=keys, base_width=base_width, tiers=tiers
+        )
+        return _fold_append(storage, "rollup_continuous", new_partials, keys, [])
 
 
 def retract_rollup_state(
@@ -97,31 +121,37 @@ def retract_rollup_state(
       deleted row topped, raw rescan bounded by that footprint).
 
     The result equals ``rollup_tiers`` over the corpus without the
-    deleted data (pytest-gated both shapes)."""
+    deleted data (pytest-gated both shapes), for snapshot-fed and
+    stream-fed state alike. The append is stamped with an empty batch
+    list, so the stream fold's manifest probe still accepts the table,
+    and the caches ``retract_from_rollup`` registers are released before
+    this returns."""
     from light_curve_spark.operators.rollup import retract_from_rollup
+    from light_curve_spark.plans.caching import cache_scope
 
     keys = keys or ["doc_id", "source"]
     existing = storage.read_snapshot(table)
-    if retained is None:
-        join_cols = [c for c in keys if c in deleted.columns]
-        if not join_cols:
-            raise ValueError(
-                f"deleted carries none of the rollup keys {keys!r} — "
-                "pass whole-key tuples, or long-form deleted+retained "
-                "series for partial-bucket retraction"
+    with cache_scope():
+        if retained is None:
+            join_cols = [c for c in keys if c in deleted.columns]
+            if not join_cols:
+                raise ValueError(
+                    f"deleted carries none of the rollup keys {keys!r} — "
+                    "pass whole-key tuples, or long-form deleted+retained "
+                    "series for partial-bucket retraction"
+                )
+            reduced = existing.join(
+                F.broadcast(deleted.select(*join_cols).distinct()),
+                join_cols,
+                "left_anti",
             )
-        reduced = existing.join(
-            F.broadcast(deleted.select(*join_cols).distinct()),
-            join_cols,
-            "left_anti",
-        )
-    else:
-        reduced = retract_from_rollup(
-            existing,
-            deleted,
-            retained,
-            keys=keys,
-            base_width=base_width,
-            tiers=tiers,
-        )
-    return storage.append(reduced, table)
+        else:
+            reduced = retract_from_rollup(
+                existing,
+                deleted,
+                retained,
+                keys=keys,
+                base_width=base_width,
+                tiers=tiers,
+            )
+        return storage.append(reduced, table, meta={"batch_ids": []})

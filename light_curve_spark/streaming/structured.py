@@ -1,28 +1,28 @@
-"""Structured Streaming ingestion path for the rollup engine.
+"""Stream-fed continuous aggregates: a ``readStream`` front end over the
+snapshot rollup fold.
 
-The engine's PRIMARY posture stays batch-snapshot resume (see package
-docstring) — that is what makes bit-exact golden parity tractable. This
-module is the streaming twin for deployments where rollups must follow
-an arriving event stream instead of snapshot appends:
+SURVEY.md §2.9 keeps Structured Streaming aggregation out of the engine:
+sequences are immutable rows, so there is no late data and nothing for a
+watermark or a state store to bound. What a landing-zone deployment needs
+from streaming is the file source's bookkeeping (which files arrived
+since the last run), so this module uses ``readStream`` for exactly that
+and folds every micro-batch through the same ``rollup_tiers`` +
+``merge_rollups`` fold as
+:func:`~light_curve_spark.streaming.incremental.incremental_rollup`:
 
-- ``readStream`` over a parquet directory (every new file is a
-  micro-batch — the shape of an Iceberg/warehouse landing zone),
-- event-time watermark bounding aggregation state for late data,
-- tumbling ``window(ts, width)`` groupBy producing the SAME
-  (key..., bucket, n_points, v_sum, v_min, v_max) schema as the batch
-  base tier (operators/rollup._base_rollup), so every downstream
-  operator (cascade, retention, merge) is shared with batch,
-- ``update`` output mode + ``foreachBatch`` upsert into the snapshot
-  store: updated buckets REPLACE their previous rows, everything else is
-  carried forward — a continuous aggregate with replace-on-write
-  snapshots (read with ``storage.read_snapshot``),
-- checkpointed: re-running with the same checkpoint processes ONLY new
-  files (exactly-once per file), which the test exercises.
+- each micro-batch row is tagged with ``input_file_name()``;
+- rows from files already stamped in the table's snapshot manifest are
+  dropped (``_manifest_batch_ids``, the library's one idempotency probe),
+  so a lost checkpoint re-delivers files without double-folding them;
+- the rest is rolled up at every tier, merged into the latest snapshot,
+  and the full state is appended as one snapshot stamped with the new
+  file paths.
 
-Scale notes: state is bounded by (keys x active windows) thanks to the
-watermark; the upsert is a key-partitioned anti-join against the current
-snapshot — at 10^12 sequences the store would be an Iceberg MERGE, same
-plan shape.
+The table holds ``rollup_tiers`` rows (key..., tier, bucket, n_points,
+v_sum, v_min, v_max, v_mean) for every tier, the same state shape as the
+snapshot-fed fold, so ``storage.read_snapshot(table)`` is the whole
+cascade and ``retract_rollup_state(..., table=table)`` applies to it. The
+query checkpoint keeps only the file source's offsets.
 """
 
 from __future__ import annotations
@@ -30,114 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from light_curve_spark.functions import bucketize, epoch_us
-from light_curve_spark.operators.rollup import ROLLUP_AGG_COLS
-
-
-def stream_base_rollup(
-    stream: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    v_col: str = "value",
-    width_seconds: int = 86400,
-    watermark: str = "2 days",
-) -> DataFrame:
-    """Windowed streaming aggregation with the batch base-tier schema.
-
-    ``bucket`` is floor(epoch_micros / width) of the window start —
-    identical to the batch ``floor(t / width)`` bucketing, so streamed
-    and batch rollups are row-compatible."""
-    v = F.col(v_col)
-    win = F.window(F.col(ts_col), f"{width_seconds} seconds")
-    width_us = float(width_seconds) * 1e6
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(*keys, win.alias("_w"))
-        .agg(
-            # count(v), NOT count(*): the batch base tier counts non-null
-            # values only — null-valued events must not skew n_points /
-            # v_mean when streamed buckets feed the shared cascade/merge
-            F.count(v).alias("n_points"),
-            F.sum(v).alias("v_sum"),
-            F.min(v).alias("v_min"),
-            F.max(v).alias("v_max"),
-        )
-        .select(
-            *keys,
-            bucketize(epoch_us(F.col("_w.start")), width_us).alias("bucket"),
-            "n_points",
-            "v_sum",
-            "v_min",
-            "v_max",
-        )
-    )
-
-
-def stream_stateful_totals(
-    stream: DataFrame,
-    keys: list[str] | None = None,
-    v_col: str = "value",
-) -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    per-key LIFETIME totals (n, sum, min, max) maintained in the state
-    store across micro-batches — the shape for aggregates that outlive
-    any window (e.g. a per-user all-time rollup row updated per batch).
-
-    Each micro-batch emits one row per updated key with the totals SO
-    FAR; state survives restarts through the query checkpoint (tested
-    across two availableNow runs). Complements the watermarked window agg
-    in :func:`stream_base_rollup`, which bounds state by active windows;
-    here state is bounded by the key cardinality instead."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    keys = keys or ["user_id"]
-    key_fields = [stream.schema[k] for k in keys]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("n_points", LongType(), False),
-            StructField("v_sum", DoubleType(), True),
-            StructField("v_min", DoubleType(), True),
-            StructField("v_max", DoubleType(), True),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType(), False),
-            StructField("s", DoubleType(), True),
-            StructField("mn", DoubleType(), True),
-            StructField("mx", DoubleType(), True),
-        ]
-    )
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        n, s, mn, mx = state.get if state.exists else (0, 0.0, None, None)
-        for pdf in pdfs:
-            v = pdf[v_col].dropna()
-            if v.empty:
-                continue
-            n += int(v.shape[0])
-            s += float(v.sum())
-            bmn, bmx = float(v.min()), float(v.max())
-            mn = bmn if mn is None else min(mn, bmn)
-            mx = bmx if mx is None else max(mx, bmx)
-        state.update((n, s, mn, mx))
-        yield pd.DataFrame(
-            [dict(zip([k.name for k in key_fields], key))
-             | {"n_points": n, "v_sum": s, "v_min": mn, "v_max": mx}]
-        )
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
+from light_curve_spark.functions import epoch_us
 
 
 def run_stream_rollup(
@@ -151,134 +44,61 @@ def run_stream_rollup(
     ts_col: str = "ts",
     v_col: str = "value",
     width_seconds: int = 86400,
-    watermark: str = "2 days",
     tiers: tuple[int, ...] = (1,),
 ) -> None:
-    """One ``availableNow`` pass: process every not-yet-seen file under
-    ``input_dir``, upserting updated buckets into ``storage``/``table``
-    (replace-on-write snapshots; read with ``read_snapshot``). Returns
-    after the trigger drains — a scheduler (or a long-lived query with a
-    processing-time trigger) calls this per arrival.
+    """One ``availableNow`` pass: fold every not-yet-seen file under
+    ``input_dir`` into ``storage``/``table`` at every tier in ``tiers``
+    (base bucket ``floor(epoch_us(ts) / (width_seconds * 1e6))``).
+    Returns after the trigger drains — a scheduler (or a long-lived query
+    with a processing-time trigger) calls this per arrival.
 
-    ``tiers`` beyond the base fold the 10x/100x retention cascade into
-    the SAME micro-batch: update-mode rows are REPLACEMENTS (not deltas),
-    so coarser tiers cannot be merge-summed incrementally; instead each
-    batch recomputes exactly the parent buckets its updates touch FROM
-    the merged base-tier partials (never from raw) and replace-upserts
-    them into ``{table}_t{T}``. Per batch that is |touched parents| tiny
-    rows — the classic continuous-aggregate incremental refresh. Read
-    the full cascade back with :func:`read_stream_tiers`; row-compatible
-    with the batch ``operators/rollup.rollup_tiers`` output (tested
-    equal across both availableNow runs)."""
+    Exactly-once per file: the checkpoint skips files earlier runs
+    consumed, and the manifest stamps skip files a lost or reset
+    checkpoint re-delivers. The state equals ``rollup_tiers`` over every
+    delivered file."""
+    from light_curve_spark.operators.dedup import _manifest_batch_ids
+    from light_curve_spark.operators.rollup import rollup_tiers
+    from light_curve_spark.plans.caching import cache_scope
+    from light_curve_spark.streaming.incremental import _fold_append
+
     keys = keys or ["user_id"]
     if list(tiers) != sorted(tiers) or tiers[0] != 1 or any(
         t % p for p, t in zip(tiers, tiers[1:])
     ):
         raise ValueError(f"tiers must be ascending multiples starting at 1: {tiers}")
     if not hasattr(storage, "read_snapshot"):
-        # the upsert contract is replace-on-write FULL-state snapshots;
-        # IcebergStorage appends rows (its streaming path would be an
-        # Iceberg MERGE) — fail loudly instead of AttributeError inside
-        # the micro-batch, or worse, silently accumulating stale buckets
+        # the fold writes replace-on-write FULL-state snapshots; IcebergStorage
+        # appends rows (its streaming path would be an Iceberg MERGE) — fail
+        # loudly instead of AttributeError inside the micro-batch
         raise TypeError(
             "run_stream_rollup needs a replace-on-write snapshot store "
             "(read_snapshot/append), e.g. ParquetSnapshotStorage; got "
             f"{type(storage).__name__}"
         )
-    src = spark.readStream.schema(input_schema).parquet(input_dir)
-    agg = stream_base_rollup(
-        src, keys, ts_col=ts_col, v_col=v_col,
-        width_seconds=width_seconds, watermark=watermark,
-    )
 
-    def _read_or_none(tbl: str):
-        try:
-            return storage.read_snapshot(tbl)
-        except ValueError:
-            return None
-
-    def _replace_upsert(cur, rows: DataFrame, on: list[str], tbl: str) -> None:
-        if cur is None:
-            merged = rows
-        else:
-            merged = cur.join(rows.select(*on).distinct(), on, "left_anti").unionByName(
-                rows
+    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+        # tag before anything persists the batch: on a persisted frame
+        # input_file_name() reads ''
+        tagged = batch_df.withColumn("_file", F.input_file_name())
+        files = {r[0] for r in tagged.select("_file").distinct().collect()}
+        new = sorted(files - _manifest_batch_ids(storage, table))
+        if not new:
+            return
+        rows = tagged.filter(F.col("_file").isin(new)).select(
+            *keys, epoch_us(ts_col).alias("t"), F.col(v_col).alias("v")
+        )
+        with cache_scope():
+            partials = rollup_tiers(
+                rows, keys=keys, base_width=width_seconds * 1e6, tiers=tiers
             )
-        storage.append(merged, tbl)
+            _fold_append(storage, table, partials, keys, new)
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # update-mode batches carry the CURRENT value of every group
-        # updated in this micro-batch: replace those rows, keep the rest
-        updates = batch_df.persist()
-        try:
-            if updates.isEmpty():
-                return
-            _replace_upsert(
-                _read_or_none(table), updates, [*keys, "bucket"], table
-            )
-            if len(tiers) == 1:
-                return
-            base = storage.read_snapshot(table).persist()
-            try:
-                for t in tiers[1:]:
-                    # parent buckets touched by this batch's base updates
-                    parents = updates.select(
-                        *keys, F.floor(F.col("bucket") / F.lit(t)).alias("bucket")
-                    ).distinct()
-                    recomputed = (
-                        base.withColumn(
-                            "_p", F.floor(F.col("bucket") / F.lit(t))
-                        )
-                        .join(
-                            F.broadcast(parents.withColumnRenamed("bucket", "_p")),
-                            [*keys, "_p"],
-                        )
-                        .groupBy(*keys, F.col("_p").alias("bucket"))
-                        .agg(
-                            F.sum("n_points").alias("n_points"),
-                            F.sum("v_sum").alias("v_sum"),
-                            F.min("v_min").alias("v_min"),
-                            F.max("v_max").alias("v_max"),
-                        )
-                    )
-                    _replace_upsert(
-                        _read_or_none(f"{table}_t{t}"),
-                        recomputed,
-                        [*keys, "bucket"],
-                        f"{table}_t{t}",
-                    )
-            finally:
-                base.unpersist()
-        finally:
-            updates.unpersist()
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    (
+        spark.readStream.schema(input_schema)
+        .parquet(input_dir)
+        .writeStream.option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .foreachBatch(upsert)
+        .foreachBatch(fold)
         .start()
-    )
-    q.awaitTermination()
-
-
-def read_stream_tiers(
-    storage, table: str, tiers: tuple[int, ...] = (1, 10, 100)
-) -> DataFrame:
-    """The streamed cascade as ONE table in the batch
-    ``operators/rollup.rollup_tiers`` shape: (key..., tier, bucket,
-    n_points, v_sum, v_min, v_max, v_mean)."""
-    out = None
-    for t in tiers:
-        tbl = table if t == 1 else f"{table}_t{t}"
-        df = storage.read_snapshot(tbl).withColumn("tier", F.lit(t))
-        out = df if out is None else out.unionByName(df)
-    cols = [c for c in out.columns if c != "tier"]
-    front = [c for c in cols if c not in ("bucket", *ROLLUP_AGG_COLS)]
-    return out.select(
-        *front,
-        "tier",
-        "bucket",
-        *ROLLUP_AGG_COLS,
-        (F.col("v_sum") / F.col("n_points")).alias("v_mean"),
+        .awaitTermination()
     )

@@ -210,10 +210,8 @@ def main() -> None:
     # the 1000-diameter chain): star contraction, O(log n) rounds
     all_pairs = ngram_pairs.select("doc_a", "doc_b").persist()
     all_pairs.count()
-    t, _ = timed(
-        lambda: dedup_clusters(all_pairs, algorithm="star").count(), reps=1
-    )
-    labels = dedup_clusters(all_pairs, algorithm="star").persist()
+    t, _ = timed(lambda: dedup_clusters(all_pairs).count(), reps=1)
+    labels = dedup_clusters(all_pairs).persist()
     biggest = (
         labels.groupBy("keep_id").count().orderBy(F.desc("count")).head()
     )

@@ -210,7 +210,7 @@ def test_blocked_batch_byte_identical_to_single():
         assert b == encode_values_blocked(s)
 
 
-def test_blocked_smaller_than_columnar_on_tokens():
+def test_blocked_smaller_than_interleaved_on_tokens():
     """The point of the blocked codec: window amortization must beat the
     paper's per-token-window layout (the interleaved
     :func:`encode_values`) on the input_hint token distribution."""

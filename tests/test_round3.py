@@ -33,9 +33,9 @@ def test_dedup_clusters_star_chain_converges_in_log_rounds(spark):
 
 
 def test_dedup_clusters_default_is_star_on_chain(spark):
-    """The DEFAULT algorithm ('auto' -> star) must converge on a
+    """dedup_clusters (star contraction) must converge on a
     1000-link chain within the 50-round cap — label propagation needs
-    ~1000 rounds there, so correct labels prove the default path cannot
+    ~1000 rounds there, so correct labels prove dedup_clusters cannot
     be DoS'd by a high-diameter pair graph (r3 verdict item 7)."""
     from light_curve_spark.operators.dedup import dedup_clusters
 
@@ -62,7 +62,7 @@ def test_star_cc_cleans_superseded_round_checkpoints(spark, tmp_path):
         pairs = spark.createDataFrame(
             pd.DataFrame({"doc_a": ids[:-1], "doc_b": ids[1:]})
         ).repartition(4)
-        labels = dedup_clusters(pairs, algorithm="star")
+        labels = dedup_clusters(pairs)
         out = {r.doc_id: r.keep_id for r in labels.collect()}
         assert len(out) == 1001 and set(out.values()) == {0}
         # walk <ckpt>/<app-uuid>/rdd-* — every surviving dir is one
@@ -80,26 +80,22 @@ def test_star_cc_cleans_superseded_round_checkpoints(spark, tmp_path):
         )
 
 
-def test_dedup_clusters_star_matches_label_prop(spark):
+def test_dedup_clusters_matches_scalar_ref(spark):
+    import sys
+
     from light_curve_spark.operators.dedup import dedup_clusters
 
-    pairs = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_a": [1, 2, 9, 20, 40, 41], "doc_b": [2, 3, 1, 21, 41, 42]}
-        )
+    sys.path.insert(
+        0,
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"),
     )
-    lp = {
-        r.doc_id: r.keep_id
-        for r in dedup_clusters(pairs, algorithm="label-prop").collect()
-    }
-    st = {
-        r.doc_id: r.keep_id
-        for r in dedup_clusters(pairs, algorithm="star").collect()
-    }
-    assert lp == st == {1: 1, 2: 1, 3: 1, 9: 1, 20: 20, 21: 20, 40: 40, 41: 40, 42: 40}
+    from oracle_impl import dedup_clusters_ref
 
-    with pytest.raises(ValueError, match="algorithm"):
-        dedup_clusters(pairs, algorithm="bogus")
+    a, b = [1, 2, 9, 20, 40, 41], [2, 3, 1, 21, 41, 42]
+    pairs = spark.createDataFrame(pd.DataFrame({"doc_a": a, "doc_b": b}))
+    got = {r.doc_id: r.keep_id for r in dedup_clusters(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 9: 1, 20: 20, 21: 20, 40: 40, 41: 40, 42: 40}
+    assert sorted(got.items()) == dedup_clusters_ref(list(zip(a, b)))
 
 
 def test_truncate_lineage_uses_reliable_checkpoint_when_configured(spark, tmp_path):

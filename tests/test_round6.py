@@ -177,7 +177,7 @@ def test_minhash_index_config_guard(spark, tmp_path):
     release_operator_caches()
 
 
-def test_manifest_probe_and_era_cache(spark, tmp_path):
+def test_unstamped_snapshot_is_refused(spark, tmp_path):
     """The idempotency probe reads the snapshot manifest (no Spark job):
     every append the operator makes is stamped with its batch id, and a
     snapshot appended without a stamp makes the next fold and the next
@@ -316,7 +316,7 @@ def test_star_checkpoint_deletion_attributed_by_rdd_handle(spark, tmp_path):
         pairs = spark.createDataFrame(
             pd.DataFrame({"doc_a": ids[:-1], "doc_b": ids[1:]})
         ).repartition(4)
-        labels = ddp.dedup_clusters(pairs, algorithm="star")
+        labels = ddp.dedup_clusters(pairs)
         out = {r.doc_id: r.keep_id for r in labels.collect()}
         assert set(out.values()) == {0}
         assert deleted, "no checkpoints were cleaned up"
