@@ -53,6 +53,10 @@ import zlib
 
 import numpy as np
 
+# the chunk table's one value codec: block-envelope XOR windows
+# (:func:`encode_values_blocked`), vectorized both ways
+CHUNK_CODEC = "xor-blocked"
+
 _U64 = np.uint64
 _MASK6 = np.uint64(0x3F)
 
@@ -791,9 +795,11 @@ def encode_timestamps_regular(n: int, t0: int) -> bytes:
 
 
 def encode_chunk(t: np.ndarray, v: np.ndarray) -> dict:
-    """Encode one series chunk into the chunk-struct fields
-    (SURVEY.md §1.2): ts_dod + vals_gorilla binaries, n, crc32 checksum
-    over the raw little-endian (t, v) bytes."""
+    """Encode one series chunk into the chunk-table fields
+    (SURVEY.md §1.2): ts_dod + vals_gorilla (:data:`CHUNK_CODEC`)
+    binaries, n, crc32 checksum over the raw little-endian (t, v) bytes
+    and the codec name — the single-row form of
+    ``operators.compress.encode_chunks``."""
     t = np.asarray(t, dtype=np.int64)
     v = np.asarray(v, dtype=np.int64)
     if t.shape[0] != v.shape[0]:
@@ -804,15 +810,23 @@ def encode_chunk(t: np.ndarray, v: np.ndarray) -> dict:
         "t0": int(t[0]) if t.shape[0] else 0,
         "n": int(t.shape[0]),
         "ts_dod": encode_timestamps(t),
-        "vals_gorilla": encode_values(v),
+        "vals_gorilla": encode_values_blocked(v),
         "checksum": crc,
+        "codec": CHUNK_CODEC,
     }
 
 
 def decode_chunk(chunk: dict) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of :func:`encode_chunk`; verifies the checksum."""
+    """Inverse of :func:`encode_chunk`, and the single-row form of
+    ``operators.compress.decode_chunks``: reads any chunk-table row
+    (``row.asDict()``). Raises ``ValueError`` on a codec other than
+    :data:`CHUNK_CODEC` or a checksum mismatch."""
+    if chunk["codec"] != CHUNK_CODEC:
+        raise ValueError(
+            f"unknown codec {chunk['codec']!r}; only {CHUNK_CODEC!r} decodes"
+        )
     t = decode_timestamps(chunk["ts_dod"])
-    v = decode_values(chunk["vals_gorilla"]).view(np.int64)
+    v = decode_values_blocked(chunk["vals_gorilla"]).view(np.int64)
     crc = zlib.crc32(t.astype("<i8").tobytes())
     crc = zlib.crc32(v.astype("<i8").tobytes(), crc)
     if crc != chunk["checksum"]:

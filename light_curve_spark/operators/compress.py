@@ -32,11 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from light_curve_spark.kernels.compression import decode_timestamps
-
-# the chunk table's one value codec: block-envelope XOR windows (see
-# kernels.compression.encode_values_blocked), vectorized both ways
-CHUNK_CODEC = "xor-blocked"
+from light_curve_spark.kernels.compression import CHUNK_CODEC, decode_timestamps
 
 CHUNK_SCHEMA = StructType(
     [

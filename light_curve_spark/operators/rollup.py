@@ -527,46 +527,6 @@ def rollup_distinct(
     )
 
 
-def rollup_quantiles_approx(
-    series: DataFrame,
-    keys: list[str] | None = None,
-    base_width: float = 16.0,
-    tiers: tuple[int, ...] = (1, 10, 100),
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Sketch-based per-tier quantiles: ``percentile_approx`` (Greenwald-
-    Khanna) instead of exact recompute-from-raw — the scale option when
-    the exactness gate is not required: one pass per tier with a bounded-
-    memory mergeable sketch (RANK error <= n/accuracy), no full re-sort
-    of raw points. Output: (key..., tier, bucket, p25, p50, p75).
-
-    Measured at stress scale (BENCH.md round-3 appendix, 61M tokens):
-    6.4x faster than the relational exact path, 2.6x faster than the
-    zero-shuffle array kernel; with per-bucket n << accuracy the sketch
-    is rank-EXACT (every odd-count bucket matched the exact median to
-    the bit). The residual deviation is definitional, not sketch error:
-    GK returns an order statistic, while the exact median averages the
-    two middles on even counts — on widely-spaced values that gap is
-    data-dependent (mean ~5.5% of the median scale on uniform tokens),
-    NOT bounded by the value quantization. No oracle (the sketch is
-    engine-specific); accuracy vs the exact path is bounded in tests."""
-    keys = keys or ["doc_id", "source"]
-    out = None
-    for t in tiers:
-        tier_df = (
-            series.withColumn("bucket", bucketize("t", base_width * t))
-            .groupBy(*keys, "bucket")
-            .agg(
-                F.percentile_approx("v", 0.25, accuracy).alias("p25"),
-                F.percentile_approx("v", 0.5, accuracy).alias("p50"),
-                F.percentile_approx("v", 0.75, accuracy).alias("p75"),
-            )
-            .withColumn("tier", F.lit(t))
-        )
-        out = tier_df if out is None else out.unionByName(tier_df)
-    return out.select(*keys, "tier", "bucket", "p25", "p50", "p75")
-
-
 def rollup_quantiles(
     series: DataFrame,
     keys: list[str] | None = None,

@@ -6,10 +6,6 @@
   plan, so the scan is a single map + TakeOrdered (no shuffle at all —
   Spark's top-k physical operator takes k per partition then merges on
   the driver).
-- :func:`cosine_topk_pandas` — the same computation as an Arrow-batched
-  pandas UDF doing one numpy matrix-vector product per batch. Faster per
-  row for wide vectors (SIMD beats codegen'd per-element loops); used by
-  bench to pick the winner.
 - :func:`lsh_ann_topk` — the scale path: random-hyperplane LSH. Vectors
   are bucketed by the sign pattern of ``n_planes`` seeded hyperplanes
   (deterministic, splitmix64-derived, so bucketing is reproducible
@@ -57,39 +53,6 @@ def cosine_topk(
         .orderBy(F.desc("cosine"), id_col)
         .limit(k)
     )
-
-
-def cosine_topk_pandas(
-    emb: DataFrame,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Same semantics, vectorized kernel path: one (batch × dim) @ dim
-    matvec per Arrow batch."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    q = np.asarray(query, dtype=np.float64)
-    qn = np.sqrt(q @ q)
-    schema = StructType(
-        [StructField(id_col, LongType(), False), StructField("cosine", DoubleType(), True)]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.shape[0] == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_list()).astype(np.float64)
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            cos = (mat @ q) / (norms * qn)
-            yield pd.DataFrame({id_col: pdf[id_col], "cosine": cos})
-
-    scored = emb.select(id_col, vec_col).mapInPandas(fn, schema=schema)
-    return scored.orderBy(F.desc("cosine"), id_col).limit(k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:

@@ -1,10 +1,10 @@
-"""Fold-to-snapshot compaction for the stream pipelines' append-only
-state (round-5 verdict item 1).
+"""Fold-to-snapshot compaction for the append-only state of the stream
+document pipeline and the incremental indexes (round-5 verdict item 1).
 
 Every delivery of :func:`~light_curve_spark.streaming.documents.
-run_stream_document_pipeline` (and :func:`run_stream_dedup`) appends one
-snapshot per touched table — ``_index`` / ``_labels`` / ``_pairs*`` /
-``_attrs`` / ``_contam_matches`` / ``_gramdf`` — forever. Each table's
+run_stream_document_pipeline` appends one snapshot per touched table —
+``_index`` / ``_labels`` / ``_pairs*`` / ``_attrs`` /
+``_contam_matches`` / ``_gramdf`` — forever. Each table's
 CONTENT is footprint-bounded (eval-bounded evidence, one row per doc),
 but the READ cost grows with delivery count: ``read_document_status``
 unions every snapshot directory and ``.distinct()``s the full history on
@@ -54,13 +54,14 @@ def _carry_config(storage, table: str) -> dict:
 
 
 def compact_stream_state(storage, prefix: str = "dpx") -> dict:
-    """Compact every persisted table of a stream pipeline run (document
-    pipeline or plain stream dedup) under ``prefix`` into one snapshot
-    each. Safe to run between deliveries at any time; returns
-    ``{table: {"snapshots_before": n, "rows": m}}`` for the tables that
-    existed. NOT safe concurrently with an in-flight delivery writing
-    the same prefix (the replace would race the append) — run it where
-    a real deployment would: between ``availableNow`` drains.
+    """Compact every persisted table of a stream document pipeline run
+    (or of a standalone incremental MinHash/embedding index) under
+    ``prefix`` into one snapshot each. Safe to run between deliveries at
+    any time; returns ``{table: {"snapshots_before": n, "rows": m}}``
+    for the tables that existed. NOT safe concurrently with an in-flight
+    delivery writing the same prefix (the replace would race the
+    append) — run it where a real deployment would: between
+    ``availableNow`` drains.
 
     Tombstoned documents (:func:`~light_curve_spark.streaming.documents
     .tombstone_documents`) are PHYSICALLY ERASED here: every row of an
@@ -91,14 +92,12 @@ def compact_stream_state(storage, prefix: str = "dpx") -> dict:
         columns the table has."""
         if tombs is None:
             return df
-        single = [c for c in ("doc_id", "_id", "train_id") if c in df.columns]
-        pair = [
+        cols = [
             c
-            for a, b in (("doc_a", "doc_b"), ("id_a", "id_b"))
-            if a in df.columns
-            for c in (a, b)
+            for c in ("doc_id", "_id", "train_id", "doc_a", "doc_b")
+            if c in df.columns
         ]
-        for c in single + pair:
+        for c in cols:
             df = df.join(
                 F.broadcast(tombs.withColumnRenamed("doc_id", c)),
                 c,

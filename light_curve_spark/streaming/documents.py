@@ -1,23 +1,26 @@
 """Structured Streaming ingest for the documents path: arriving doc
-files fold into the persisted MinHash index incrementally.
+files fold into persisted corpus state, and keep/drop is derived from
+that state at read time.
 
-The batch operator (:func:`~light_curve_spark.operators.dedup.
-incremental_minhash_pairs`) already IS the incremental posture —
-signatures mined once per doc, bands equi-joined against the stored
-index. This module is the thin streaming harness around it:
+:func:`run_stream_document_pipeline` is a thin streaming harness —
 ``readStream`` over a document directory, ``foreachBatch`` folding each
-micro-batch, ``availableNow`` draining everything not yet seen.
+micro-batch, ``availableNow`` draining everything not yet seen — around
+the incremental operators: per-doc attributes and content digest,
+the persisted MinHash index (:func:`~light_curve_spark.operators.dedup.
+incremental_minhash_pairs`), one label forest over exact-digest and
+near-dup edges, the semantic embedding index and contamination
+evidence. :func:`read_document_status` turns the current state into the
+batch pipeline's kept set; :func:`tombstone_documents` deletes docs.
 
 Exactly-once composition (the round-4 idempotency work is what makes
 this sound): Spark's stream checkpoint prevents re-processing in the
 COMMON case, but ``foreachBatch`` re-delivers a batch whose side
 effects completed when the driver dies before the checkpoint commit.
-Here a re-delivered batch is harmless twice over — the index append is
-a NO-OP (content-derived ``batch_id`` already folded) and the pairs
-table carries the same ``batch_id``, so :func:`read_stream_pairs`
-drops the duplicate delivery on read. No distributed transaction
-needed; idempotent operators make at-least-once delivery exactly-once
-in effect.
+Here a re-delivered batch is harmless: every per-batch append is
+stamped with the batch's content-derived ``batch_id`` and skipped when
+the table's manifest already holds it, and the label fold re-reads the
+same committed edge rows. No distributed transaction needed; idempotent
+operators make at-least-once delivery exactly-once in effect.
 """
 
 from __future__ import annotations
@@ -38,102 +41,6 @@ _SCOPED_UNIONFIND_MAX = 200_000
 # keeps the stored _pb): _pb is only prunable if every writer used the
 # SAME modulus, so this is deliberately not a tunable
 ATTRS_PARTITIONS = 16
-
-
-def run_stream_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    input_schema,
-    storage,
-    checkpoint_dir: str,
-    prefix: str = "mh",
-    pairs_table: str | None = None,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    tokens_col: str | None = None,
-    with_clusters: bool = False,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """One ``availableNow`` pass: fold every not-yet-seen document file
-    under ``input_dir`` into the ``{prefix}_index`` MinHash index and
-    append each batch's discovered near-dup pairs (tagged with the
-    content batch id) to ``{prefix}_pairs``. Returns after the trigger
-    drains. The union of pairs over any arrival order equals the
-    one-shot :func:`~light_curve_spark.operators.dedup.
-    minhash_lsh_pairs` on the full corpus (tested).
-
-    ``with_clusters=True`` additionally folds each batch's pairs into
-    the persisted ``{prefix}_labels`` cluster table
-    (:func:`~light_curve_spark.operators.dedup.
-    incremental_dedup_clusters`) — streaming-maintained connected
-    components whose current state always equals one-shot CC over every
-    pair discovered so far; read with ``storage.read_snapshot``.
-    Re-delivery safe: the fold is a pure function of (labels, pairs)."""
-    from light_curve_spark.operators.dedup import (
-        _content_batch_id,
-        incremental_dedup_clusters,
-        incremental_minhash_pairs,
-    )
-    from light_curve_spark.plans.caching import cache_scope
-
-    out_table = pairs_table or f"{prefix}_pairs"
-
-    def fold(batch_df: DataFrame, _batch_no: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with cache_scope():
-            # tokens-native streams derive identity + grams from the
-            # tokens column; no text needed anywhere in the fold
-            cid = _content_batch_id(batch_df, tokens_col or text_col)
-            pairs = incremental_minhash_pairs(
-                storage,
-                batch_df,
-                prefix=prefix,
-                n=n,
-                num_hashes=num_hashes,
-                bands=bands,
-                threshold=threshold,
-                text_col=text_col,
-                tokens_col=tokens_col,
-                batch_id=cid,
-            )
-            storage.append(
-                pairs.withColumn("batch_id", F.lit(cid)),
-                out_table,
-                meta={"batch_id": cid},
-            )
-            if with_clusters:
-                incremental_dedup_clusters(
-                    storage, pairs, table=f"{prefix}_labels"
-                )
-        # scope exit releases the pairs cache incremental_minhash_pairs
-        # promoted — its output is already durable in out_table
-
-    reader = spark.readStream.schema(input_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(input_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fold)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_stream_pairs(storage, prefix: str = "mh") -> DataFrame:
-    """All near-dup pairs discovered so far: (doc_a, doc_b, jaccard).
-    ``distinct`` collapses crash-window re-deliveries (same batch_id,
-    identical deterministic rows)."""
-    return (
-        storage.read(f"{prefix}_pairs")
-        .select("doc_a", "doc_b", "jaccard")
-        .distinct()
-    )
 
 
 def run_stream_document_pipeline(

@@ -1,7 +1,7 @@
 """ANN stress bench (round-3 verdict item 2): recall/wall curves for
 the two approximate-nearest-neighbor paths (`lsh_ann_topk`,
 `ivf_ann_topk`) at >=1M vectors, vs the exact brute-force truth
-(`cosine_topk_pandas`), plus growth at 2x vectors.
+(`cosine_topk`), plus growth at 2x vectors.
 
 Corpus: deterministic synthetic embeddings, dim 64, float32 —
 - 80% clustered: 256 unit centers (splitmix64 directions), member =
@@ -116,7 +116,6 @@ def main() -> None:
     from light_curve_spark.operators.similarity import (
         _hyperplanes,
         cosine_topk,
-        cosine_topk_pandas,
         ivf_ann_topk,
         ivf_assign,
         lsh_ann_topk,
@@ -156,7 +155,7 @@ def main() -> None:
         t0 = time.time()
         truth = []
         for q in queries:
-            rows = cosine_topk_pandas(emb, list(q), k=k).collect()
+            rows = cosine_topk(emb, list(q), k=k).collect()
             truth.append({r.vec_id for r in rows})
         res["brute_force"] = {
             "wall_per_query_s": round((time.time() - t0) / len(queries), 2)

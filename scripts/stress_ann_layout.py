@@ -36,7 +36,6 @@ def main() -> None:
 
     from light_curve_spark.operators.similarity import (
         cosine_topk,
-        cosine_topk_pandas,
         read_ivf_probe,
         train_ivf_centroids,
         write_ivf_partitioned,
@@ -85,7 +84,7 @@ def main() -> None:
     truth = []
     for q in queries:
         truth.append(
-            {r.vec_id for r in cosine_topk_pandas(emb, list(q), k=k).collect()}
+            {r.vec_id for r in cosine_topk(emb, list(q), k=k).collect()}
         )
     res["brute_force_wall_per_query_s"] = round(
         (time.time() - t0) / len(queries), 2

@@ -39,7 +39,7 @@ from stress_ann import DIM, _queries, synth_embeddings  # noqa: E402
 def main() -> None:
     from light_curve_spark.operators.similarity import (
         append_ivf_partitioned,
-        cosine_topk_pandas,
+        cosine_topk,
         ivf_quantization_stats,
         read_ivf_probe,
         train_ivf_centroids,
@@ -98,11 +98,11 @@ def main() -> None:
         scanned_frac.append(probed.count() / n_grown)
         approx = {
             r.vec_id
-            for r in cosine_topk_pandas(probed, ql, k=k).collect()
+            for r in cosine_topk(probed, ql, k=k).collect()
         }
         exact = {
             r.vec_id
-            for r in cosine_topk_pandas(
+            for r in cosine_topk(
                 grown.select("vec_id", "embedding"), ql, k=k
             ).collect()
         }

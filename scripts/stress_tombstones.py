@@ -51,7 +51,7 @@ from stress_emb_lsh import THRESHOLD, planted_truth, synth_corpus  # noqa: E402
 
 def _probe_pass(spark, layout, queries, k, nprobe):
     from light_curve_spark.operators.similarity import (
-        cosine_topk_pandas,
+        cosine_topk,
         read_ivf_probe,
     )
 
@@ -61,7 +61,7 @@ def _probe_pass(spark, layout, queries, k, nprobe):
         ql = [float(x) for x in q]
         probed = read_ivf_probe(spark, layout, None, ql, nprobe=nprobe)
         got.append(
-            {r.vec_id for r in cosine_topk_pandas(probed, ql, k=k).collect()}
+            {r.vec_id for r in cosine_topk(probed, ql, k=k).collect()}
         )
     return got, time.time() - t0
 

@@ -254,91 +254,6 @@ def test_ivf_partitioned_layout_prunes_at_source(spark, tmp_path):
     assert top_pruned == top_full
 
 
-def test_stream_dedup_matches_one_shot(spark, tmp_path):
-    """Documents arriving as stream files fold into the MinHash index;
-    pairs accumulated over arrivals == one-shot minhash_lsh_pairs, a
-    later arrival adds its cross pairs, and a no-new-data pass changes
-    nothing (stream checkpoint + idempotent batch ids)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from light_curve_spark.operators.dedup import minhash_lsh_pairs
-    from light_curve_spark.plans.caching import release_operator_caches
-    from light_curve_spark.sources.catalog import ParquetSnapshotStorage
-    from light_curve_spark.streaming.documents import (
-        read_stream_pairs,
-        run_stream_dedup,
-    )
-
-    rows = []
-    for i in range(15):
-        base = " ".join(f"w{i}_{j}" for j in range(30))
-        rows.append((2 * i, base))
-        rows.append((2 * i + 1, base.replace(f"w{i}_7 ", "xx ")))  # partner
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("text", StringType(), True),
-        ]
-    )
-
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    storage = ParquetSnapshotStorage(spark, str(tmp_path / "idx"))
-    # batch 1: evens; batch 2: odds -> every planted pair is cross-batch
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        in_dir + "/b1"
-    )
-    run_stream_dedup(spark, in_dir + "/*", schema, storage, ckpt,
-                     with_clusters=True)
-    assert read_stream_pairs(storage).count() == 0  # partners not arrived yet
-
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        in_dir + "/b2"
-    )
-    run_stream_dedup(spark, in_dir + "/*", schema, storage, ckpt,
-                     with_clusters=True)
-    got = {
-        (r.doc_a, r.doc_b): round(r.jaccard, 9)
-        for r in read_stream_pairs(storage).collect()
-    }
-    one_shot = {
-        (r.doc_a, r.doc_b): round(r.jaccard, 9)
-        for r in minhash_lsh_pairs(docs, threshold=0.5).collect()
-    }
-    release_operator_caches()
-    assert got == one_shot and got
-
-    # drained stream: nothing new to process, nothing changes
-    n_idx = storage.read("mh_index").count()
-    n_pairs_rows = storage.read("mh_pairs").count()
-    run_stream_dedup(spark, in_dir + "/*", schema, storage, ckpt)
-    assert storage.read("mh_index").count() == n_idx
-    assert storage.read("mh_pairs").count() == n_pairs_rows
-    assert {
-        (r.doc_a, r.doc_b): round(r.jaccard, 9)
-        for r in read_stream_pairs(storage).collect()
-    } == one_shot
-
-    # streaming-maintained clusters == one-shot CC over one-shot pairs
-    from light_curve_spark.operators.dedup import dedup_clusters
-
-    one_shot_pairs_df = spark.createDataFrame(
-        pd.DataFrame(
-            [(a, b) for (a, b) in one_shot], columns=["doc_a", "doc_b"]
-        )
-    )
-    ref_labels = {
-        r.doc_id: r.keep_id for r in dedup_clusters(one_shot_pairs_df).collect()
-    }
-    got_labels = {
-        r.doc_id: r.keep_id
-        for r in storage.read_snapshot("mh_labels").collect()
-    }
-    release_operator_caches()
-    assert got_labels == ref_labels and got_labels
-
-
 def test_approx_weighted_simhash_rate1_matches_scalar_reference(spark):
     """Close the triangle independently of the exact Spark kernel: the
     sampled-df kernel at rate 1.0 must equal the naive scalar reference
@@ -552,3 +467,54 @@ def test_stream_document_pipeline_matches_batch_kept_set(spark, tmp_path):
     # attribution: dup collapses exact+clusters; others match by name
     assert status[100] == "dup" and status[111] == "dup"
     assert status[120] == "contamination" and status[130] == "filters"
+
+    # the folded edge set == one-shot near-dup pairs + same-digest pairs
+    from light_curve_spark.operators.dedup import (
+        dedup_clusters,
+        minhash_lsh_pairs,
+    )
+
+    got_edges = {
+        (r.doc_a, r.doc_b)
+        for r in storage.read("dpx_pairs")
+        .select("doc_a", "doc_b").distinct().collect()
+    }
+    by_norm = {}
+    for d, t in _pipeline_corpus().itertuples(index=False):
+        by_norm.setdefault(" ".join(t.lower().split()), []).append(d)
+    digest_edges = {
+        (a, b) for ids in by_norm.values() for a in ids for b in ids if a < b
+    }
+    mh_edges = {
+        (r.doc_a, r.doc_b)
+        for r in minhash_lsh_pairs(
+            docs, n=3, num_hashes=16, bands=4, threshold=0.5
+        ).collect()
+    }
+    release_operator_caches()
+    assert digest_edges == {(0, 100), (1, 101)}
+    assert got_edges == mh_edges | digest_edges
+
+    # the stream-maintained label forest == one-shot CC over those edges
+    ref_labels = {
+        r.doc_id: r.keep_id
+        for r in dedup_clusters(
+            spark.createDataFrame(sorted(got_edges), ["doc_a", "doc_b"])
+        ).collect()
+    }
+    got_labels = {
+        r.doc_id: r.keep_id
+        for r in storage.read_snapshot("dpx_labels").collect()
+    }
+    release_operator_caches()
+    assert got_labels == ref_labels and got_labels
+
+    # drained stream: a further run with no new files appends nothing
+    n_snaps = {t: len(storage.snapshots(t)) for t in ("dpx_index", "dpx_pairs")}
+    run_stream_document_pipeline(
+        spark, in_dir + "/*", schema, storage, ckpt, eval_docs=ev
+    )
+    release_operator_caches()
+    assert {
+        t: len(storage.snapshots(t)) for t in ("dpx_index", "dpx_pairs")
+    } == n_snaps

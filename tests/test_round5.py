@@ -837,56 +837,6 @@ def test_simhash_tokens_native_matches_scalar_ref(spark):
         simhash_dedup(docs, tokens_col="tokens", weighted=True)
 
 
-def test_stream_dedup_tokens_native(spark, tmp_path):
-    """run_stream_dedup over a pre-tokenized stream (tokens_col) — the
-    drained pair set equals one-shot tokens-path minhash_lsh_pairs."""
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from light_curve_spark.operators.dedup import minhash_lsh_pairs
-    from light_curve_spark.sources.catalog import ParquetSnapshotStorage
-    from light_curve_spark.streaming.documents import (
-        read_stream_pairs,
-        run_stream_dedup,
-    )
-
-    rows = _token_corpus()
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("tokens", ArrayType(IntegerType(), True), True),
-        ]
-    )
-    docs = spark.createDataFrame(
-        [(int(i), t) for i, t in rows], schema
-    )
-    want = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(docs, n=3, tokens_col="tokens").collect()
-    }
-
-    in_dir = str(tmp_path / "in")
-    storage = ParquetSnapshotStorage(spark, str(tmp_path / "st"))
-    for k in (0, 1):
-        docs.filter(F.col("doc_id") % 2 == k).coalesce(1).write.parquet(
-            f"{in_dir}/b{k}"
-        )
-        run_stream_dedup(
-            spark, in_dir + "/*", schema, storage,
-            str(tmp_path / "ck"), prefix="tks", n=3, tokens_col="tokens",
-        )
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in read_stream_pairs(storage, prefix="tks").collect()
-    }
-    assert got == want and want
-
-
 def test_stream_pipeline_checkpoint_loss_redelivery_is_idempotent(
     spark, tmp_path
 ):

@@ -281,6 +281,26 @@ def test_encode_chunks_lineage_columns(spark, seq100):
     assert all(r._pid >= 0 for r in rows)
 
 
+def test_kernel_decode_chunk_reads_chunk_table_rows(spark):
+    """kernels.decode_chunk is the single-row form of decode_chunks:
+    every chunk-table row, split outliers included, decodes to its own
+    global positions and token slice."""
+    from light_curve_spark.kernels import decode_chunk
+
+    max_len = 512
+    seq = synthetic_sequences(spark, 50, seed=7)
+    orig = {r.doc_id: r.tokens for r in seq.collect()}
+    rows = encode_chunks(seq, max_len=max_len).collect()
+    assert {r.doc_id for r in rows} == set(orig)
+    assert any(r.chunk_no > 0 for r in rows)  # split outliers present
+    for r in rows:
+        t, v = decode_chunk(r.asDict())
+        off = r.chunk_no * max_len
+        want = orig[r.doc_id][off : off + max_len]
+        assert t.tolist() == list(range(off, off + len(want))), r.doc_id
+        assert v.tolist() == want, (r.doc_id, r.chunk_no)
+
+
 def test_validate_series_rejects_nan_and_null(spark):
     import math
 
@@ -622,40 +642,3 @@ def test_sessionize_gap_semantics(spark):
     assert out[("a", 30.0)] == 2
     assert out[("b", 0.0)] == 0  # sessions are per key
 
-
-def test_rollup_quantiles_approx_bounds_error(spark, seq100):
-    """The sketch path (scale option) must land within rank-error bounds
-    of the exact median: with accuracy >> bucket sizes it is exact on
-    this data."""
-    from light_curve_spark.operators.rollup import (
-        rollup_quantiles,
-        rollup_quantiles_approx,
-    )
-    from light_curve_spark.operators.series import explode_series
-
-    series = explode_series(seq100)
-    exact = {
-        (r.doc_id, r.tier, r.bucket): r.v_median
-        for r in rollup_quantiles(series, base_width=16).collect()
-    }
-    approx = {
-        (r.doc_id, r.tier, r.bucket): r.p50
-        for r in rollup_quantiles_approx(series, base_width=16).collect()
-    }
-    assert set(exact) == set(approx)
-    # GK at this accuracy is rank-exact: it returns a real element at
-    # the median rank, while the exact path interpolates between the two
-    # middles — so the sketch must sit inside the exact IQR envelope and
-    # within half the bucket's value range of the exact median
-    from light_curve_spark.operators.rollup import rollup_tiers
-
-    spans = {
-        (r.doc_id, r.tier, r.bucket): (r.v_min, r.v_max)
-        for r in rollup_tiers(
-            series, keys=["doc_id", "source"], base_width=16
-        ).collect()
-    }
-    for k, med in exact.items():
-        lo, hi = spans[k]
-        assert lo <= approx[k] <= hi
-        assert abs(approx[k] - med) <= (hi - lo) / 2 + 1e-9

@@ -76,7 +76,7 @@ def test_simhash_identical_docs_zero_hamming(spark, docs):
 
 
 def test_cosine_topk_matches_numpy(spark):
-    from light_curve_spark.operators.similarity import cosine_topk, cosine_topk_pandas
+    from light_curve_spark.operators.similarity import cosine_topk
 
     rng = np.random.default_rng(4)
     vecs = rng.normal(size=(50, 16)).astype(np.float32)
@@ -93,8 +93,6 @@ def test_cosine_topk_matches_numpy(spark):
     order = np.argsort(-cos)[:5]
     assert [g[0] for g in got] == order.tolist()
     np.testing.assert_allclose([g[1] for g in got], cos[order], rtol=1e-12)
-    got_pd = [(r.vec_id, r.cosine) for r in cosine_topk_pandas(emb, q, k=5).collect()]
-    assert [g[0] for g in got_pd] == order.tolist()
 
 
 def test_lsh_ann_recall(spark):
