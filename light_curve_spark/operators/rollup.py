@@ -3,21 +3,20 @@
 north_rule: "rolls them into continuous aggregates at 1x/10x/100x
 retention tiers". A tier-T bucket is ``floor(t / (base_width * T))``.
 
-Cascade discipline (SURVEY.md §2.5): coarser tiers are computed FROM the
-next-finer tier's partials — sum-of-sums, min-of-mins, max-of-maxs,
-count-of-counts — never by re-scanning raw data. At 100 TB this is the
-difference between one raw scan plus two tiny shuffles and three raw
-scans; it is also exactly Spark's partial/final aggregate shape, so each
-cascade step is a single hash-aggregate exchange that AQE coalesces.
+One aggregate for every tier (SURVEY.md §2.5): tiers nest — base bucket
+``b`` lies in bucket ``b // (T / tiers[0])`` at tier ``T`` — so the raw
+series is aggregated ONCE into base-tier partials, each partial is
+expanded to one row per tier (:func:`_expand_tiers`) and one
+``groupBy(keys, tier, bucket)`` takes sum-of-sums, min-of-mins,
+max-of-maxs, count-of-counts: one raw shuffle plus one shuffle of the
+partials whatever the number of tiers, and nothing persisted.
 
-Non-decomposable statistics (median, MAD) cannot cascade; policy is
-recompute-from-raw per tier (:func:`rollup_quantiles`) — exactness beats
-sketches for the golden-parity gate (SURVEY.md §7 phase 4).
+Non-decomposable statistics (median, MAD) cannot fold from partials;
+policy is recompute-from-raw (:func:`rollup_quantiles`) — exactness
+beats sketches for the golden-parity gate (SURVEY.md §7 phase 4).
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -26,6 +25,36 @@ from pyspark.sql import functions as F
 from light_curve_spark.functions import bucketize
 
 ROLLUP_AGG_COLS = ("n_points", "v_sum", "v_min", "v_max")
+
+
+def _check_tiers(tiers) -> None:
+    """The one plan-time tier check: a non-empty tuple of positive ints,
+    strictly ascending, each a multiple of its predecessor (so the tiers
+    nest; a repeated tier would double-count every bucket)."""
+    ok = isinstance(tiers, tuple) and tiers and all(
+        type(t) is int and t > 0 for t in tiers
+    )
+    if not ok or any(t <= p or t % p for p, t in zip(tiers, tiers[1:])):
+        raise ValueError(
+            "tiers must be a non-empty tuple of positive ints, ascending, "
+            f"each a multiple of the one before; got {tiers!r}"
+        )
+
+
+def _expand_tiers(
+    base: DataFrame, cols: list[str], base_tier: int, tiers: tuple[int, ...]
+) -> DataFrame:
+    """The nesting rule: each base-tier row (``cols`` plus ``bucket``)
+    becomes one row per tier ``T`` in ``tiers``, carrying ``tier`` and
+    ``bucket = floor(base_bucket / (T // base_tier))``."""
+    per_tier = [
+        F.struct(
+            F.lit(t).alias("tier"),
+            F.floor(F.col("bucket") / F.lit(t // base_tier)).alias("bucket"),
+        )
+        for t in tiers
+    ]
+    return base.select(*cols, F.inline(F.array(*per_tier)))
 
 
 def _int_width(base_width) -> int:
@@ -54,73 +83,37 @@ def _flat_token_segments(b):
     return flat, lengths, starts, elem, pos
 
 
-def _base_rollup(series: DataFrame, keys: list[str], width: float) -> DataFrame:
-    return series.groupBy(
-        *keys, bucketize("t", width).alias("bucket")
+def rollup_tiers(
+    series: DataFrame,
+    keys: list[str] | None = None,
+    base_width: float = 16.0,
+    tiers: tuple[int, ...] = (1, 10, 100),
+) -> DataFrame:
+    """(key..., tier, bucket, n_points, v_sum, v_min, v_max, v_mean) for
+    every retention tier (``tiers``: see :func:`_check_tiers`). One base
+    aggregate at width ``base_width * tiers[0]``, expanded to every tier,
+    then one ``groupBy(keys, tier, bucket)``: the coarser tiers come from
+    the base partials in the same aggregate, and nothing is persisted."""
+    _check_tiers(tiers)
+    keys = keys or ["doc_id", "source"]
+    base = series.groupBy(
+        *keys, bucketize("t", base_width * tiers[0]).alias("bucket")
     ).agg(
         F.count("v").alias("n_points"),
         F.sum("v").alias("v_sum"),
         F.min("v").alias("v_min"),
         F.max("v").alias("v_max"),
     )
-
-
-def _cascade(finer: DataFrame, keys: list[str], factor: int) -> DataFrame:
-    """One cascade step: partials of partials, no raw re-scan."""
-    return finer.groupBy(
-        *keys,
-        F.floor(F.col("bucket") / F.lit(factor)).alias("bucket"),
-    ).agg(
-        F.sum("n_points").alias("n_points"),
-        F.sum("v_sum").alias("v_sum"),
-        F.min("v_min").alias("v_min"),
-        F.max("v_max").alias("v_max"),
-    )
-
-
-def rollup_tiers(
-    series: DataFrame,
-    keys: list[str] | None = None,
-    base_width: float = 16.0,
-    tiers: tuple[int, ...] = (1, 10, 100),
-    persist_intermediate: bool = True,
-) -> DataFrame:
-    """(key..., tier, bucket, n_points, v_sum, v_min, v_max, v_mean) for
-    every retention tier, cascaded. ``tiers`` must be ascending and each
-    divisible by its predecessor.
-
-    ``persist_intermediate`` caches each finer tier so the physical plan
-    scans the raw series ONCE: without it, the union's three branches
-    each recompute their full lineage (3 raw scans + 6 exchanges at 3
-    tiers — verified in PLANS.md). Cached partials are tiny relative to
-    raw (1/base_width per tier); they are registered in the session-scoped
-    cache registry — call plans.caching.release_operator_caches() at a
-    batch boundary to unpersist (the pipeline does)."""
-    from light_curve_spark.plans.caching import cached
-
-    keys = keys or ["doc_id", "source"]
-    tiered: list[DataFrame] = []
-    cur = _base_rollup(series, keys, base_width * tiers[0])
-    if persist_intermediate and len(tiers) > 1:
-        cur = cached(cur)
-    tiered.append(cur.withColumn("tier", F.lit(tiers[0])))
-    for i, (prev_t, t) in enumerate(zip(tiers, tiers[1:])):
-        if t % prev_t != 0:
-            raise ValueError(f"tier {t} not a multiple of {prev_t}")
-        cur = _cascade(cur, keys, t // prev_t)
-        if persist_intermediate and i < len(tiers) - 2:
-            cur = cached(cur)
-        tiered.append(cur.withColumn("tier", F.lit(t)))
-    out = reduce(lambda a, b: a.unionByName(b), tiered)
-    return out.select(
-        *keys,
-        "tier",
-        "bucket",
-        "n_points",
-        "v_sum",
-        "v_min",
-        "v_max",
-        (F.col("v_sum") / F.col("n_points")).alias("v_mean"),
+    return (
+        _expand_tiers(base, [*keys, *ROLLUP_AGG_COLS], tiers[0], tiers)
+        .groupBy(*keys, "tier", "bucket")
+        .agg(
+            F.sum("n_points").alias("n_points"),
+            F.sum("v_sum").alias("v_sum"),
+            F.min("v_min").alias("v_min"),
+            F.max("v_max").alias("v_max"),
+        )
+        .withColumn("v_mean", F.col("v_sum") / F.col("n_points"))
     )
 
 
@@ -149,8 +142,10 @@ def retract_from_rollup(
       affected buckets (the 100 TB posture: the raw rescan is bounded
       by the delete's bucket footprint, and partition pruning on time
       keeps it to those ranges); every coarser tier recomputes from the
-      already-ADJUSTED base-tier partials, never from raw — a tier-T
-      extremum is the min/max over its surviving tier-1 children.
+      already-FIXED base-tier partials, never from raw — one expansion
+      of them to the coarser tiers, semi-joined to every affected
+      ``(tier, bucket)``, and one min/max aggregate (a tier-T extremum
+      is the min/max over its surviving base-tier children).
 
     ``rollup`` must carry the ``rollup_tiers`` row shape (a ``v_mean``
     column is ignored and re-derived); ``retained`` is the raw series
@@ -168,24 +163,15 @@ def retract_from_rollup(
     the oracle's 1e-6 rounding unless a delete cancels nearly all of a
     large-magnitude bucket); deployments deleting most of a high-|sum|
     bucket should re-roll those buckets from raw instead."""
-    from light_curve_spark.plans.caching import cached
-
+    _check_tiers(tiers)
     keys = keys or ["doc_id", "source"]
     on = [*keys, "tier", "bucket"]
-    # persist_intermediate=False (round 7): the deleted-rows rollup is
-    # small by construction (a delete's footprint), so re-deriving its
-    # cascade branches from the base aggregate is cheaper than the two
-    # blocking cache-materialization stages the default would insert —
-    # measured 18 s -> 11 s on the cold sf1.0 retraction query
-    d = (
-        rollup_tiers(deleted, keys, base_width, tiers, persist_intermediate=False)
-        .select(
-            *on,
-            F.col("n_points").alias("_dn"),
-            F.col("v_sum").alias("_dsum"),
-            F.col("v_min").alias("_dmin"),
-            F.col("v_max").alias("_dmax"),
-        )
+    d = rollup_tiers(deleted, keys, base_width, tiers).select(
+        *on,
+        F.col("n_points").alias("_dn"),
+        F.col("v_sum").alias("_dsum"),
+        F.col("v_min").alias("_dmin"),
+        F.col("v_max").alias("_dmax"),
     )
     adj = (
         rollup.drop("v_mean")
@@ -205,9 +191,7 @@ def retract_from_rollup(
         )
         .filter(F.col("n_points") > 0)
     )
-    # consumed once per tier below plus the recompute prunes — cache so
-    # the rollup/deleted join runs once (session-scoped registry)
-    adj = cached(adj)
+    affected = adj.filter(F.col("_remin") | F.col("_remax")).select(*on)
 
     def _fix(tier_df: DataFrame, re_df: DataFrame) -> DataFrame:
         """Swap recomputed extrema into the affected rows."""
@@ -224,46 +208,24 @@ def retract_from_rollup(
         )
 
     t1 = tiers[0]
-    aff1 = adj.filter(
-        (F.col("tier") == t1) & (F.col("_remin") | F.col("_remax"))
-    ).select(*keys, "bucket")
-    raw1 = retained.select(
-        *keys, bucketize("t", base_width * t1).alias("bucket"), "v"
-    ).join(aff1, [*keys, "bucket"], "left_semi")
+    base_tier = F.col("tier") == t1
     re1 = (
-        raw1.groupBy(*keys, "bucket")
+        retained.select(*keys, bucketize("t", base_width * t1).alias("bucket"), "v")
+        .join(affected.filter(base_tier).drop("tier"), [*keys, "bucket"], "left_semi")
+        .groupBy(*keys, "bucket")
         .agg(F.min("v").alias("_nmin"), F.max("v").alias("_nmax"))
         .withColumn("tier", F.lit(t1))
     )
-    fixed1 = cached(_fix(adj.filter(F.col("tier") == t1), re1))
-    out = [fixed1]
-    for t in tiers[1:]:
-        afft = adj.filter(
-            (F.col("tier") == t) & (F.col("_remin") | F.col("_remax"))
-        ).select(*keys, "bucket")
-        children = fixed1.select(
-            *keys,
-            F.floor(F.col("bucket") / F.lit(t // t1)).alias("bucket"),
-            "v_min",
-            "v_max",
-        ).join(afft, [*keys, "bucket"], "left_semi")
-        ret = (
-            children.groupBy(*keys, "bucket")
+    fixed = _fix(adj.filter(base_tier), re1)
+    if len(tiers) > 1:
+        re_coarse = (
+            _expand_tiers(fixed, [*keys, "v_min", "v_max"], t1, tiers[1:])
+            .join(affected.filter(~base_tier), on, "left_semi")
+            .groupBy(*on)
             .agg(F.min("v_min").alias("_nmin"), F.max("v_max").alias("_nmax"))
-            .withColumn("tier", F.lit(t))
         )
-        out.append(_fix(adj.filter(F.col("tier") == t), ret))
-    res = reduce(lambda a, b: a.unionByName(b), out)
-    return res.select(
-        *keys,
-        "tier",
-        "bucket",
-        "n_points",
-        "v_sum",
-        "v_min",
-        "v_max",
-        (F.col("v_sum") / F.col("n_points")).alias("v_mean"),
-    )
+        fixed = fixed.unionByName(_fix(adj.filter(~base_tier), re_coarse))
+    return fixed.withColumn("v_mean", F.col("v_sum") / F.col("n_points"))
 
 
 def rollup_tiers_arrays(
@@ -278,8 +240,8 @@ def rollup_tiers_arrays(
     shuffle 6M exploded points to co-locate data that is already
     co-located. Instead the whole 1x/10x/100x cascade runs inside one
     mapInPandas pass, segment-vectorized (reduceat over bucket
-    boundaries; coarser tiers reduce the finer tier's partials, same
-    cascade math as :func:`rollup_tiers`). ~25x fewer rows ever leave
+    boundaries; coarser tiers reduce the finer tier's partials, the
+    same nesting rule as :func:`rollup_tiers`). ~25x fewer rows ever leave
     the kernel, and none of them cross an exchange.
 
     At 100 TB this is the difference between the rollup being a free
@@ -313,10 +275,7 @@ def rollup_tiers_arrays(
     )
     out_names = [f.name for f in schema.fields]
 
-    for prev_t, t in zip(tiers, tiers[1:]):
-        if t % prev_t != 0:
-            raise ValueError(f"tier {t} not a multiple of {prev_t}")
-
+    _check_tiers(tiers)
     base_width = _int_width(base_width)
 
     def fn(batches):
@@ -422,6 +381,7 @@ def rollup_quantiles_arrays(
         ]
     )
 
+    _check_tiers(tiers)
     base_width = _int_width(base_width)
 
     def fn(batches):
@@ -479,14 +439,15 @@ def rollup_distinct(
     sketches: (key..., tier, bucket, n_distinct).
 
     Distinct counts are non-decomposable exactly but MERGEABLE as
-    sketches, so this follows the same cascade discipline as
+    sketches, so this follows the same one-aggregate shape as
     :func:`rollup_tiers`: the raw series is scanned ONCE into base-tier
-    ``hll_sketch_agg`` sketches; every coarser tier is
-    ``hll_union_agg`` over the next-finer tier's sketches (HLL union is
-    lossless for same-precision sketches, so the cascaded estimate
-    EQUALS the direct-aggregation estimate — pytest-asserted). At 100 TB
-    that is one raw shuffle plus tiny sketch-table shuffles, versus a
-    full re-shuffle of raw values per tier for exact count_distinct.
+    ``hll_sketch_agg`` sketches; base-tier rows keep their sketch as is,
+    and every coarser tier is one ``hll_union_agg`` over the base
+    sketches expanded to those tiers (HLL union is lossless for
+    same-precision sketches, so the unioned estimate EQUALS the
+    direct-aggregation estimate — pytest-asserted). At 100 TB that is
+    one raw shuffle plus one tiny sketch-table shuffle, versus a full
+    re-shuffle of raw values per tier for exact count_distinct.
 
     Determinism is regime-dependent (measured, tests/test_round3.py):
     in the sparse/coupon regime (per-bucket cardinality well under
@@ -497,28 +458,21 @@ def rollup_distinct(
     standard ~1.04/sqrt(2^lg_config_k) relative error and can shift by
     a few counts with input partitioning (partials cross the
     sparse->dense promotion at different points — a DataSketches HLL
-    property, not an engine bug). The cascade itself is lossless in
-    BOTH regimes: unioned sketches give the same estimate as direct
+    property, not an engine bug). The sketch union itself is lossless
+    in BOTH regimes: unioned sketches give the same estimate as direct
     aggregation."""
-    from light_curve_spark.plans.caching import cached
-
+    _check_tiers(tiers)
     keys = keys or []
-    cur = series.groupBy(
+    base = series.groupBy(
         *keys, bucketize("t", base_width * tiers[0]).alias("bucket")
     ).agg(F.hll_sketch_agg(distinct_col, F.lit(lg_config_k)).alias("_sk"))
+    out = base.select(*keys, F.lit(tiers[0]).alias("tier"), "bucket", "_sk")
     if len(tiers) > 1:
-        cur = cached(cur)
-    tiered = [cur.withColumn("tier", F.lit(tiers[0]))]
-    for i, (prev_t, t) in enumerate(zip(tiers, tiers[1:])):
-        if t % prev_t != 0:
-            raise ValueError(f"tier {t} not a multiple of {prev_t}")
-        cur = cur.groupBy(
-            *keys, F.floor(F.col("bucket") / F.lit(t // prev_t)).alias("bucket")
-        ).agg(F.hll_union_agg("_sk").alias("_sk"))
-        if i < len(tiers) - 2:
-            cur = cached(cur)
-        tiered.append(cur.withColumn("tier", F.lit(t)))
-    out = reduce(lambda a, b: a.unionByName(b), tiered)
+        out = out.unionByName(
+            _expand_tiers(base, [*keys, "_sk"], tiers[0], tiers[1:])
+            .groupBy(*keys, "tier", "bucket")
+            .agg(F.hll_union_agg("_sk").alias("_sk"))
+        )
     return out.select(
         *keys,
         "tier",
@@ -534,19 +488,22 @@ def rollup_quantiles(
     tiers: tuple[int, ...] = (1, 10, 100),
 ) -> DataFrame:
     """Exact median/MAD per tier bucket, recomputed from raw (the
-    non-decomposable companion to :func:`rollup_tiers`)."""
+    non-decomposable companion to :func:`rollup_tiers`): raw rows are
+    expanded once to every ``(tier, bucket)`` by the same nesting rule,
+    then one median aggregate, one join and one MAD aggregate."""
+    _check_tiers(tiers)
     keys = keys or ["doc_id", "source"]
-    out = None
-    for t in tiers:
-        bucketed = series.withColumn(
-            "bucket", bucketize("t", base_width * t)
-        )
-        med = bucketed.groupBy(*keys, "bucket").agg(F.median("v").alias("v_median"))
-        mad = (
-            bucketed.join(med, [*keys, "bucket"])
-            .groupBy(*keys, "bucket")
-            .agg(F.median(F.abs(F.col("v") - F.col("v_median"))).alias("v_mad"))
-        )
-        tier_df = med.join(mad, [*keys, "bucket"]).withColumn("tier", F.lit(t))
-        out = tier_df if out is None else out.unionByName(tier_df)
-    return out.select(*keys, "tier", "bucket", "v_median", "v_mad")
+    on = [*keys, "tier", "bucket"]
+    expanded = _expand_tiers(
+        series.select(*keys, "v", bucketize("t", base_width * tiers[0]).alias("bucket")),
+        [*keys, "v"],
+        tiers[0],
+        tiers,
+    )
+    med = expanded.groupBy(*on).agg(F.median("v").alias("v_median"))
+    return (
+        expanded.join(med, on)
+        .groupBy(*on, "v_median")
+        .agg(F.median(F.abs(F.col("v") - F.col("v_median"))).alias("v_mad"))
+        .select(*on, "v_median", "v_mad")
+    )

@@ -2,7 +2,7 @@
 
 The rollup partials (n_points, v_sum, v_min, v_max) form a commutative
 monoid, so folding a new snapshot into an existing rollup is a groupBy
-over the union of partials — identical math to the tier cascade
+over the union of partials — identical math to the one tier aggregate
 (operators/rollup.py), applied across TIME instead of across tiers.
 Per new Iceberg snapshot the scheduler runs
 
@@ -76,18 +76,15 @@ def incremental_rollup(
     The merged table is written whole (rollup tables are ~10^6x smaller
     than raw at tier 100); at true 10^12 scale the write switches to a
     MERGE INTO on (key, tier, bucket), which Iceberg supports natively.
-    The tier partials ``rollup_tiers`` caches are released before this
-    returns.
+    The fold persists nothing.
     """
     from light_curve_spark.operators.rollup import rollup_tiers
     from light_curve_spark.operators.series import explode_series
-    from light_curve_spark.plans.caching import cache_scope
 
-    with cache_scope():
-        new_partials = rollup_tiers(
-            explode_series(new_rows), keys=keys, base_width=base_width, tiers=tiers
-        )
-        return _fold_append(storage, "rollup_continuous", new_partials, keys, [])
+    new_partials = rollup_tiers(
+        explode_series(new_rows), keys=keys, base_width=base_width, tiers=tiers
+    )
+    return _fold_append(storage, "rollup_continuous", new_partials, keys, [])
 
 
 def retract_rollup_state(
@@ -123,35 +120,32 @@ def retract_rollup_state(
     The result equals ``rollup_tiers`` over the corpus without the
     deleted data (pytest-gated both shapes), for snapshot-fed and
     stream-fed state alike. The append is stamped with an empty batch
-    list, so the stream fold's manifest probe still accepts the table,
-    and the caches ``retract_from_rollup`` registers are released before
-    this returns."""
+    list, so the stream fold's manifest probe still accepts the table.
+    Neither shape persists an intermediate."""
     from light_curve_spark.operators.rollup import retract_from_rollup
-    from light_curve_spark.plans.caching import cache_scope
 
     keys = keys or ["doc_id", "source"]
     existing = storage.read_snapshot(table)
-    with cache_scope():
-        if retained is None:
-            join_cols = [c for c in keys if c in deleted.columns]
-            if not join_cols:
-                raise ValueError(
-                    f"deleted carries none of the rollup keys {keys!r} — "
-                    "pass whole-key tuples, or long-form deleted+retained "
-                    "series for partial-bucket retraction"
-                )
-            reduced = existing.join(
-                F.broadcast(deleted.select(*join_cols).distinct()),
-                join_cols,
-                "left_anti",
+    if retained is None:
+        join_cols = [c for c in keys if c in deleted.columns]
+        if not join_cols:
+            raise ValueError(
+                f"deleted carries none of the rollup keys {keys!r} — "
+                "pass whole-key tuples, or long-form deleted+retained "
+                "series for partial-bucket retraction"
             )
-        else:
-            reduced = retract_from_rollup(
-                existing,
-                deleted,
-                retained,
-                keys=keys,
-                base_width=base_width,
-                tiers=tiers,
-            )
-        return storage.append(reduced, table, meta={"batch_ids": []})
+        reduced = existing.join(
+            F.broadcast(deleted.select(*join_cols).distinct()),
+            join_cols,
+            "left_anti",
+        )
+    else:
+        reduced = retract_from_rollup(
+            existing,
+            deleted,
+            retained,
+            keys=keys,
+            base_width=base_width,
+            tiers=tiers,
+        )
+    return storage.append(reduced, table, meta={"batch_ids": []})

@@ -20,8 +20,8 @@ and folds every micro-batch through the same ``rollup_tiers`` +
 
 The table holds ``rollup_tiers`` rows (key..., tier, bucket, n_points,
 v_sum, v_min, v_max, v_mean) for every tier, the same state shape as the
-snapshot-fed fold, so ``storage.read_snapshot(table)`` is the whole
-cascade and ``retract_rollup_state(..., table=table)`` applies to it. The
+snapshot-fed fold, so ``storage.read_snapshot(table)`` holds every
+tier and ``retract_rollup_state(..., table=table)`` applies to it. The
 query checkpoint keeps only the file source's offsets.
 """
 
@@ -57,15 +57,13 @@ def run_stream_rollup(
     checkpoint re-delivers. The state equals ``rollup_tiers`` over every
     delivered file."""
     from light_curve_spark.operators.dedup import _manifest_batch_ids
-    from light_curve_spark.operators.rollup import rollup_tiers
-    from light_curve_spark.plans.caching import cache_scope
+    from light_curve_spark.operators.rollup import _check_tiers, rollup_tiers
     from light_curve_spark.streaming.incremental import _fold_append
 
     keys = keys or ["user_id"]
-    if list(tiers) != sorted(tiers) or tiers[0] != 1 or any(
-        t % p for p, t in zip(tiers, tiers[1:])
-    ):
-        raise ValueError(f"tiers must be ascending multiples starting at 1: {tiers}")
+    _check_tiers(tiers)
+    if tiers[0] != 1:
+        raise ValueError(f"tiers must start at 1: {tiers}")
     if not hasattr(storage, "read_snapshot"):
         # the fold writes replace-on-write FULL-state snapshots; IcebergStorage
         # appends rows (its streaming path would be an Iceberg MERGE) — fail
@@ -87,11 +85,10 @@ def run_stream_rollup(
         rows = tagged.filter(F.col("_file").isin(new)).select(
             *keys, epoch_us(ts_col).alias("t"), F.col(v_col).alias("v")
         )
-        with cache_scope():
-            partials = rollup_tiers(
-                rows, keys=keys, base_width=width_seconds * 1e6, tiers=tiers
-            )
-            _fold_append(storage, table, partials, keys, new)
+        partials = rollup_tiers(
+            rows, keys=keys, base_width=width_seconds * 1e6, tiers=tiers
+        )
+        _fold_append(storage, table, partials, keys, new)
 
     (
         spark.readStream.schema(input_schema)

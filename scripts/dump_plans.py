@@ -56,14 +56,18 @@ def main() -> None:
         )
     )
 
-    # 2. relational rollup: partial+final hash aggregate
+    # 2. relational rollup: one base partial+final aggregate, its partials
+    # expanded to every tier (Generate), one final aggregate — no cache
+    plan2 = formatted(e.q_rollup_tiers_events(spark, SF))
     sections.append(
         (
-            "Relational tier rollup on events (partial+final aggregate, AQE)",
-            formatted(e.q_rollup_tiers_events(spark, SF)),
-            ["HashAggregate", "Exchange", "AdaptiveSparkPlan", "InMemoryTableScan"],
+            "Relational tier rollup on events (base aggregate, expand to "
+            "every tier, one aggregate; AQE)",
+            plan2,
+            ["HashAggregate", "Exchange", "AdaptiveSparkPlan", "Generate"],
         )
     )
+    assert "InMemoryTableScan" not in plan2, "tier rollup must not persist"
 
     # 3. array-native rollup: NO exchange anywhere
     seq = synthetic_sequences(spark, 100, seed=42)

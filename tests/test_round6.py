@@ -1090,12 +1090,17 @@ def test_tombstone_vectors_refuses_pipeline_sem_prefix(spark, tmp_path):
     assert st.read("solo_sem_tombstones").count() == 1
 
 
-def test_retract_from_rollup_equals_reduced_rollup(spark):
+@pytest.mark.parametrize(
+    "tiers", [(1,), (1, 10, 100), (2, 4, 8, 16)], ids=lambda t: "-".join(map(str, t))
+)
+def test_retract_from_rollup_equals_reduced_rollup(spark, tiers):
     """retract_from_rollup == rollup_tiers(retained) across every
     delete pattern that exercises a distinct code path: a bucket's min,
     a bucket's max, both extrema, non-extremum rows (no recompute), an
     entire bucket (row drops), an entire key, and rows whose removal
-    must propagate a new extremum into the coarser tiers."""
+    must propagate a new extremum into the coarser tiers — at a single
+    tier, at 1x/10x/100x, and at a base tier above 1 whose factors are
+    not 10."""
     from light_curve_spark.operators.rollup import (
         retract_from_rollup,
         rollup_tiers,
@@ -1108,15 +1113,16 @@ def test_retract_from_rollup_equals_reduced_rollup(spark):
         for i in range(400):
             rows.append((key, float(i), float(rng.normal())))
     series = spark.createDataFrame(rows, "k string, t double, v double")
-    # deletes: every bucket-extremum of key a's first buckets, all of
-    # key b (full-key), bucket [16,32) of key c entirely, plus a spread
+    # deletes: every bucket-extremum of key a's first base buckets, all
+    # of key b (full-key), base bucket 1 of key c entirely, plus a spread
     # of non-extremum rows (t % 13 == 5)
+    w1 = 16.0 * tiers[0]
     per_bucket_min = series.filter(F.col("k") == "a").groupBy(
-        F.floor(F.col("t") / 16).alias("_b")
+        F.floor(F.col("t") / w1).alias("_b")
     ).agg(F.min("v").alias("v")).limit(10)
     cond = (
         (F.col("k") == "b")
-        | ((F.col("k") == "c") & (F.col("t") >= 16) & (F.col("t") < 32))
+        | ((F.col("k") == "c") & (F.col("t") >= w1) & (F.col("t") < 2 * w1))
         | (F.col("t") % 13 == 5)
     )
     deleted = series.filter(cond).unionByName(
@@ -1127,7 +1133,7 @@ def test_retract_from_rollup_equals_reduced_rollup(spark):
     ).distinct()
     retained = series.join(deleted, ["k", "t", "v"], "left_anti")
 
-    kw = dict(keys=["k"], base_width=16.0, tiers=(1, 10, 100))
+    kw = dict(keys=["k"], base_width=16.0, tiers=tiers)
     full = rollup_tiers(series, **kw)
     got = {
         (r.k, r.tier, r.bucket): (r.n_points, r.v_sum, r.v_min, r.v_max, r.v_mean)
@@ -1140,7 +1146,7 @@ def test_retract_from_rollup_equals_reduced_rollup(spark):
     release_operator_caches()
     assert set(got) == set(want)
     assert all(k[0] != "b" for k in got)  # full-key delete vanished
-    assert ("c", 1, 1) not in got  # full-bucket delete vanished
+    assert ("c", tiers[0], 1) not in got  # full-bucket delete vanished
     for k, (n, s, lo, hi, mean) in want.items():
         gn, gs, glo, ghi, gmean = got[k]
         assert gn == n and glo == lo and ghi == hi, k

@@ -1,6 +1,6 @@
 """Spark operator tests: synthetic source determinism, series views,
 feature operators (kernel vs relational vs per-series oracle), rollup
-cascade, gap-fill (relational vs kernel), compression round trip."""
+tiers, gap-fill (relational vs kernel), compression round trip."""
 
 import numpy as np
 import pandas as pd
@@ -120,34 +120,74 @@ def test_relational_matches_kernel_features(spark, seq100):
                 assert rv == pytest.approx(kv, rel=1e-9), name
 
 
-# --- rollup cascade ----------------------------------------------------------
+# --- rollup tiers ------------------------------------------------------------
 
-def test_rollup_cascade_matches_direct(spark, seq100):
+TIER_SETS = [(1,), (1, 10, 100), (2, 4, 8, 16)]
+
+
+def _tier_id(tiers):
+    return "-".join(map(str, tiers))
+
+
+@pytest.mark.parametrize("tiers", TIER_SETS, ids=_tier_id)
+def test_rollup_cascade_matches_direct(spark, seq100, tiers):
     series = explode_series(seq100).persist()
-    got = rollup_tiers(series, base_width=16.0, tiers=(1, 10, 100))
-    # oracle: compute tier 10 directly from raw, compare
-    direct10 = (
-        series.groupBy(
-            "doc_id", "source", F.floor(F.col("t") / F.lit(160.0)).alias("bucket")
+    got = rollup_tiers(series, base_width=16.0, tiers=tiers).collect()
+    assert {r.tier for r in got} == set(tiers)
+    for t in tiers:
+        # oracle: compute tier t directly from raw at width 16 * t, compare
+        direct = (
+            series.groupBy(
+                "doc_id", "source", F.floor(F.col("t") / F.lit(16.0 * t)).alias("bucket")
+            )
+            .agg(
+                F.count("v").alias("n_points"),
+                F.sum("v").alias("v_sum"),
+                F.min("v").alias("v_min"),
+                F.max("v").alias("v_max"),
+            )
+            .collect()
         )
-        .agg(
-            F.count("v").alias("n_points"),
-            F.sum("v").alias("v_sum"),
-            F.min("v").alias("v_min"),
-            F.max("v").alias("v_max"),
-        )
-        .collect()
-    )
-    got10 = {
-        (r.doc_id, r.bucket): r for r in got.filter(F.col("tier") == 10).collect()
-    }
-    assert len(got10) == len(direct10)
-    for r in direct10:
-        g = got10[(r.doc_id, r.bucket)]
-        assert g.n_points == r.n_points
-        assert g.v_min == r.v_min and g.v_max == r.v_max
-        assert g.v_sum == pytest.approx(r.v_sum, rel=1e-12)
+        got_t = {(r.doc_id, r.bucket): r for r in got if r.tier == t}
+        assert len(got_t) == len(direct)
+        for r in direct:
+            g = got_t[(r.doc_id, r.bucket)]
+            assert g.n_points == r.n_points
+            assert g.v_min == r.v_min and g.v_max == r.v_max
+            assert g.v_sum == pytest.approx(r.v_sum, rel=1e-12)
     series.unpersist()
+
+
+@pytest.mark.parametrize(
+    "tiers", [(), (0, 10), (1, 1), (10, 1), (10, 15)], ids=lambda t: _tier_id(t) or "empty"
+)
+def test_every_tier_function_rejects_bad_tiers(spark, seq100, tiers):
+    """One plan-time tier check for every tier function: empty, non-
+    positive, repeated, descending and non-nesting tier sets raise
+    ValueError before any job runs (a repeated tier would otherwise emit
+    every bucket twice)."""
+    from light_curve_spark.operators.rollup import (
+        retract_from_rollup,
+        rollup_distinct,
+        rollup_quantiles_arrays,
+        rollup_tiers_arrays,
+    )
+
+    series = explode_series(seq100)
+    calls = {
+        "rollup_tiers": lambda: rollup_tiers(series, tiers=tiers),
+        "rollup_tiers_arrays": lambda: rollup_tiers_arrays(seq100, tiers=tiers),
+        "rollup_distinct": lambda: rollup_distinct(series, "doc_id", tiers=tiers),
+        "retract_from_rollup": lambda: retract_from_rollup(
+            rollup_tiers(series), series, series, tiers=tiers
+        ),
+        "rollup_quantiles": lambda: rollup_quantiles(series, tiers=tiers),
+        "rollup_quantiles_arrays": lambda: rollup_quantiles_arrays(seq100, tiers=tiers),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match="tiers"):
+            call()
+            pytest.fail(f"{name} accepted tiers={tiers!r}")
 
 
 def test_rollup_arrays_matches_relational(spark, seq100):
