@@ -154,10 +154,12 @@ def q_rollup_retract_events(spark, sf_dir):
     ~1/7 of rows scattered INSIDE buckets, so plenty of bucket extrema
     sit on deleted rows and the footprint-pruned recompute actually
     runs. The result must equal the tier rollup over the retained rows
-    (oracle: the rollup SQL with the deletion predicate inverted):
-    decomposables subtract, extrema recompute only where a deleted row
-    achieved them — base tier from retained raw semi-joined to the
-    affected buckets, coarser tiers from the adjusted base partials."""
+    (oracle: the rollup SQL with the deletion predicate inverted): only
+    the base tier is retracted — decomposables subtract, extrema
+    recompute only where a deleted row achieved them, from retained raw
+    semi-joined to those buckets — and every coarser tier is rebuilt
+    from the fixed base partials by the tier rollup's own expansion and
+    aggregate."""
     from light_curve_spark.operators.rollup import (
         retract_from_rollup,
         rollup_tiers,

@@ -5,11 +5,13 @@ retention tiers". A tier-T bucket is ``floor(t / (base_width * T))``.
 
 One aggregate for every tier (SURVEY.md §2.5): tiers nest — base bucket
 ``b`` lies in bucket ``b // (T / tiers[0])`` at tier ``T`` — so the raw
-series is aggregated ONCE into base-tier partials, each partial is
-expanded to one row per tier (:func:`_expand_tiers`) and one
-``groupBy(keys, tier, bucket)`` takes sum-of-sums, min-of-mins,
-max-of-maxs, count-of-counts: one raw shuffle plus one shuffle of the
-partials whatever the number of tiers, and nothing persisted.
+series is aggregated ONCE into base-tier partials (:func:`_base_partials`),
+each is expanded to one row per tier (:func:`_expand_tiers`) and one
+``groupBy(keys, tier, bucket)`` folds them through the partial monoid
+(:func:`_merge_partials`): one raw shuffle plus one partials shuffle
+whatever the number of tiers, nothing persisted. The stored-state fold
+(``merge_rollups``) uses the same monoid; the retraction fixes the base
+tier only and rebuilds the rest through the same expansion and merge.
 
 Non-decomposable statistics (median, MAD) cannot fold from partials;
 policy is recompute-from-raw (:func:`rollup_quantiles`) — exactness
@@ -83,6 +85,41 @@ def _flat_token_segments(b):
     return flat, lengths, starts, elem, pos
 
 
+def _base_partials(series: DataFrame, keys: list[str], width: float) -> DataFrame:
+    """The base aggregate: (key..., bucket, n_points, v_sum, v_min,
+    v_max) of the long-form ``series`` at bucket width ``width``."""
+    return series.groupBy(*keys, bucketize("t", width).alias("bucket")).agg(
+        F.count("v").alias("n_points"),
+        F.sum("v").alias("v_sum"),
+        F.min("v").alias("v_min"),
+        F.max("v").alias("v_max"),
+    )
+
+
+def _merge_partials(df: DataFrame, group_cols: list[str]) -> DataFrame:
+    """The partial monoid: rows sharing ``group_cols`` fold to one (sum
+    of counts and sums, min of mins, max of maxs); ``v_mean`` derived."""
+    return (
+        df.groupBy(*group_cols)
+        .agg(
+            F.sum("n_points").alias("n_points"),
+            F.sum("v_sum").alias("v_sum"),
+            F.min("v_min").alias("v_min"),
+            F.max("v_max").alias("v_max"),
+        )
+        .withColumn("v_mean", F.col("v_sum") / F.col("n_points"))
+    )
+
+
+def _tiers_from_base(base: DataFrame, keys: list[str], tiers: tuple[int, ...]) -> DataFrame:
+    """Every tier of ``tiers`` from base-tier partials: one expansion,
+    one merge."""
+    return _merge_partials(
+        _expand_tiers(base, [*keys, *ROLLUP_AGG_COLS], tiers[0], tiers),
+        [*keys, "tier", "bucket"],
+    )
+
+
 def rollup_tiers(
     series: DataFrame,
     keys: list[str] | None = None,
@@ -96,25 +133,7 @@ def rollup_tiers(
     the base partials in the same aggregate, and nothing is persisted."""
     _check_tiers(tiers)
     keys = keys or ["doc_id", "source"]
-    base = series.groupBy(
-        *keys, bucketize("t", base_width * tiers[0]).alias("bucket")
-    ).agg(
-        F.count("v").alias("n_points"),
-        F.sum("v").alias("v_sum"),
-        F.min("v").alias("v_min"),
-        F.max("v").alias("v_max"),
-    )
-    return (
-        _expand_tiers(base, [*keys, *ROLLUP_AGG_COLS], tiers[0], tiers)
-        .groupBy(*keys, "tier", "bucket")
-        .agg(
-            F.sum("n_points").alias("n_points"),
-            F.sum("v_sum").alias("v_sum"),
-            F.min("v_min").alias("v_min"),
-            F.max("v_max").alias("v_max"),
-        )
-        .withColumn("v_mean", F.col("v_sum") / F.col("n_points"))
-    )
+    return _tiers_from_base(_base_partials(series, keys, base_width * tiers[0]), keys, tiers)
 
 
 def retract_from_rollup(
@@ -129,52 +148,51 @@ def retract_from_rollup(
     the continuous-aggregate side of the right-to-be-forgotten surface
     (round 6; the dedup/vector twins are the tombstone operators). The
     result EQUALS ``rollup_tiers(retained, ...)`` (pytest + SQL oracle)
-    without re-rolling the corpus:
+    without re-rolling the corpus. Only the BASE tier is retracted:
 
-    - decomposable stats subtract: the deleted rows' own tier partials
-      (one ``rollup_tiers`` over just the deleted rows — tiny, AQE
-      broadcasts it) come off ``n_points``/``v_sum``; emptied buckets
-      drop;
-    - extrema cannot subtract: a bucket needs its min (max) recomputed
-      ONLY when a deleted row achieved it (``deleted_min <= v_min``) —
-      everywhere else the stored extremum stands. The base tier
-      recomputes from ``retained`` raw SEMI-JOINED to exactly the
-      affected buckets (the 100 TB posture: the raw rescan is bounded
-      by the delete's bucket footprint, and partition pruning on time
-      keeps it to those ranges); every coarser tier recomputes from the
-      already-FIXED base-tier partials, never from raw — one expansion
-      of them to the coarser tiers, semi-joined to every affected
-      ``(tier, bucket)``, and one min/max aggregate (a tier-T extremum
-      is the min/max over its surviving base-tier children).
+    - decomposable stats subtract: the deleted rows' base partials (one
+      base aggregate over just the deleted rows — tiny, AQE broadcasts
+      it) come off ``n_points``/``v_sum`` in one left join; emptied
+      buckets drop;
+    - extrema cannot subtract: a base bucket needs its min (max)
+      recomputed ONLY when a deleted row achieved it (``deleted_min <=
+      v_min``) — everywhere else the stored extremum stands. Those
+      buckets recompute from ``retained`` raw SEMI-JOINED to exactly
+      them (the 100 TB posture: the raw rescan is bounded by the
+      delete's bucket footprint, and partition pruning on time keeps it
+      to those ranges).
+
+    The fixed base then goes through the same expansion and merge as
+    :func:`rollup_tiers`, so every coarser tier comes from its surviving
+    base children and the stored coarser tiers are never read. Cost: one
+    shuffle of the state's base tier per partial redact (the shape of
+    one fold) instead of a join plan per tier.
 
     ``rollup`` must carry the ``rollup_tiers`` row shape (a ``v_mean``
     column is ignored and re-derived); ``retained`` is the raw series
     minus ``deleted``, in the same long form the rollup was built
     from.
 
-    Float tolerance (round-6 ADVICE low): ``v_sum`` is computed by
-    SUBTRACTION (stored sum minus the deleted rows' partials), while
-    ``rollup_tiers(retained)`` re-adds the retained rows — floating-point
-    non-associativity means the two can diverge up to the cancellation
-    error of the bucket's sum, i.e. ~|v_sum_stored| * 2^-52 amplified by
-    how much of the bucket's mass was deleted. Equality with a re-roll is
-    therefore exact for ``n_points``/``v_min``/``v_max`` and holds for
-    ``v_sum``/``v_mean`` to within that cancellation bound (well under
-    the oracle's 1e-6 rounding unless a delete cancels nearly all of a
-    large-magnitude bucket); deployments deleting most of a high-|sum|
-    bucket should re-roll those buckets from raw instead."""
+    Float tolerance (round-6 ADVICE low): only the base ``v_sum``
+    subtracts (stored sum minus the deleted rows' partials); coarser
+    sums are re-added from the fixed base, as ``rollup_tiers`` adds its
+    base partials. ``rollup_tiers(retained)`` re-adds the retained rows,
+    so floating-point non-associativity lets a base sum diverge up to
+    its cancellation error, ~|v_sum_stored| * 2^-52 amplified by how
+    much of the bucket's mass was deleted, and coarser sums carry their
+    children's error. Equality with a re-roll is therefore exact for
+    ``n_points``/``v_min``/``v_max``, exact for ``v_sum``/``v_mean`` on
+    integer-valued input (tokens), and otherwise within that bound
+    (well under the oracle's 1e-6 rounding unless a delete cancels
+    nearly all of a large-magnitude bucket); deployments deleting most
+    of a high-|sum| bucket should re-roll those buckets from raw."""
     _check_tiers(tiers)
     keys = keys or ["doc_id", "source"]
-    on = [*keys, "tier", "bucket"]
-    d = rollup_tiers(deleted, keys, base_width, tiers).select(
-        *on,
-        F.col("n_points").alias("_dn"),
-        F.col("v_sum").alias("_dsum"),
-        F.col("v_min").alias("_dmin"),
-        F.col("v_max").alias("_dmax"),
-    )
+    on = [*keys, "bucket"]
+    width = base_width * tiers[0]
+    d = _base_partials(deleted, keys, width).toDF(*on, "_dn", "_dsum", "_dmin", "_dmax")
     adj = (
-        rollup.drop("v_mean")
+        rollup.filter(F.col("tier") == tiers[0])
         .join(d, on, "left")
         .select(
             *on,
@@ -182,50 +200,26 @@ def retract_from_rollup(
             (F.col("v_sum") - F.coalesce("_dsum", F.lit(0.0))).alias("v_sum"),
             "v_min",
             "v_max",
-            (
-                F.col("_dmin").isNotNull() & (F.col("_dmin") <= F.col("v_min"))
-            ).alias("_remin"),
-            (
-                F.col("_dmax").isNotNull() & (F.col("_dmax") >= F.col("v_max"))
-            ).alias("_remax"),
+            # null (no deleted row in the bucket) counts as false
+            (F.col("_dmin") <= F.col("v_min")).alias("_remin"),
+            (F.col("_dmax") >= F.col("v_max")).alias("_remax"),
         )
         .filter(F.col("n_points") > 0)
     )
-    affected = adj.filter(F.col("_remin") | F.col("_remax")).select(*on)
-
-    def _fix(tier_df: DataFrame, re_df: DataFrame) -> DataFrame:
-        """Swap recomputed extrema into the affected rows."""
-        return tier_df.join(re_df, on, "left").select(
-            *on,
-            "n_points",
-            "v_sum",
-            F.when(F.col("_remin"), F.col("_nmin"))
-            .otherwise(F.col("v_min"))
-            .alias("v_min"),
-            F.when(F.col("_remax"), F.col("_nmax"))
-            .otherwise(F.col("v_max"))
-            .alias("v_max"),
-        )
-
-    t1 = tiers[0]
-    base_tier = F.col("tier") == t1
-    re1 = (
-        retained.select(*keys, bucketize("t", base_width * t1).alias("bucket"), "v")
-        .join(affected.filter(base_tier).drop("tier"), [*keys, "bucket"], "left_semi")
-        .groupBy(*keys, "bucket")
+    re = (
+        retained.select(*keys, bucketize("t", width).alias("bucket"), "v")
+        .join(adj.filter(F.col("_remin") | F.col("_remax")).select(*on), on, "left_semi")
+        .groupBy(*on)
         .agg(F.min("v").alias("_nmin"), F.max("v").alias("_nmax"))
-        .withColumn("tier", F.lit(t1))
     )
-    fixed = _fix(adj.filter(base_tier), re1)
-    if len(tiers) > 1:
-        re_coarse = (
-            _expand_tiers(fixed, [*keys, "v_min", "v_max"], t1, tiers[1:])
-            .join(affected.filter(~base_tier), on, "left_semi")
-            .groupBy(*on)
-            .agg(F.min("v_min").alias("_nmin"), F.max("v_max").alias("_nmax"))
-        )
-        fixed = fixed.unionByName(_fix(adj.filter(~base_tier), re_coarse))
-    return fixed.withColumn("v_mean", F.col("v_sum") / F.col("n_points"))
+    fixed = adj.join(re, on, "left").select(
+        *on,
+        "n_points",
+        "v_sum",
+        F.when(F.col("_remin"), F.col("_nmin")).otherwise(F.col("v_min")).alias("v_min"),
+        F.when(F.col("_remax"), F.col("_nmax")).otherwise(F.col("v_max")).alias("v_max"),
+    )
+    return _tiers_from_base(fixed, keys, tiers)
 
 
 def rollup_tiers_arrays(
@@ -441,9 +435,8 @@ def rollup_distinct(
     Distinct counts are non-decomposable exactly but MERGEABLE as
     sketches, so this follows the same one-aggregate shape as
     :func:`rollup_tiers`: the raw series is scanned ONCE into base-tier
-    ``hll_sketch_agg`` sketches; base-tier rows keep their sketch as is,
-    and every coarser tier is one ``hll_union_agg`` over the base
-    sketches expanded to those tiers (HLL union is lossless for
+    ``hll_sketch_agg`` sketches, expanded to every tier and merged by
+    one ``hll_union_agg`` (HLL union is lossless for
     same-precision sketches, so the unioned estimate EQUALS the
     direct-aggregation estimate — pytest-asserted). At 100 TB that is
     one raw shuffle plus one tiny sketch-table shuffle, versus a full
@@ -466,18 +459,10 @@ def rollup_distinct(
     base = series.groupBy(
         *keys, bucketize("t", base_width * tiers[0]).alias("bucket")
     ).agg(F.hll_sketch_agg(distinct_col, F.lit(lg_config_k)).alias("_sk"))
-    out = base.select(*keys, F.lit(tiers[0]).alias("tier"), "bucket", "_sk")
-    if len(tiers) > 1:
-        out = out.unionByName(
-            _expand_tiers(base, [*keys, "_sk"], tiers[0], tiers[1:])
-            .groupBy(*keys, "tier", "bucket")
-            .agg(F.hll_union_agg("_sk").alias("_sk"))
-        )
-    return out.select(
-        *keys,
-        "tier",
-        "bucket",
-        F.hll_sketch_estimate("_sk").alias("n_distinct"),
+    return (
+        _expand_tiers(base, [*keys, "_sk"], tiers[0], tiers)
+        .groupBy(*keys, "tier", "bucket")
+        .agg(F.hll_sketch_estimate(F.hll_union_agg("_sk")).alias("n_distinct"))
     )
 
 

@@ -142,8 +142,8 @@ def run_pipeline(
             chunks.unpersist()
         finally:
             gseq.unpersist()
-            # release any operator-level caches (rollup tier partials,
-            # dedup inverted indexes) accumulated during this group
+            # release any operator-level caches (dedup inverted
+            # indexes) accumulated during this group
             release_operator_caches()
 
         state["done_groups"].append(group)

@@ -2,8 +2,9 @@
 
 The rollup partials (n_points, v_sum, v_min, v_max) form a commutative
 monoid, so folding a new snapshot into an existing rollup is a groupBy
-over the union of partials — identical math to the one tier aggregate
-(operators/rollup.py), applied across TIME instead of across tiers.
+over the union of partials — the tier aggregate's own partial monoid
+(``operators/rollup._merge_partials``), applied across TIME instead of
+across tiers.
 Per new Iceberg snapshot the scheduler runs
 
     new_partials = rollup_tiers(explode_series(new_rows))
@@ -17,7 +18,8 @@ rollup (streaming/structured.py) runs the same read-merge-append per
 micro-batch, so both write the same ``rollup_tiers`` state shape. Every
 writer stamps its snapshot's manifest ``batch_ids``: the stream fold
 with its input file paths, the snapshot-fed fold and the retraction
-with an empty list.
+with an empty list. A partial retraction rebuilds every tier from the
+fixed base tier: one shuffle, the shape of one fold.
 """
 
 from __future__ import annotations
@@ -25,21 +27,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from light_curve_spark.operators.rollup import (
+    ROLLUP_AGG_COLS, _merge_partials, retract_from_rollup, rollup_tiers,
+)
+
 
 def merge_rollups(existing: DataFrame, new: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Fold two rollup partial tables (same schema as rollup_tiers
-    output) into one. Decomposable stats only; v_mean is re-derived."""
+    output) into one: their union through the tier aggregate's partial
+    monoid. Decomposable stats only; v_mean is re-derived."""
     keys = keys or ["doc_id", "source"]
     group_cols = [*keys, "tier", "bucket"]
-    both = existing.select(
-        *group_cols, "n_points", "v_sum", "v_min", "v_max"
-    ).unionByName(new.select(*group_cols, "n_points", "v_sum", "v_min", "v_max"))
-    return both.groupBy(*group_cols).agg(
-        F.sum("n_points").alias("n_points"),
-        F.sum("v_sum").alias("v_sum"),
-        F.min("v_min").alias("v_min"),
-        F.max("v_max").alias("v_max"),
-    ).withColumn("v_mean", F.col("v_sum") / F.col("n_points"))
+    return _merge_partials(
+        existing.select(*group_cols, *ROLLUP_AGG_COLS).unionByName(
+            new.select(*group_cols, *ROLLUP_AGG_COLS)
+        ),
+        group_cols,
+    )
 
 
 def _fold_append(
@@ -78,7 +82,6 @@ def incremental_rollup(
     MERGE INTO on (key, tier, bucket), which Iceberg supports natively.
     The fold persists nothing.
     """
-    from light_curve_spark.operators.rollup import rollup_tiers
     from light_curve_spark.operators.series import explode_series
 
     new_partials = rollup_tiers(
@@ -113,17 +116,17 @@ def retract_rollup_state(
       broadcast anti-join on the state table — no raw access at all.
     - ``retained`` given: both are LONG-FORM series (keys + t + v) and
       the partial-bucket math delegates to
-      :func:`~light_curve_spark.operators.rollup.retract_from_rollup`
-      (decomposables subtract; extrema recompute only in the buckets a
-      deleted row topped, raw rescan bounded by that footprint).
+      :func:`~light_curve_spark.operators.rollup.retract_from_rollup`:
+      the stored BASE tier alone is fixed (decomposables subtract;
+      extrema recompute only in the base buckets a deleted row topped,
+      raw rescan bounded by that footprint) and every coarser tier is
+      rebuilt from it — one shuffle of the base tier, as in one fold.
 
     The result equals ``rollup_tiers`` over the corpus without the
     deleted data (pytest-gated both shapes), for snapshot-fed and
     stream-fed state alike. The append is stamped with an empty batch
     list, so the stream fold's manifest probe still accepts the table.
     Neither shape persists an intermediate."""
-    from light_curve_spark.operators.rollup import retract_from_rollup
-
     keys = keys or ["doc_id", "source"]
     existing = storage.read_snapshot(table)
     if retained is None:

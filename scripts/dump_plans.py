@@ -69,6 +69,29 @@ def main() -> None:
     )
     assert "InMemoryTableScan" not in plan2, "tier rollup must not persist"
 
+    # 2b. retraction over a materialized rollup (how retract_rollup_state
+    # sees a stored snapshot): only the base tier is retracted, so the
+    # plan expands tiers exactly once — the fixed base — and caches nothing
+    from light_curve_spark.operators.rollup import retract_from_rollup, rollup_tiers
+
+    ev = e._events_series(spark, SF)
+    kw = dict(keys=["user_id"], base_width=e.DAY_US, tiers=(1, 10, 100))
+    full = rollup_tiers(ev, **kw)
+    stored = spark.createDataFrame(full.collect(), full.schema)
+    cond = F.pmod(F.floor(F.col("t") / F.lit(1e6)).cast("long"), F.lit(7)) == 3
+    plan2b = formatted(
+        retract_from_rollup(stored, ev.filter(cond), ev.filter(~cond), **kw)
+    )
+    sections.append(
+        (
+            "Rollup retraction over a stored state (base tier only: one "
+            "subtract join, footprint-pruned extrema rescan, one expansion "
+            "of the fixed base to every tier, one aggregate)",
+            plan2b,
+            [("Generate (", 1), ("InMemoryTableScan", 0)],
+        )
+    )
+
     # 3. array-native rollup: NO exchange anywhere
     seq = synthetic_sequences(spark, 100, seed=42)
     plan3 = formatted(rollup_tiers_arrays(seq))
@@ -352,9 +375,13 @@ def main() -> None:
     for title, plan, must in sections:
         lines += [f"## {title}", ""]
         for needle in must:
-            hit = needle in plan
+            # a (needle, n) pair asks for exactly n occurrences
+            needle, want = needle if isinstance(needle, tuple) else (needle, None)
+            n = plan.count(needle)
+            hit = n > 0 if want is None else n == want
             ok_all &= hit
-            lines.append(f"- {'OK' if hit else 'MISSING'}: `{needle}`")
+            count = "" if want is None else f" ×{want} (found {n})"
+            lines.append(f"- {'OK' if hit else 'MISSING'}: `{needle}`{count}")
         lines += ["", "```", plan.strip()[:4000], "```", ""]
     lines.append(f"\nAll assertions passed: {ok_all}\n")
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:

@@ -1135,24 +1135,43 @@ def test_retract_from_rollup_equals_reduced_rollup(spark, tiers):
 
     kw = dict(keys=["k"], base_width=16.0, tiers=tiers)
     full = rollup_tiers(series, **kw)
-    got = {
-        (r.k, r.tier, r.bucket): (r.n_points, r.v_sum, r.v_min, r.v_max, r.v_mean)
-        for r in retract_from_rollup(full, deleted, retained, **kw).collect()
-    }
-    want = {
-        (r.k, r.tier, r.bucket): (r.n_points, r.v_sum, r.v_min, r.v_max, r.v_mean)
-        for r in rollup_tiers(retained, **kw).collect()
-    }
-    release_operator_caches()
-    assert set(got) == set(want)
-    assert all(k[0] != "b" for k in got)  # full-key delete vanished
-    assert ("c", tiers[0], 1) not in got  # full-bucket delete vanished
-    for k, (n, s, lo, hi, mean) in want.items():
-        gn, gs, glo, ghi, gmean = got[k]
-        assert gn == n and glo == lo and ghi == hi, k
-        assert gs == pytest.approx(s, abs=1e-9) and gmean == pytest.approx(
-            mean, abs=1e-9
-        ), k
+
+    def as_map(df):
+        return {
+            (r.k, r.tier, r.bucket): (r.n_points, r.v_sum, r.v_min, r.v_max, r.v_mean)
+            for r in df.collect()
+        }
+
+    want = as_map(rollup_tiers(retained, **kw))
+    # over the lazy rollup, and over a materialized one — the way
+    # retract_rollup_state sees a stored snapshot
+    stored = spark.createDataFrame(full.collect(), full.schema)
+    for rollup in (full, stored):
+        got = as_map(retract_from_rollup(rollup, deleted, retained, **kw))
+        release_operator_caches()
+        assert set(got) == set(want)
+        assert all(k[0] != "b" for k in got)  # full-key delete vanished
+        assert ("c", tiers[0], 1) not in got  # full-bucket delete vanished
+        for k, (n, s, lo, hi, mean) in want.items():
+            gn, gs, glo, ghi, gmean = got[k]
+            assert gn == n and glo == lo and ghi == hi, k
+            assert gs == pytest.approx(s, abs=1e-9) and gmean == pytest.approx(
+                mean, abs=1e-9
+            ), k
+
+    # only the base tier is retracted: over a stored state the plan
+    # expands tiers exactly once (the fixed base), never per tier or
+    # per consumer of the deleted rows' partials
+    plan = (
+        retract_from_rollup(stored, deleted, retained, **kw)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    generates = [
+        ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Generate ")
+    ]
+    assert len(generates) == 1, plan
 
     # empty delete: identity (modulo v_mean re-derivation)
     empty = series.limit(0)
