@@ -160,19 +160,6 @@ def main() -> None:
         )
     release_operator_caches()
 
-    # round-4 fast path: sampled-df weighted SimHash (not a driver-contract
-    # query — its rate-1.0 bit-parity with the contract kernel is
-    # pytest-gated; timed here against simhash_weighted_documents above)
-    from light_curve_spark.operators.dedup import simhash_weighted_approx_kernel
-
-    docs_tbl = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    extra_timings["simhash_weighted_approx"] = _timed_min(
-        lambda: _run(simhash_weighted_approx_kernel(docs_tbl, sample_rate=0.25)),
-        reps=3,
-        name="simhash_weighted_approx",
-    )
-    release_operator_caches()
-
     # sequences pipeline workload: features -> rollup cascade -> encode
     import numpy as np
 

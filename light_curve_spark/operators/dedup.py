@@ -1220,6 +1220,41 @@ def _star_labels(
     return labels, rounds, prev_ckpts
 
 
+_SHIFTS = np.arange(64, dtype=np.uint64)
+
+
+def _simhash_votes(
+    h: np.ndarray, w: np.ndarray | None, lengths: np.ndarray
+) -> np.ndarray:
+    """The 64-bit SimHash bit vote of every segment of a flat hash
+    buffer, the one vote both mapInArrow kernels run: segment j is the
+    next ``lengths[j]`` entries of ``h`` (uint64 unit hashes), and bit i
+    of its int64 hash is set when 2 * sum(w where the hash has bit i
+    set) > sum(w). ``w=None`` weighs every unit 1 (the majority vote
+    2 * count > n); int64 weights keep the sums exact. An empty segment
+    gives 0 — the expression twin's value for a null or word-less
+    document.
+
+    One bit matrix (units x 64) and one ``np.add.reduceat`` per call. A
+    zero sentinel row keeps every reduceat index in range WITHOUT
+    clamping: clamping an empty trailing segment's start would truncate
+    the PREVIOUS segment (r2 review find)."""
+    starts = np.cumsum(lengths) - lengths
+    dtype = np.int32 if w is None else np.int64
+    bits = np.zeros((h.shape[0] + 1, 64), dtype=dtype)
+    bits[:-1] = (h[:, None] >> _SHIFTS) & np.uint64(1)
+    if w is None:
+        total = lengths
+    else:
+        bits[:-1] *= w[:, None]
+        total = np.add.reduceat(np.append(w, 0), starts)
+    set_w = np.add.reduceat(bits, starts, axis=0).astype(np.int64)
+    votes = 2 * set_w > total[:, None]
+    votes[lengths == 0] = False
+    sh = (votes.astype(np.uint64) << _SHIFTS).sum(axis=1, dtype=np.uint64)
+    return sh.view(np.int64)
+
+
 def simhash_kernel(
     docs: DataFrame, text_col: str = "text", tokens_col: str | None = None
 ) -> DataFrame:
@@ -1229,14 +1264,15 @@ def simhash_kernel(
     document (higher-order functions don't codegen) — a scale tax. Here
     the per-word hashing stays JVM-side (one codegen'd
     transform/xxhash64), and a single mapInArrow kernel does all 64 bit
-    votes at once in numpy over the flat ListArray buffer (bit-matrix +
-    one add.reduceat per batch). Zero shuffle; hash parity with the
-    expression twin is pytest-asserted.
+    votes at once in numpy over the flat ListArray buffer
+    (:func:`_simhash_votes` with unit weights). Zero shuffle; hash
+    parity with the expression twin is pytest-asserted, null-text
+    documents included (sh = 0 on both sides).
 
     ``tokens_col``: vote over per-TOKEN hashes (xxhash64 of the int64
     token id) instead of word hashes — the tokens-native path for
-    pre-tokenized corpora; the bit-vote kernel is identical and the
-    scalar oracle (simhash_tokens_ref) reproduces it exactly."""
+    pre-tokenized corpora; the bit vote is the same and the scalar
+    oracle (simhash_tokens_ref) reproduces it exactly."""
     import pyarrow as pa
 
     if tokens_col is not None:
@@ -1252,7 +1288,6 @@ def simhash_kernel(
     out_schema = StructType(
         [docs.schema["doc_id"], StructField("sh", LongType(), False)]
     )
-    shifts = np.arange(64, dtype=np.uint64)
 
     def fn(batches):
         for b in batches:
@@ -1266,25 +1301,8 @@ def simhash_kernel(
                 # stale values in exotic producers; force 0 so segment
                 # starts stay in sync with the flat buffer)
                 lengths = np.where(np.asarray(h.is_valid()), lengths, 0)
-            starts = np.cumsum(lengths) - lengths
             flat = h.flatten().to_numpy().astype(np.int64).view(np.uint64)
-            # bit matrix (words x 64, int32) -> per-doc set-bit counts.
-            # A zero sentinel row keeps every reduceat index in range
-            # WITHOUT clamping: clamping an empty trailing segment's start
-            # would truncate the PREVIOUS doc's segment (r2 review find).
-            bits = np.zeros((flat.shape[0] + 1, 64), dtype=np.int32)
-            bits[:-1] = (flat[:, None] >> shifts) & np.uint64(1)
-            cnt = np.add.reduceat(bits, starts, axis=0)
-            # vote for bit i: (+1 per set, -1 per unset) > 0  <=>  2*cnt > n.
-            # Null/empty docs get sh = 0 — EXACTLY the expression twin's
-            # value (its per-bit when(NULL > 0, bit).otherwise(0) coerces
-            # a null aggregate to 0), so kernel/expression parity holds
-            # on null-text corpora too (pytest-asserted).
-            votes = (2 * cnt.astype(np.int64)) > lengths[:, None]
-            votes[lengths == 0] = False
-            sh = (votes.astype(np.uint64) << shifts).sum(
-                axis=1, dtype=np.uint64
-            ).view(np.int64)
+            sh = _simhash_votes(flat, None, lengths)
             yield pa.RecordBatch.from_arrays(
                 [b.column(b.schema.get_field_index("doc_id")), pa.array(sh)],
                 ["doc_id", "sh"],
@@ -1322,8 +1340,8 @@ def simhash_weighted_kernel(docs: DataFrame, text_col: str = "text") -> DataFram
     (contribution = tf * idf2, exact ints — identical result, fewer
     rows). The weight join is vocabulary-bounded (AQE broadcasts at
     real scales), then one groupBy(doc_id) regroup feeds a single
-    mapInArrow bit-vote kernel (bit matrix * int64 weights +
-    add.reduceat, same machinery as simhash_kernel). Two big shuffles
+    mapInArrow kernel: :func:`_simhash_votes` with the int64 weights,
+    the same bit vote as simhash_kernel. Two big shuffles
     total; the count() action for n_docs is a scalar — idf is a
     two-pass statistic by definition.
 
@@ -1355,7 +1373,6 @@ def simhash_weighted_kernel(docs: DataFrame, text_col: str = "text") -> DataFram
     out_schema = StructType(
         [docs.schema["doc_id"], StructField("sh", LongType(), False)]
     )
-    shifts = np.arange(64, dtype=np.uint64)
 
     def fn(batches):
         for b in batches:
@@ -1363,23 +1380,12 @@ def simhash_weighted_kernel(docs: DataFrame, text_col: str = "text") -> DataFram
                 continue
             hw = b.column(b.schema.get_field_index("_hw"))
             off = hw.offsets.to_numpy()
-            lengths = (off[1:] - off[:-1]).astype(np.int64)
-            starts = np.cumsum(lengths) - lengths
             flat = hw.flatten()
-            h = flat.field("h").to_numpy().astype(np.int64).view(np.uint64)
-            wv = flat.field("w").to_numpy().astype(np.int64)
-            # contribution matrix: +w where the bit is set, -w where not;
-            # zero sentinel row keeps reduceat indices in range without
-            # clamping (same guard as simhash_kernel)
-            bits = (h[:, None] >> shifts) & np.uint64(1)
-            contrib = np.zeros((h.shape[0] + 1, 64), dtype=np.int64)
-            contrib[:-1] = np.where(bits.astype(bool), wv[:, None], -wv[:, None])
-            votes = np.add.reduceat(contrib, starts, axis=0)
-            pos = votes > 0
-            pos[lengths == 0] = False
-            sh = (pos.astype(np.uint64) << shifts).sum(
-                axis=1, dtype=np.uint64
-            ).view(np.int64)
+            sh = _simhash_votes(
+                flat.field("h").to_numpy().astype(np.int64).view(np.uint64),
+                flat.field("w").to_numpy().astype(np.int64),
+                (off[1:] - off[:-1]).astype(np.int64),
+            )
             yield pa.RecordBatch.from_arrays(
                 [b.column(b.schema.get_field_index("doc_id")), pa.array(sh)],
                 ["doc_id", "sh"],
@@ -1394,150 +1400,6 @@ def simhash_weighted_kernel(docs: DataFrame, text_col: str = "text") -> DataFram
     )
 
 
-def simhash_weighted_approx_kernel(
-    docs: DataFrame,
-    text_col: str = "text",
-    sample_rate: float = 0.1,
-    max_vocab: int = 4_000_000,
-) -> DataFrame:
-    """(doc_id, sh): IDF-weighted SimHash with SAMPLED document
-    frequencies — the scale path that cuts BOTH word-instance shuffles
-    of :func:`simhash_weighted_kernel` (round-3 verdict item 5).
-
-    The exact kernel's shuffles exist only to compute df: explode ->
-    per-(doc,word) tf aggregate -> vocabulary df -> weight join ->
-    regroup. But df only picks an integer log2 weight BUCKET — it does
-    not need to be exact. Here df is estimated on a DETERMINISTIC doc
-    sample (``xxhash64(doc_id) % k == 0``, partition-independent), the
-    sampled vocabulary is broadcast as sorted numpy arrays, and ONE
-    mapInArrow pass computes per-doc tf (lexsort run-lengths over the
-    Arrow list buffer), weight lookup (searchsorted), and the exact
-    integer bit votes. Zero word-instance shuffles: the only shuffle
-    left is the vocabulary aggregate over the sample (~``sample_rate``
-    of the corpus), and the votes themselves stay EXACT ints — only the
-    weight bucket is approximate.
-
-    Estimator: df_est = floor(df_sample / rate) for sampled words;
-    words absent from the sample get df_est = 1 -> the maximum weight,
-    which is what rare words deserve. Hot words — the Zipf-saturation
-    cause the weighting exists to fix — are estimated most accurately.
-    ``max_vocab`` bounds the broadcast by keeping the highest-df sampled
-    words (the ones whose weights actually differ from the rare-word
-    maximum); at 100 TB pick rate so the sampled vocab stays ~10^7.
-
-    With ``sample_rate=1.0`` the estimate is exact and the output is
-    bit-identical to :func:`simhash_weighted_kernel` (pytest-asserted) —
-    the fast path degrades the WEIGHTS, never the vote arithmetic.  At
-    rate 1.0 ``max_vocab`` is IGNORED (the exactness contract requires
-    every word's true df, so the full vocabulary is broadcast); the
-    bound applies only to the sampled estimates."""
-    import pyarrow as pa
-
-    if not (0.0 < sample_rate <= 1.0):
-        raise ValueError(f"sample_rate must be in (0, 1], got {sample_rate}")
-    k = max(1, round(1.0 / sample_rate))
-    rate = 1.0 / k
-
-    words = F.split(_norm_text(text_col), " ")
-    gram_arr = F.transform(words, lambda w: F.xxhash64(w))
-    sample = docs if k == 1 else docs.filter(
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(k)) == 0
-    )
-    vocab_q = (
-        sample.select(F.explode(F.array_distinct(gram_arr)).alias("h"))
-        .groupBy("h")
-        .agg(F.count("*").alias("df_s"))
-    )
-    if k > 1:
-        # bound the broadcast: keep the highest-df sampled words (the
-        # ones whose weights differ from the rare-word maximum).  At
-        # sample_rate=1.0 the truncation is SKIPPED — the bit-parity
-        # claim vs simhash_weighted_kernel requires every word's true
-        # df, and a vocabulary beyond max_vocab would otherwise get
-        # df_est=1 (max weight) where the exact kernel uses true df
-        # (round-4 ADVICE).  Exactness costs a full-vocabulary
-        # broadcast; that is what rate 1.0 means.
-        vocab_q = vocab_q.orderBy(F.desc("df_s"), "h").limit(max_vocab)
-    vocab_pdf = vocab_q.toPandas()
-    n_docs = docs.count()
-    raw_h = vocab_pdf["h"].to_numpy(np.int64).view(np.uint64)
-    order = np.argsort(raw_h, kind="stable")
-    vh = raw_h[order]
-    vdf = np.maximum(
-        (vocab_pdf["df_s"].to_numpy(np.int64)[order].astype(np.float64) / rate)
-        .astype(np.int64),
-        1,
-    )
-    sc = docs.sparkSession.sparkContext
-    bc = sc.broadcast((vh, vdf, int(n_docs)))
-
-    hashed = ensure_min_splits(docs).select("doc_id", gram_arr.alias("_h"))
-    out_schema = StructType(
-        [docs.schema["doc_id"], StructField("sh", LongType(), False)]
-    )
-    shifts = np.arange(64, dtype=np.uint64)
-
-    def fn(batches):
-        vhash, vdfreq, n_total = bc.value
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            h = b.column(b.schema.get_field_index("_h"))
-            off = h.offsets.to_numpy()
-            lengths = (off[1:] - off[:-1]).astype(np.int64)
-            if h.null_count:
-                lengths = np.where(np.asarray(h.is_valid()), lengths, 0)
-            flat = h.flatten().to_numpy().astype(np.int64).view(np.uint64)
-            seg = np.repeat(np.arange(lengths.shape[0], dtype=np.int64), lengths)
-            # per-doc term frequencies: sort word hashes within each doc
-            # segment, then run-length the (segment, hash) runs
-            order = np.lexsort((flat, seg))
-            fs, sg = flat[order], seg[order]
-            new_run = np.ones(fs.shape[0], dtype=bool)
-            if fs.shape[0]:
-                new_run[1:] = (fs[1:] != fs[:-1]) | (sg[1:] != sg[:-1])
-            run_starts = np.nonzero(new_run)[0]
-            tf = np.diff(np.append(run_starts, fs.shape[0]))
-            run_hash = fs[run_starts]
-            run_seg = sg[run_starts]
-            # broadcast df lookup; absent words -> df_est 1 (max weight)
-            if vhash.shape[0]:
-                pos = np.searchsorted(vhash, run_hash)
-                pos_c = np.minimum(pos, vhash.shape[0] - 1)
-                found = vhash[pos_c] == run_hash
-                df_est = np.where(found, vdfreq[pos_c], 1)
-            else:
-                df_est = np.ones(run_hash.shape[0], dtype=np.int64)
-            ratio = np.maximum(n_total // np.maximum(df_est, 1), 1)
-            # floor(log2(ratio)) EXACTLY: frexp's exponent is exact for
-            # every int64 < 2^53 (no libm rounding on the hash path)
-            w = np.frexp(ratio.astype(np.float64))[1].astype(np.int64) - 1
-            wv = tf * w
-            bits = (run_hash[:, None] >> shifts) & np.uint64(1)
-            contrib = np.zeros((run_hash.shape[0] + 1, 64), dtype=np.int64)
-            contrib[:-1] = np.where(bits.astype(bool), wv[:, None], -wv[:, None])
-            # reduceat boundaries: first run of each nonempty doc; empty
-            # docs get sh=0 via the lengths==0 mask below
-            doc_first = np.ones(run_seg.shape[0], dtype=bool)
-            if run_seg.shape[0]:
-                doc_first[1:] = run_seg[1:] != run_seg[:-1]
-            starts = np.nonzero(doc_first)[0]
-            votes = np.zeros((lengths.shape[0], 64), dtype=np.int64)
-            if starts.shape[0]:
-                votes[run_seg[starts]] = np.add.reduceat(contrib, starts, axis=0)
-            pos_votes = votes > 0
-            pos_votes[lengths == 0] = False
-            sh = (pos_votes.astype(np.uint64) << shifts).sum(
-                axis=1, dtype=np.uint64
-            ).view(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(b.schema.get_field_index("doc_id")), pa.array(sh)],
-                ["doc_id", "sh"],
-            )
-
-    return hashed.mapInArrow(fn, schema=out_schema)
-
-
 def simhash_dedup(
     docs: DataFrame,
     band_bits: int = 16,
@@ -1545,7 +1407,6 @@ def simhash_dedup(
     tokens_col: str | None = None,
     max_hamming: int | None = None,
     weighted: bool = False,
-    approx_df: float | None = None,
 ) -> DataFrame:
     """Near-dup candidates by SimHash: documents sharing any of the four
     16-bit bands of their 64-bit simhash (standard Hamming-distance
@@ -1557,32 +1418,25 @@ def simhash_dedup(
 
     ``weighted=True`` uses :func:`simhash_weighted_kernel` (IDF votes) —
     required on large Zipf-vocabulary corpora, where the unweighted
-    hash saturates (see BENCH.md round-3 stress finding). ``approx_df``
-    (a sample rate, with ``weighted=True``) swaps in
-    :func:`simhash_weighted_approx_kernel` — sampled-df broadcast
-    weights, zero word-instance shuffles — for the 100 TB fast path;
-    the exact kernel remains the oracle/contract path."""
-    # persist the (doc_id, sh) table: both sides of the band self-join
-    # consume it — uncached, the text normalization + word hashing +
-    # bit-vote kernel would run twice (and inherit however few input
-    # splits the source has; the cache read re-parallelizes downstream)
-    if approx_df is not None and not weighted:
-        raise ValueError("approx_df requires weighted=True")
+    hash saturates (see BENCH.md round-3 stress finding); otherwise
+    :func:`simhash_kernel` hashes words, or tokens with ``tokens_col``.
+    Both kernels run the same bit vote (:func:`_simhash_votes`)."""
     if tokens_col is not None and weighted:
         # idf weighting is a word-df statistic; the tokens-native path
         # ships unweighted (token vocabularies are bounded, so the Zipf
         # vote-saturation the weighting fixes is far milder there)
         raise ValueError("tokens_col supports the unweighted kernel only")
-    if weighted and approx_df is not None:
-        def kernel(d, tc):
-            return simhash_weighted_approx_kernel(d, tc, sample_rate=approx_df)
-    elif weighted:
+    if weighted:
         kernel = simhash_weighted_kernel
     elif tokens_col is not None:
         def kernel(d, tc):
             return simhash_kernel(d, tc, tokens_col=tokens_col)
     else:
         kernel = simhash_kernel
+    # persist the (doc_id, sh) table: both sides of the band self-join
+    # consume it — uncached, the text normalization + word hashing +
+    # bit-vote kernel would run twice (and inherit however few input
+    # splits the source has; the cache read re-parallelizes downstream)
     sh = cached(kernel(docs, text_col))
     bands = 64 // band_bits
     mask = (1 << band_bits) - 1

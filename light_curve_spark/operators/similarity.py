@@ -673,27 +673,12 @@ def append_ivf_partitioned(
     Appending with a DIFFERENT codebook than the layout was written
     with would strand the new rows in directories the probe (a pure
     function of the stored centroids) never matches to them — the
-    persisted ``_ivf_centroids.json`` is validated against the given
-    centroids and a mismatch raises (the IVF analogue of the
-    incremental-index config guards). ``centroids=None`` uses the
-    stored codebook directly. Legacy layouts without the file skip the
-    guard (full-trust append, as before round 6)."""
-    import os
-
-    stored_file = os.path.join(path, _IVF_CENTROID_FILE)
-    if centroids is None:
-        centroids = load_ivf_centroids(path)
-    elif os.path.exists(stored_file):
-        stored = load_ivf_centroids(path)
-        if not np.array_equal(
-            stored, np.asarray(centroids, dtype=np.float64)
-        ):
-            raise ValueError(
-                f"centroids differ from the codebook {path} was written "
-                "with; appending would strand rows in unprobed buckets — "
-                "pass centroids=None to use the stored codebook, or "
-                "relayout_ivf to retrain"
-            )
+    layout's ``_ivf_centroids.json`` is checked by
+    :func:`_layout_codebook`: explicit centroids that differ from it
+    raise, and so does a layout without the file (the IVF analogue of
+    the incremental-index config guards). ``centroids=None`` uses the
+    stored codebook directly."""
+    centroids = _layout_codebook(path, centroids)
     assigned = ivf_assign(emb_new, centroids, vec_col=vec_col)
     tombs = _ivf_tombstones(emb_new.sparkSession, path)
     if tombs is not None:
@@ -1026,6 +1011,34 @@ def load_ivf_centroids(path: str) -> np.ndarray:
     return C
 
 
+def _layout_codebook(path: str, centroids: np.ndarray | None) -> np.ndarray:
+    """The codebook the IVF layout at ``path`` was written with — the
+    one check :func:`append_ivf_partitioned` and :func:`read_ivf_probe`
+    share. Raises ``ValueError`` when the layout has no
+    ``_ivf_centroids.json`` or when ``centroids`` (if given) differ from
+    it: bucket directories are a pure function of the stored codebook,
+    so another one appends rows into buckets the probe never matches and
+    probes buckets the query's neighbours are not in."""
+    import os
+
+    if not os.path.exists(os.path.join(path, _IVF_CENTROID_FILE)):
+        raise ValueError(
+            f"no IVF codebook at {path} ({_IVF_CENTROID_FILE} missing) — "
+            "write the layout with write_ivf_partitioned or relayout_ivf"
+        )
+    stored = load_ivf_centroids(path)
+    if centroids is not None and not np.array_equal(
+        stored, np.asarray(centroids, dtype=np.float64)
+    ):
+        raise ValueError(
+            f"centroids differ from the codebook {path} was written "
+            "with; appending would strand rows in unprobed buckets and "
+            "probing would read the wrong ones — pass centroids=None to "
+            "use the stored codebook, or relayout_ivf to retrain"
+        )
+    return stored
+
+
 def read_ivf_probe(
     spark,
     path: str,
@@ -1038,10 +1051,10 @@ def read_ivf_probe(
     partition column becomes a PartitionFilter (plan-asserted in tests)
     — directories outside the probe set are never listed into the scan.
     ``centroids=None`` reloads the codebook persisted with the layout
-    (:func:`load_ivf_centroids`) — the restart-safe posture."""
-    if centroids is None:
-        centroids = load_ivf_centroids(path)
-    C = np.asarray(centroids, dtype=np.float64)
+    (:func:`load_ivf_centroids`) — the restart-safe posture; explicit
+    centroids must equal it (:func:`_layout_codebook`), since probing
+    with another codebook picks the wrong buckets."""
+    C = _layout_codebook(path, centroids)
     q = np.asarray(query, dtype=np.float64)
     d2 = ((C - q[None, :]) ** 2).sum(axis=1)
     probe = [int(i) for i in np.argsort(d2, kind="stable")[:nprobe]]

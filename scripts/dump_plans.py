@@ -216,27 +216,6 @@ def main() -> None:
     assert "CartesianProduct" not in plan12
     assert "BroadcastNestedLoopJoin" not in plan12
 
-    # 12b. sampled-df weighted simhash (round 4): the HASH PASS itself is
-    # one shuffle-free mapInArrow — df comes from a driver broadcast, so
-    # the plan has no more Exchanges than the bare input scan
-    from light_curve_spark.operators.dedup import simhash_weighted_approx_kernel
-
-    plan12b = formatted(simhash_weighted_approx_kernel(docs_par, sample_rate=0.5))
-    sections.append(
-        (
-            "Sampled-df weighted SimHash (broadcast weights; hash pass is "
-            "one shuffle-free mapInArrow)",
-            plan12b,
-            ["MapInArrow"],
-        )
-    )
-    # compare against base_ex from section 6 — the PRISTINE input plan;
-    # re-formatting docs_par here would double-count (section 12's cached
-    # subtree makes its exchange print as itself + a reuse reference)
-    assert plan12b.count("Exchange") == base_ex, (
-        "approx weighted simhash hash pass must not shuffle"
-    )
-
     # 13. star-contraction connected components: one round is two
     # groupBy-min + equi-join steps — declarative, AQE-owned, no
     # cartesian anywhere

@@ -1,5 +1,5 @@
-"""Round-4 hardening: sampled-df weighted SimHash (zero-shuffle fast
-path), incremental index idempotency (see test_round3 additions), CC
+"""Round-4 hardening: weighted SimHash against its scalar reference,
+incremental index idempotency (see test_round3 additions), CC
 auto-select, document-pipeline composition."""
 
 import numpy as np
@@ -24,71 +24,6 @@ def _zipf_corpus(n_docs: int = 120, seed: int = 3) -> pd.DataFrame:
     rows.append((10_000, None))
     rows.append((10_001, "   "))
     return pd.DataFrame(rows, columns=["doc_id", "text"])
-
-
-def test_approx_weighted_simhash_rate1_bitmatches_exact(spark):
-    """sample_rate=1.0 makes df_est exact, so the sampled-df kernel must
-    be BIT-IDENTICAL to the exact two-shuffle kernel — including repeated
-    words (tf), null text, and whitespace-only docs."""
-    from light_curve_spark.operators.dedup import (
-        simhash_weighted_approx_kernel,
-        simhash_weighted_kernel,
-    )
-    from light_curve_spark.plans.caching import release_operator_caches
-
-    docs = spark.createDataFrame(_zipf_corpus()).repartition(5)
-    exact = {r.doc_id: r.sh for r in simhash_weighted_kernel(docs).collect()}
-    approx = {
-        r.doc_id: r.sh
-        for r in simhash_weighted_approx_kernel(docs, sample_rate=1.0).collect()
-    }
-    release_operator_caches()
-    assert approx == exact
-    # null text -> no words -> sh 0; whitespace-only text normalizes to
-    # ONE empty-string word (split convention, same in both kernels)
-    assert exact[10_000] == 0 and exact[10_001] != 0
-
-
-def test_approx_weighted_simhash_sampled_close_to_exact(spark):
-    """At sample_rate<1 the weight BUCKETS (integer log2) absorb the
-    sampling noise: per-doc hamming between the exact and sampled-df
-    hashes must be small, and hot-word saturation must stay fixed."""
-    from collections import Counter
-
-    from light_curve_spark.operators.dedup import (
-        simhash_weighted_approx_kernel,
-        simhash_weighted_kernel,
-    )
-    from light_curve_spark.plans.caching import release_operator_caches
-
-    docs = spark.createDataFrame(_zipf_corpus(n_docs=200)).repartition(5)
-    exact = {r.doc_id: r.sh for r in simhash_weighted_kernel(docs).collect()}
-    sh = {
-        r.doc_id: r.sh
-        for r in simhash_weighted_approx_kernel(docs, sample_rate=0.25).collect()
-    }
-    release_operator_caches()
-    dists = np.array(
-        [bin((exact[k] ^ sh[k]) & (2**64 - 1)).count("1") for k in exact]
-    )
-    assert np.median(dists) <= 4, f"approx drifted from exact: median {np.median(dists)}"
-    assert np.percentile(dists, 90) <= 16
-
-    modal = Counter(v for k, v in sh.items() if k < 10_000).most_common(1)[0][1]
-    assert modal < 40, f"modal hash shared by {modal} docs — saturation returned"
-
-
-def test_approx_df_requires_weighted(spark):
-    from light_curve_spark.operators.dedup import simhash_dedup
-
-    docs = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "text": ["a b"]}))
-    with pytest.raises(ValueError, match="weighted"):
-        simhash_dedup(docs, approx_df=0.5)
-
-    with pytest.raises(ValueError, match="sample_rate"):
-        from light_curve_spark.operators.dedup import simhash_weighted_approx_kernel
-
-        simhash_weighted_approx_kernel(docs, sample_rate=0.0)
 
 
 def _pipeline_corpus() -> pd.DataFrame:
@@ -254,18 +189,21 @@ def test_ivf_partitioned_layout_prunes_at_source(spark, tmp_path):
     assert top_pruned == top_full
 
 
-def test_approx_weighted_simhash_rate1_matches_scalar_reference(spark):
-    """Close the triangle independently of the exact Spark kernel: the
-    sampled-df kernel at rate 1.0 must equal the naive scalar reference
+def test_weighted_simhash_matches_scalar_reference(spark):
+    """Close the triangle independently of the expression twin: the
+    IDF-weighted kernel must equal the naive scalar reference
     (scripts/oracle_impl.simhash_weighted_ref) on adversarial corpora —
-    unicode, heavy repetition, null text, empty/whitespace strings."""
+    unicode, heavy repetition, null text, empty/whitespace strings — and
+    on the Zipf corpus, whose hot words repeat inside every document
+    (tf > 1), whose null doc hashes to 0 and whose whitespace-only doc
+    normalizes to ONE empty-string word (a nonzero hash)."""
     import os as _os
     import sys as _sys
 
     _sys.path.insert(0, _os.path.join(_os.path.dirname(__file__), "..", "scripts"))
     from oracle_impl import simhash_weighted_ref
 
-    from light_curve_spark.operators.dedup import simhash_weighted_approx_kernel
+    from light_curve_spark.operators.dedup import simhash_weighted_kernel
     from light_curve_spark.plans.caching import release_operator_caches
 
     corpora = []
@@ -288,16 +226,17 @@ def test_approx_weighted_simhash_rate1_matches_scalar_reference(spark):
                     (i, " ".join(f"w{seed}_{i}_{j}" for j in range(3 + i % 9)))
                 )
         corpora.append(rows)
+    corpora.append(
+        [(int(d), t) for d, t in _zipf_corpus().itertuples(index=False)]
+    )
 
     for rows in corpora:
         expect = simhash_weighted_ref(rows)
         docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
-        got = {
-            r.doc_id: r.sh
-            for r in simhash_weighted_approx_kernel(docs, sample_rate=1.0).collect()
-        }
+        got = {r.doc_id: r.sh for r in simhash_weighted_kernel(docs).collect()}
         release_operator_caches()
         assert got == expect
+    assert got[10_000] == 0 and got[10_001] != 0
 
 
 def test_document_attributes_matches_contract_ops(spark):

@@ -1,7 +1,6 @@
 """Round-5 hardening: eval-footprint-bounded contamination, batch-id
 cancellation fix, crash-rerun loser dedup in the doc-status lineage,
-rate-1.0 vocabulary exactness for the sampled-df SimHash, and the
-checkpoint-attribution lock."""
+and the checkpoint-attribution lock."""
 
 import pandas as pd
 import pytest
@@ -166,28 +165,6 @@ def test_doc_status_one_row_per_doc_after_crash_rerun(spark, tmp_path, monkeypat
     n_docs = docs.count()
     assert status.count() == n_docs
     assert status.select("doc_id").distinct().count() == n_docs
-
-
-def test_approx_simhash_rate1_exact_even_with_tiny_max_vocab(spark):
-    """At sample_rate=1.0 the bit-parity claim must not depend on the
-    vocabulary fitting max_vocab: the truncation is skipped, so even
-    max_vocab=5 on a corpus with hundreds of words stays bit-identical
-    to the exact kernel (round-4 ADVICE)."""
-    from light_curve_spark.operators.dedup import (
-        simhash_weighted_approx_kernel,
-        simhash_weighted_kernel,
-    )
-    from tests.test_round4 import _zipf_corpus
-
-    docs = spark.createDataFrame(_zipf_corpus(40)).repartition(4)
-    exact = {r.doc_id: r.sh for r in simhash_weighted_kernel(docs).collect()}
-    approx = {
-        r.doc_id: r.sh
-        for r in simhash_weighted_approx_kernel(
-            docs, sample_rate=1.0, max_vocab=5
-        ).collect()
-    }
-    assert approx == exact
 
 
 # ---------------------------------------------------------------------------

@@ -519,6 +519,38 @@ def test_ivf_centroids_persist_with_layout(spark, tmp_path):
     assert len(all_ids) == 300
 
 
+@pytest.mark.parametrize("case", ["append-missing", "probe-mismatch"])
+def test_ivf_layout_requires_its_codebook(spark, tmp_path, case):
+    """Append and probe share one codebook check: a layout without its
+    _ivf_centroids.json refuses an append even with explicit centroids
+    (nothing is written), and a probe with centroids other than the
+    stored ones raises instead of reading the wrong buckets."""
+    from light_curve_spark.operators.similarity import (
+        append_ivf_partitioned,
+        read_ivf_probe,
+        train_ivf_centroids,
+        write_ivf_partitioned,
+    )
+
+    rng = np.random.default_rng(13)
+    rows = [
+        (i, [float(x) for x in rng.normal(size=8)]) for i in range(120)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    first = emb.filter(F.col("vec_id") < 100)
+    cents = train_ivf_centroids(first, n_centroids=4, sample_size=100)
+    path = str(tmp_path / "ivf")
+    write_ivf_partitioned(first, cents, path)
+    if case == "append-missing":
+        os.remove(os.path.join(path, "_ivf_centroids.json"))
+        with pytest.raises(ValueError, match="_ivf_centroids.json"):
+            append_ivf_partitioned(emb.filter(F.col("vec_id") >= 100), cents, path)
+        assert spark.read.parquet(path).count() == 100
+    else:
+        with pytest.raises(ValueError, match="codebook"):
+            read_ivf_probe(spark, path, cents + 0.5, rows[0][1], nprobe=2)
+
+
 def test_tombstone_documents_matches_batch_on_reduced_corpus(
     spark, tmp_path
 ):
