@@ -222,13 +222,43 @@ def segment_median(
     at once: one lexsort by (key, value), then middle-index gathers.
     ``key`` labels each element's segment (monotone non-decreasing);
     ``seg_starts``/``seg_lengths`` delimit the segments in element order.
-    Shared by feature_frame's median/MAD and the array-native quantile
-    rollup — one implementation to keep edge handling in sync."""
+    Used by feature_frame's median/MAD, whose segments are whole
+    sequences (up to MAX_SEQ_LEN long); the quantile rollup's short
+    buckets use :func:`padded_segment_median`, which it must equal bit
+    for bit on finite values (hypothesis-tested)."""
     order = np.lexsort((values, key))
     sv = values[order]
     hi = seg_starts + seg_lengths // 2  # index of upper middle
     lo = seg_starts + (seg_lengths - 1) // 2
     return 0.5 * (sv[lo] + sv[hi])
+
+
+def padded_segment_median(values: np.ndarray, seg_lengths: np.ndarray) -> np.ndarray:
+    """The :func:`segment_median` of FINITE ``values`` cut into
+    consecutive non-empty segments of ``seg_lengths``, by row sorts
+    instead of a two-key lexsort: each segment becomes one row of a
+    +inf-padded matrix, ``sort(axis=1)`` leaves the padding at the end,
+    and the middles are gathered per row. An order of magnitude faster
+    on many short segments (the quantile rollup's tier buckets).
+
+    Segments are grouped by power-of-two length class, one matrix per
+    class padded to that class's longest segment, so the padding never
+    exceeds the values it pads (a batch of short sequences with one
+    long one would otherwise pad every bucket to the tier width)."""
+    out = np.empty(seg_lengths.shape[0])
+    starts = np.cumsum(seg_lengths) - seg_lengths
+    length_class = np.frexp(seg_lengths.astype(np.float64))[1]
+    for c in np.unique(length_class):
+        sel = np.flatnonzero(length_class == c)
+        ln = seg_lengths[sel]
+        m = np.full((sel.shape[0], int(ln.max())), np.inf)
+        row = np.repeat(np.arange(sel.shape[0]), ln)
+        col = np.arange(row.shape[0]) - np.repeat(np.cumsum(ln) - ln, ln)
+        m[row, col] = values[starts[sel][row] + col]
+        m.sort(axis=1)
+        r = np.arange(sel.shape[0])
+        out[sel] = 0.5 * (m[r, (ln - 1) // 2] + m[r, ln // 2])
+    return out
 
 
 def feature_frame(
@@ -243,7 +273,7 @@ def feature_frame(
     ``flat`` is the concatenation of all series values; ``lengths[i]`` is
     series *i*'s length. One ``np.add.reduceat`` per statistic and one
     ``np.lexsort`` per median pass — no Python loop over series, which is
-    what makes the Arrow-batched mapInPandas operator scale (input_hint:
+    what makes the Arrow-batched mapInArrow operators scale (input_hint:
     "no per-row Python"). Results are identical to calling
     :func:`feature_vector` per series (tested).
 

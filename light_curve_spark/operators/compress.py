@@ -4,11 +4,13 @@ north_star: "Timestamps are delta-of-delta encoded and values Gorilla
 XOR-compressed into per-partition chunk structs persisted back to
 Iceberg"; per-row invariant: decode(encode(tokens)) == tokens EXACTLY.
 
-Shape: one sequence row -> one chunk row (mapInPandas, shuffle-free; the
+Shape: one sequence row -> one chunk row (mapInArrow, shuffle-free; the
 chunk table is written with the same partitioning as the salted input so
 the write needs no extra exchange, SURVEY.md §4.3). Ultra-long outliers
 are pre-split by :func:`chunk_outliers` into (doc_id, chunk_no) sub-series
-so no single Arrow batch or chunk blows executor memory.
+so no single Arrow batch or chunk blows executor memory; ``run_pipeline``
+splits inside its one Python pass instead (:func:`split_outliers_batch`)
+and calls the same per-batch encoder (:func:`encode_chunks_batch`).
 
 Kernels: light_curve_spark.kernels.compression (Pelkonen et al. VLDB'15
 scheme; vectorized encode, see that module's docstring).
@@ -20,6 +22,7 @@ import time
 import zlib
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -32,7 +35,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from light_curve_spark.kernels.compression import CHUNK_CODEC, decode_timestamps
+from light_curve_spark.kernels.compression import (
+    CHUNK_CODEC,
+    decode_timestamps,
+    encode_timestamps_regular,
+    encode_values_batch_blocked,
+)
 
 CHUNK_SCHEMA = StructType(
     [
@@ -64,12 +72,16 @@ DECODED_SCHEMA = StructType(
 def chunk_outliers(seq: DataFrame, max_len: int = 4096) -> DataFrame:
     """Split sequences longer than ``max_len`` into (doc_id, chunk_no)
     sub-sequences using built-in array slicing (no UDF). Keeps every
-    chunk's Arrow footprint bounded regardless of the n_tok long tail."""
-    # clamp to >= 1: n_tok == 0 would yield F.sequence(0, -1), which Spark
-    # evaluates as the DESCENDING sequence [0, -1] — two bogus chunk rows
-    # (one with a negative slice offset) instead of a single empty chunk
+    chunk's Arrow footprint bounded regardless of the n_tok long tail.
+    The chunk count comes from the token array itself, never from a
+    possibly stale ``n_tok``: a short count would drop tokens, a long one
+    would add empty chunk rows. :func:`split_outliers_batch` is the same
+    split on one Arrow batch."""
+    # clamp to >= 1: an empty sequence would yield F.sequence(0, -1), which
+    # Spark evaluates as the DESCENDING sequence [0, -1] — two bogus chunk
+    # rows (one with a negative slice offset) instead of a single empty chunk
     n_chunks = F.greatest(
-        F.ceil(F.col("n_tok") / F.lit(max_len)).cast("int"), F.lit(1)
+        F.ceil(F.size("tokens") / F.lit(max_len)).cast("int"), F.lit(1)
     )
     return (
         seq.withColumn("chunk_no", F.explode(F.sequence(F.lit(0), n_chunks - 1)))
@@ -82,6 +94,32 @@ def chunk_outliers(seq: DataFrame, max_len: int = 4096) -> DataFrame:
     )
 
 
+def split_outliers_batch(b, max_len: int) -> pa.RecordBatch:
+    """:func:`chunk_outliers` on one non-empty Arrow batch of (doc_id,
+    source, tokens): (doc_id, source, chunk_no, tokens) with one row per
+    ``max_len`` slice of each sequence (one empty chunk for an empty
+    one), cut from the list offsets without copying a token."""
+    toks = b.column(b.schema.get_field_index("tokens"))
+    off = toks.offsets.to_numpy().astype(np.int64)
+    n_chunks = np.maximum(-(-(off[1:] - off[:-1]) // max_len), 1)
+    row = np.repeat(np.arange(b.num_rows), n_chunks)
+    chunk_no = np.arange(row.shape[0]) - np.repeat(np.cumsum(n_chunks) - n_chunks, n_chunks)
+    # the slices tile each sequence in order, so each slice's start is
+    # the previous slice's end
+    start = off[:-1][row] + chunk_no * max_len
+    sub_off = np.append(start, off[-1]).astype(np.int32)
+    idx = pa.array(row)
+    return pa.RecordBatch.from_arrays(
+        [
+            b.column(b.schema.get_field_index("doc_id")).take(idx),
+            b.column(b.schema.get_field_index("source")).take(idx),
+            pa.array(chunk_no.astype(np.int32)),
+            pa.ListArray.from_arrays(pa.array(sub_off), toks.values),
+        ],
+        ["doc_id", "source", "chunk_no", "tokens"],
+    )
+
+
 LINEAGE_CHUNK_SCHEMA = StructType(
     list(CHUNK_SCHEMA.fields)
     + [
@@ -91,13 +129,76 @@ LINEAGE_CHUNK_SCHEMA = StructType(
 )
 
 
+def encode_chunks_batch(
+    b,
+    max_len: int,
+    with_lineage: bool = False,
+    t_start: float | None = None,
+) -> pa.RecordBatch | None:
+    """One Arrow batch of (doc_id, source, chunk_no, tokens) chunk rows
+    -> its encoded rows (``CHUNK_SCHEMA``, or ``LINEAGE_CHUNK_SCHEMA``
+    with ``with_lineage``), or None for an empty batch. ``t_start`` (a
+    ``time.time()``) is where the lineage wall starts; by default, this
+    call."""
+    t_start = time.time() if t_start is None else t_start
+    nrows = b.num_rows
+    if nrows == 0:
+        return None
+    toks = b.column(b.schema.get_field_index("tokens"))
+    off = toks.offsets.to_numpy()
+    lengths = (off[1:] - off[:-1]).astype(np.int64)
+    flat = toks.flatten().to_numpy().astype(np.int64)
+    starts = np.cumsum(lengths) - lengths
+    toks_list = [flat[s : s + ln] for s, ln in zip(starts, lengths)]
+    vals = encode_values_batch_blocked(toks_list)  # one vectorized pass
+    chunk_nos = b.column(b.schema.get_field_index("chunk_no")).to_numpy()
+    t0s = chunk_nos.astype(np.int64) * max_len
+    ts_bufs, crcs = [], np.empty(nrows, dtype=np.int64)
+    for i in range(nrows):
+        n = int(lengths[i])
+        t0 = int(t0s[i])
+        crc = zlib.crc32((np.arange(n, dtype=np.int64) + t0).astype("<i8").tobytes())
+        crcs[i] = zlib.crc32(toks_list[i].astype("<i8").tobytes(), crc)
+        ts_bufs.append(encode_timestamps_regular(n, t0))
+    arrays = [
+        b.column(b.schema.get_field_index("doc_id")),
+        b.column(b.schema.get_field_index("source")),
+        pa.array(chunk_nos.astype(np.int32)),
+        pa.array(np.where(lengths > 0, t0s, 0)),
+        pa.array(lengths.astype(np.int32)),
+        pa.array(ts_bufs, type=pa.binary()),
+        pa.array(vals, type=pa.binary()),
+        pa.array(crcs),
+        pa.array([CHUNK_CODEC] * nrows),
+    ]
+    if with_lineage:
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        # batch wall carried ON THE FIRST ROW (zero elsewhere): SUM per
+        # _pid reconstructs the task wall EXACTLY. A per-row integer
+        # spread (wall // nrows) would truncate to zero whenever a batch
+        # encodes faster than 1 ms/row, under-reporting every
+        # non-straggler task.
+        w = np.zeros(nrows, dtype=np.int64)
+        w[0] = int((time.time() - t_start) * 1000)
+        arrays += [
+            pa.array(np.full(nrows, ctx.partitionId() if ctx else -1, dtype=np.int32)),
+            pa.array(w),
+        ]
+    schema = LINEAGE_CHUNK_SCHEMA if with_lineage else CHUNK_SCHEMA
+    return pa.RecordBatch.from_arrays(arrays, schema.fieldNames())
+
+
 def encode_chunks(
     seq: DataFrame,
     max_len: int = 4096,
     with_lineage: bool = False,
 ) -> DataFrame:
-    """sequences -> chunk table. t_i is the global token position, so a
-    chunk of a split outlier starts at chunk_no * max_len.
+    """sequences -> chunk table: :func:`chunk_outliers`, then
+    :func:`encode_chunks_batch` over each Arrow batch. t_i is the global
+    token position, so a chunk of a split outlier starts at
+    chunk_no * max_len.
 
     ``with_lineage=True`` adds ``_pid`` (TaskContext partition id) and
     ``_wall_ms`` (encode wall time; the batch total rides on the batch's
@@ -107,83 +208,12 @@ def encode_chunks(
     """
     if "chunk_no" not in seq.columns:
         seq = chunk_outliers(seq, max_len=max_len)
-    cols = [
-        "doc_id",
-        "source",
-        "chunk_no",
-        "t0",
-        "n",
-        "ts_dod",
-        "vals_gorilla",
-        "checksum",
-        "codec",
-    ]
 
     def fn(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        from light_curve_spark.kernels.compression import (
-            encode_timestamps_regular,
-            encode_values_batch_blocked,
-        )
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
         for b in batches:
-            t_start = time.time()
-            nrows = b.num_rows
-            if nrows == 0:
-                continue
-            toks = b.column(b.schema.get_field_index("tokens"))
-            off = toks.offsets.to_numpy()
-            lengths = (off[1:] - off[:-1]).astype(np.int64)
-            flat = toks.flatten().to_numpy().astype(np.int64)
-            starts = np.cumsum(lengths) - lengths
-            toks_list = [
-                flat[s : s + ln] for s, ln in zip(starts, lengths)
-            ]
-            vals = encode_values_batch_blocked(toks_list)  # one vectorized pass
-            chunk_nos = b.column(b.schema.get_field_index("chunk_no")).to_numpy()
-            t0s = chunk_nos.astype(np.int64) * max_len
-            ts_bufs, crcs = [], np.empty(nrows, dtype=np.int64)
-            for i in range(nrows):
-                n = int(lengths[i])
-                t0 = int(t0s[i])
-                crc = zlib.crc32(
-                    (np.arange(n, dtype=np.int64) + t0).astype("<i8").tobytes()
-                )
-                crcs[i] = zlib.crc32(toks_list[i].astype("<i8").tobytes(), crc)
-                ts_bufs.append(encode_timestamps_regular(n, t0))
-            arrays = [
-                b.column(b.schema.get_field_index("doc_id")),
-                b.column(b.schema.get_field_index("source")),
-                pa.array(chunk_nos.astype(np.int32)),
-                pa.array(np.where(lengths > 0, t0s, 0)),
-                pa.array(lengths.astype(np.int32)),
-                pa.array(ts_bufs, type=pa.binary()),
-                pa.array(vals, type=pa.binary()),
-                pa.array(crcs),
-                pa.array([CHUNK_CODEC] * nrows),
-            ]
-            names = list(cols)
-            if with_lineage:
-                wall = int((time.time() - t_start) * 1000)
-                # batch wall carried ON THE FIRST ROW (zero elsewhere):
-                # SUM per _pid reconstructs the task wall EXACTLY. The
-                # old per-row integer spread (wall // nrows) truncated to
-                # zero whenever a batch encoded faster than 1 ms/row —
-                # silently under-reporting every non-straggler task
-                # (found by the round-4 mega-key skew bench).
-                w = np.zeros(nrows, dtype=np.int64)
-                if nrows:
-                    w[0] = wall
-                arrays += [
-                    pa.array(np.full(nrows, pid, dtype=np.int32)),
-                    pa.array(w),
-                ]
-                names += ["_pid", "_wall_ms"]
-            yield pa.RecordBatch.from_arrays(arrays, names)
+            out = encode_chunks_batch(b, max_len, with_lineage)
+            if out is not None:
+                yield out
 
     schema = LINEAGE_CHUNK_SCHEMA if with_lineage else CHUNK_SCHEMA
     return seq.select("doc_id", "source", "chunk_no", "tokens").mapInArrow(
@@ -209,8 +239,6 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
     Arrow to unbox it again)."""
 
     def fn(batches):
-        import pyarrow as pa
-
         from light_curve_spark.kernels.compression import (
             decode_values_batch_blocked,
         )

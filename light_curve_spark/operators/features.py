@@ -7,7 +7,8 @@ Two implementations with identical semantics (SURVEY.md §7 phase 3):
   feature extraction is a shuffle-free map; inside each Arrow batch the
   segment-vectorized kernel (:func:`...kernels.features.feature_frame`)
   processes every series at once with reduceat/lexsort — no per-row
-  Python (input_hint).
+  Python (input_hint). Its per-batch body, :func:`features_batch`, is
+  also one of the four calls of ``run_pipeline``'s single Python pass.
 
 - :func:`extract_features_relational` — the SQL-checkable twin for the
   long form. Pure built-in aggregates/windows (Catalyst hash aggregate
@@ -22,6 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -43,12 +45,51 @@ def features_schema(with_periodogram: bool = False) -> StructType:
     return StructType(_BASE_FIELDS + [StructField(n, DoubleType(), True) for n in names])
 
 
+def features_batch(
+    b, freqs: np.ndarray | None = None, irregular: bool = False
+) -> pa.RecordBatch | None:
+    """One Arrow batch of sequences -> its feature rows
+    (``features_schema(freqs is not None)``), or None for an empty batch.
+
+    An empty sequence gets ``count`` 0 and NaN for every other feature
+    (the kernel's undefined-statistic value), so the operator stays one
+    row in, one row out."""
+    if b.num_rows == 0:
+        return None
+    names = list(FEATURE_NAMES) + (list(PERIODOGRAM_NAMES) if freqs is not None else [])
+    toks = b.column(b.schema.get_field_index("tokens"))
+    off = toks.offsets.to_numpy()
+    lengths = (off[1:] - off[:-1]).astype(np.int64)
+    flat = toks.flatten().to_numpy().astype(np.float64)
+    t_flat = None
+    if irregular and freqs is not None:
+        # t_i = exclusive cumsum of (1 + tok mod 7) within each segment
+        starts = np.cumsum(lengths) - lengths
+        elem = np.repeat(np.arange(lengths.shape[0]), lengths)
+        deltas = 1.0 + np.mod(flat, 7.0)
+        excl = np.cumsum(deltas) - deltas
+        t_flat = excl - excl[starts[elem]]
+    full = lengths > 0
+    fr = feature_frame(flat, lengths[full], t_flat=t_flat, freqs=freqs)
+    if not full.all():
+        for n in names:
+            col = np.full(lengths.shape[0], 0.0 if n == "count" else np.nan)
+            col[full] = fr[n]
+            fr[n] = col
+    arrays = [
+        b.column(b.schema.get_field_index("doc_id")),
+        b.column(b.schema.get_field_index("source")),
+    ] + [pa.array(fr[n], type=pa.float64()) for n in names]
+    return pa.RecordBatch.from_arrays(arrays, ["doc_id", "source", *names])
+
+
 def extract_features(
     seq: DataFrame,
     freqs: np.ndarray | None = None,
     irregular: bool = False,
 ) -> DataFrame:
-    """Per-sequence feature vector; one row in, one row out, no shuffle.
+    """Per-sequence feature vector; one row in, one row out, no shuffle:
+    :func:`features_batch` over each Arrow batch.
 
     ``freqs`` (optional) adds periodogram moments on that fixed frequency
     grid. ``irregular=True`` uses the deterministic irregular time axis
@@ -59,36 +100,15 @@ def extract_features(
     segment-vectorized kernel consumes — the pandas route would build one
     Python object per row just to concatenate them back.
     """
-    import pyarrow as pa
-
-    schema = features_schema(with_periodogram=freqs is not None)
     freqs_arr = None if freqs is None else np.asarray(freqs, dtype=np.float64)
-    names = [f.name for f in schema.fields[2:]]
 
     def fn(batches):
         for b in batches:
-            if b.num_rows == 0:
-                continue
-            toks = b.column(b.schema.get_field_index("tokens"))
-            off = toks.offsets.to_numpy()
-            lengths = (off[1:] - off[:-1]).astype(np.int64)
-            flat = toks.flatten().to_numpy().astype(np.float64)
-            t_flat = None
-            if irregular and freqs_arr is not None:
-                # t_i = exclusive cumsum of (1 + tok mod 7) within each segment
-                starts = np.cumsum(lengths) - lengths
-                elem = np.repeat(np.arange(lengths.shape[0]), lengths)
-                deltas = 1.0 + np.mod(flat, 7.0)
-                excl = np.cumsum(deltas) - deltas
-                t_flat = excl - excl[starts][elem]
-            fr = feature_frame(flat, lengths, t_flat=t_flat, freqs=freqs_arr)
-            arrays = [
-                b.column(b.schema.get_field_index("doc_id")),
-                b.column(b.schema.get_field_index("source")),
-            ] + [pa.array(fr[n], type=pa.float64()) for n in names]
-            yield pa.RecordBatch.from_arrays(arrays, ["doc_id", "source", *names])
+            out = features_batch(b, freqs_arr, irregular)
+            if out is not None:
+                yield out
 
-    return seq.mapInArrow(fn, schema=schema)
+    return seq.mapInArrow(fn, schema=features_schema(with_periodogram=freqs is not None))
 
 
 def extract_features_grouped(
@@ -104,8 +124,6 @@ def extract_features_grouped(
     and reduceat across groups instead of per-group numpy dispatch.
     All FEATURE_NAMES stats are order-independent, so collect_list's
     arbitrary intra-group order is immaterial."""
-    import pyarrow as pa
-
     keys = keys or ["doc_id"]
     in_fields = {f.name: f for f in series.schema.fields}
     schema = StructType(

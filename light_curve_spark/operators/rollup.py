@@ -21,10 +21,20 @@ beats sketches for the golden-parity gate (SURVEY.md §7 phase 4).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from light_curve_spark.functions import bucketize
+from light_curve_spark.kernels.features import padded_segment_median
 
 ROLLUP_AGG_COLS = ("n_points", "v_sum", "v_min", "v_max")
 
@@ -222,6 +232,93 @@ def retract_from_rollup(
     return _tiers_from_base(fixed, keys, tiers)
 
 
+ROLLUP_ARRAYS_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("source", StringType(), True),
+        StructField("tier", IntegerType(), False),
+        StructField("bucket", LongType(), False),
+        StructField("n_points", LongType(), False),
+        StructField("v_sum", DoubleType(), False),
+        StructField("v_min", DoubleType(), False),
+        StructField("v_max", DoubleType(), False),
+        StructField("v_mean", DoubleType(), False),
+    ]
+)
+
+QUANTILES_ARRAYS_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("source", StringType(), True),
+        StructField("tier", IntegerType(), False),
+        StructField("bucket", LongType(), False),
+        StructField("v_median", DoubleType(), False),
+        StructField("v_mad", DoubleType(), False),
+    ]
+)
+
+
+def check_array_tiers(base_width, tiers: tuple[int, ...]) -> int:
+    """The plan-time argument check of the array-native rollups; returns
+    the integral base width their batch functions take."""
+    _check_tiers(tiers)
+    return _int_width(base_width)
+
+
+def rollup_tiers_batch(b, base_width: int, tiers: tuple[int, ...]) -> pa.RecordBatch | None:
+    """One Arrow batch of sequences -> its tier rows
+    (``ROLLUP_ARRAYS_SCHEMA``), or None when it holds no token. Tier 1
+    reduces the raw tokens over (row, bucket) runs; each coarser tier
+    reduces the finer tier's partials."""
+    if b.num_rows == 0:
+        return None
+    flat, lengths, starts, elem, pos = _flat_token_segments(b)
+    if flat.shape[0] == 0:
+        return None  # all-empty batch: no buckets (reduceat([0]) would throw)
+    parts = []
+    # tier 1 from raw, segment boundaries where (row, bucket) changes
+    bucket = pos // (base_width * tiers[0])
+    gid = elem * (1 << 40) | bucket  # composite, monotone within batch
+    seg = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])
+    s_elem = elem[seg]
+    s_bucket = bucket[seg]
+    s_n = np.diff(np.r_[seg, flat.shape[0]])
+    s_sum = np.add.reduceat(flat, seg)
+    s_min = np.minimum.reduceat(flat, seg)
+    s_max = np.maximum.reduceat(flat, seg)
+
+    parts.append((tiers[0], s_elem, s_bucket, s_n, s_sum, s_min, s_max))
+    for prev_t, t in zip(tiers, tiers[1:]):
+        f = t // prev_t
+        cb = s_bucket // f
+        cg = s_elem * (1 << 40) | cb
+        cseg = np.flatnonzero(np.r_[True, cg[1:] != cg[:-1]])
+        s_n = np.add.reduceat(s_n, cseg)
+        s_sum = np.add.reduceat(s_sum, cseg)
+        s_min = np.minimum.reduceat(s_min, cseg)
+        s_max = np.maximum.reduceat(s_max, cseg)
+        s_elem = s_elem[cseg]
+        s_bucket = cb[cseg]
+        parts.append((t, s_elem, s_bucket, s_n, s_sum, s_min, s_max))
+
+    idx = pa.array(np.concatenate([p[1] for p in parts]))
+    tier_all = np.concatenate(
+        [np.full(p[1].shape[0], p[0], dtype=np.int32) for p in parts]
+    )
+    arrays = [
+        b.column(b.schema.get_field_index("doc_id")).take(idx),
+        b.column(b.schema.get_field_index("source")).take(idx),
+        pa.array(tier_all),
+        pa.array(np.concatenate([p[2] for p in parts])),
+        pa.array(np.concatenate([p[3] for p in parts])),
+        pa.array(np.concatenate([p[4] for p in parts])),
+        pa.array(np.concatenate([p[5] for p in parts])),
+        pa.array(np.concatenate([p[6] for p in parts])),
+        pa.array(np.concatenate([p[4] / p[3] for p in parts])),
+    ]
+    return pa.RecordBatch.from_arrays(arrays, ROLLUP_ARRAYS_SCHEMA.fieldNames())
+
+
 def rollup_tiers_arrays(
     seq: DataFrame,
     base_width: int = 16,
@@ -233,104 +330,67 @@ def rollup_tiers_arrays(
     bucket of a given doc lives inside that one row — groupBy would
     shuffle 6M exploded points to co-locate data that is already
     co-located. Instead the whole 1x/10x/100x cascade runs inside one
-    mapInPandas pass, segment-vectorized (reduceat over bucket
-    boundaries; coarser tiers reduce the finer tier's partials, the
-    same nesting rule as :func:`rollup_tiers`). ~25x fewer rows ever leave
-    the kernel, and none of them cross an exchange.
+    mapInArrow pass (:func:`rollup_tiers_batch` per Arrow batch),
+    segment-vectorized (reduceat over bucket boundaries; coarser tiers
+    reduce the finer tier's partials, the same nesting rule as
+    :func:`rollup_tiers`). ~25x fewer rows ever leave the kernel, and
+    none of them cross an exchange.
 
     At 100 TB this is the difference between the rollup being a free
     rider on the feature-extraction scan and being the job's largest
     shuffle. Results are identical to rollup_tiers(explode_series(seq))
-    (tested). Output: (doc_id, source, tier, bucket, n_points, v_sum,
-    v_min, v_max, v_mean).
+    (tested). Output: ``ROLLUP_ARRAYS_SCHEMA``, (doc_id, source, tier,
+    bucket, n_points, v_sum, v_min, v_max, v_mean).
     """
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("source", StringType(), True),
-            StructField("tier", IntegerType(), False),
-            StructField("bucket", LongType(), False),
-            StructField("n_points", LongType(), False),
-            StructField("v_sum", DoubleType(), False),
-            StructField("v_min", DoubleType(), False),
-            StructField("v_max", DoubleType(), False),
-            StructField("v_mean", DoubleType(), False),
-        ]
-    )
-    out_names = [f.name for f in schema.fields]
-
-    _check_tiers(tiers)
-    base_width = _int_width(base_width)
+    width = check_array_tiers(base_width, tiers)
 
     def fn(batches):
         for b in batches:
-            if b.num_rows == 0:
-                continue
-            flat, lengths, starts, elem, pos = _flat_token_segments(b)
-            if flat.shape[0] == 0:
-                continue  # all-empty batch: no buckets (reduceat([0]) would throw)
-            doc_col = b.column(b.schema.get_field_index("doc_id"))
-            src_col = b.column(b.schema.get_field_index("source"))
-
-            parts = []
-            # tier 1 from raw, segment boundaries where (row, bucket) changes
-            width = base_width * tiers[0]
-            bucket = pos // width
-            gid = elem * (1 << 40) | bucket  # composite, monotone within batch
-            seg = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])
-            s_elem = elem[seg]
-            s_bucket = bucket[seg]
-            s_n = np.diff(np.r_[seg, flat.shape[0]])
-            s_sum = np.add.reduceat(flat, seg)
-            s_min = np.minimum.reduceat(flat, seg)
-            s_max = np.maximum.reduceat(flat, seg)
-
-            parts.append((tiers[0], s_elem, s_bucket, s_n, s_sum, s_min, s_max))
-            for prev_t, t in zip(tiers, tiers[1:]):
-                f = t // prev_t
-                cb = s_bucket // f
-                cg = s_elem * (1 << 40) | cb
-                cseg = np.flatnonzero(np.r_[True, cg[1:] != cg[:-1]])
-                s_n = np.add.reduceat(s_n, cseg)
-                s_sum = np.add.reduceat(s_sum, cseg)
-                s_min = np.minimum.reduceat(s_min, cseg)
-                s_max = np.maximum.reduceat(s_max, cseg)
-                s_elem = s_elem[cseg]
-                s_bucket = cb[cseg]
-                parts.append((t, s_elem, s_bucket, s_n, s_sum, s_min, s_max))
-
-            e_all = np.concatenate([p[1] for p in parts])
-            tier_all = np.concatenate(
-                [np.full(p[1].shape[0], p[0], dtype=np.int32) for p in parts]
-            )
-            idx = pa.array(e_all)
-            arrays = [
-                doc_col.take(idx),
-                src_col.take(idx),
-                pa.array(tier_all),
-                pa.array(np.concatenate([p[2] for p in parts])),
-                pa.array(np.concatenate([p[3] for p in parts])),
-                pa.array(np.concatenate([p[4] for p in parts])),
-                pa.array(np.concatenate([p[5] for p in parts])),
-                pa.array(np.concatenate([p[6] for p in parts])),
-                pa.array(
-                    np.concatenate([p[4] / p[3] for p in parts])
-                ),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, out_names)
+            out = rollup_tiers_batch(b, width, tiers)
+            if out is not None:
+                yield out
 
     return seq.select("doc_id", "source", "tokens", "n_tok").mapInArrow(
-        fn, schema=schema
+        fn, schema=ROLLUP_ARRAYS_SCHEMA
+    )
+
+
+def rollup_quantiles_batch(
+    b, base_width: int, tiers: tuple[int, ...]
+) -> pa.RecordBatch | None:
+    """One Arrow batch of sequences -> its exact per-bucket median/MAD
+    rows (``QUANTILES_ARRAYS_SCHEMA``), or None when it holds no token.
+    Two :func:`padded_segment_median` passes per tier: the medians, then
+    the medians of the absolute deviations from them."""
+    if b.num_rows == 0:
+        return None
+    flat, lengths, starts, elem, pos = _flat_token_segments(b)
+    if flat.shape[0] == 0:
+        return None  # all-empty batch: no buckets (empty medians would throw)
+    e_parts, t_parts, b_parts, med_parts, mad_parts = [], [], [], [], []
+    for t in tiers:
+        bucket = pos // (base_width * t)
+        gid = elem * (1 << 40) | bucket  # monotone within batch
+        seg = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])
+        seg_len = np.diff(np.r_[seg, flat.shape[0]])
+        med = padded_segment_median(flat, seg_len)
+        absd = np.abs(flat - np.repeat(med, seg_len))
+        e_parts.append(elem[seg])
+        t_parts.append(np.full(seg.shape[0], t, dtype=np.int32))
+        b_parts.append(bucket[seg])
+        med_parts.append(med)
+        mad_parts.append(padded_segment_median(absd, seg_len))
+    idx = pa.array(np.concatenate(e_parts))
+    return pa.RecordBatch.from_arrays(
+        [
+            b.column(b.schema.get_field_index("doc_id")).take(idx),
+            b.column(b.schema.get_field_index("source")).take(idx),
+            pa.array(np.concatenate(t_parts)),
+            pa.array(np.concatenate(b_parts)),
+            pa.array(np.concatenate(med_parts)),
+            pa.array(np.concatenate(mad_parts)),
+        ],
+        QUANTILES_ARRAYS_SCHEMA.fieldNames(),
     )
 
 
@@ -348,77 +408,21 @@ def rollup_quantiles_arrays(
     non-decomposable, so it was the pipeline's largest exchange — the
     stage that hit the 1 GB-heap OOM at the 500k-sequence stress run).
     But a sequence's buckets are contiguous runs of its own row, so the
-    exact per-bucket median/MAD reduce inside one mapInArrow pass: one
-    ``np.lexsort`` per tier per batch for the medians, one more for the
-    MADs (the same segment-median machinery as kernels feature_frame).
-    Results bit-match the relational path (tested) — token values are
-    integer-valued f64, and both paths take the exact mean-of-two-middles
-    median."""
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("source", StringType(), True),
-            StructField("tier", IntegerType(), False),
-            StructField("bucket", LongType(), False),
-            StructField("v_median", DoubleType(), False),
-            StructField("v_mad", DoubleType(), False),
-        ]
-    )
-
-    _check_tiers(tiers)
-    base_width = _int_width(base_width)
+    exact per-bucket median/MAD reduce inside one mapInArrow pass
+    (:func:`rollup_quantiles_batch` per Arrow batch). Results bit-match
+    the relational path (tested) — token values are integer-valued f64,
+    and both paths take the exact mean-of-two-middles median."""
+    width = check_array_tiers(base_width, tiers)
 
     def fn(batches):
-        from light_curve_spark.kernels.features import segment_median
-
         for b in batches:
-            if b.num_rows == 0:
-                continue
-            flat, lengths, starts, elem, pos = _flat_token_segments(b)
-            if flat.shape[0] == 0:
-                continue  # all-empty batch: no buckets (empty medians would throw)
-            doc_col = b.column(b.schema.get_field_index("doc_id"))
-            src_col = b.column(b.schema.get_field_index("source"))
-            e_parts, t_parts, b_parts, med_parts, mad_parts = [], [], [], [], []
-            for t in tiers:
-                width = base_width * t
-                bucket = pos // width
-                gid = elem * (1 << 40) | bucket  # monotone within batch
-                seg = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])
-                seg_len = np.diff(np.r_[seg, flat.shape[0]])
-                med = segment_median(flat, gid, seg, seg_len)
-                seg_of = np.repeat(np.arange(seg.shape[0]), seg_len)
-                absd = np.abs(flat - med[seg_of])
-                mad = segment_median(absd, gid, seg, seg_len)
-                e_parts.append(elem[seg])
-                t_parts.append(np.full(seg.shape[0], t, dtype=np.int32))
-                b_parts.append(bucket[seg])
-                med_parts.append(med)
-                mad_parts.append(mad)
-            idx = pa.array(np.concatenate(e_parts))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_col.take(idx),
-                    src_col.take(idx),
-                    pa.array(np.concatenate(t_parts)),
-                    pa.array(np.concatenate(b_parts)),
-                    pa.array(np.concatenate(med_parts)),
-                    pa.array(np.concatenate(mad_parts)),
-                ],
-                [f.name for f in schema.fields],
-            )
+            out = rollup_quantiles_batch(b, width, tiers)
+            if out is not None:
+                yield out
 
-    return seq.select("doc_id", "source", "tokens").mapInArrow(fn, schema=schema)
+    return seq.select("doc_id", "source", "tokens").mapInArrow(
+        fn, schema=QUANTILES_ARRAYS_SCHEMA
+    )
 
 
 def rollup_distinct(

@@ -7,14 +7,27 @@
 with batch resume from a snapshot checkpoint (north_rule: "resumable from
 checkpoint with per-partition lineage + metrics").
 
+One Python crossing per group: a single ``mapInArrow`` over the salted
+sequences calls the four per-batch functions behind the public operators
+(``features_batch``, ``rollup_tiers_batch``, ``rollup_quantiles_batch``
+and ``encode_chunks_batch`` after ``split_outliers_batch``) on each
+Arrow batch, and emits one tagged union: an int ``_table`` column plus
+the union of the four output schemas, all nullable. That frame is
+persisted once; each table append is a JVM-only
+``filter(_table == k).select(...)`` of it, so the tokens cross into
+Python once and pay the per-task floor once. No shuffle beyond the
+salted repartition.
+
 Resume model (SURVEY.md §2.9 — deliberately NOT Structured Streaming):
 the input is split into ``n_groups`` doc-bucket groups; each group runs
 as one job appending one snapshot per output table, then the group id +
 input snapshot are recorded in a JSON checkpoint. A restarted run skips
 completed groups. Partition-level lineage rows
 (partition_id, input_snapshot, rows, bytes, wall_ms) are emitted to the
-metrics table from inside the encode kernel via TaskContext — no extra
-pass over the data.
+metrics table from inside the fused pass via TaskContext — no extra
+pass over the data. ``wall_ms`` covers the whole fused per-batch pass
+(features, both rollups, the outlier split and the encode); it rides on
+each batch's first chunk row, so SUM per partition stays exact.
 """
 
 from __future__ import annotations
@@ -25,14 +38,24 @@ import time
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from light_curve_spark.operators.compress import encode_chunks
-from light_curve_spark.operators.features import extract_features
+from light_curve_spark.operators.compress import (
+    LINEAGE_CHUNK_SCHEMA,
+    encode_chunks_batch,
+    split_outliers_batch,
+)
+from light_curve_spark.operators.features import features_batch, features_schema
 from light_curve_spark.operators.rollup import (
-    rollup_quantiles_arrays,
-    rollup_tiers_arrays,
+    QUANTILES_ARRAYS_SCHEMA,
+    ROLLUP_ARRAYS_SCHEMA,
+    check_array_tiers,
+    rollup_quantiles_batch,
+    rollup_tiers_batch,
 )
 from light_curve_spark.plans.caching import release_operator_caches
 from light_curve_spark.plans.salting import salted_repartition
@@ -71,6 +94,68 @@ def save_checkpoint(cfg: PipelineConfig, state: dict) -> None:
     os.replace(tmp, _checkpoint_path(cfg))
 
 
+def _sequence_tables(
+    gseq: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The fused group frame and, selected from it, the features,
+    rollup, rollup_quantiles and lineage-chunk tables: one mapInArrow
+    runs all four per-batch functions on each batch of ``gseq``, tagging
+    each output batch with its table's index in ``_table``."""
+    schemas = [
+        features_schema(with_periodogram=True),
+        ROLLUP_ARRAYS_SCHEMA,
+        QUANTILES_ARRAYS_SCHEMA,
+        LINEAGE_CHUNK_SCHEMA,
+    ]
+    # _table plus every output column once (shared columns, such as
+    # doc_id or tier, have one type in every schema), all nullable
+    types = {f.name: f.dataType for schema in schemas for f in schema.fields}
+    union = StructType(
+        [StructField("_table", IntegerType(), False)]
+        + [StructField(n, t, True) for n, t in types.items()]
+    )
+    arrow_union = to_arrow_schema(union)
+    data_fields = list(arrow_union)[1:]
+    freqs = np.asarray(cfg.freqs, dtype=np.float64)
+    width = check_array_tiers(cfg.base_width, cfg.tiers)
+    tiers, max_len = cfg.tiers, cfg.max_chunk_len
+
+    def fn(batches):
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            t_start = time.time()
+            outs = [
+                features_batch(b, freqs),
+                rollup_tiers_batch(b, width, tiers),
+                rollup_quantiles_batch(b, width, tiers),
+                # last, so its lineage wall covers the whole fused pass
+                encode_chunks_batch(
+                    split_outliers_batch(b, max_len),
+                    max_len,
+                    with_lineage=True,
+                    t_start=t_start,
+                ),
+            ]
+            for k, out in enumerate(outs):
+                if out is None:
+                    continue
+                n = out.num_rows
+                cols = dict(zip(out.schema.names, out.columns))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.full(n, k, dtype=np.int32))]
+                    + [cols[f.name] if f.name in cols else pa.nulls(n, f.type) for f in data_fields],
+                    schema=arrow_union,
+                )
+
+    fused = gseq.select("doc_id", "source", "tokens").mapInArrow(fn, schema=union)
+    tables = [
+        fused.filter(F.col("_table") == k).select(*schema.fieldNames())
+        for k, schema in enumerate(schemas)
+    ]
+    return fused, tables
+
+
 def run_pipeline(
     spark: SparkSession, seq: DataFrame, cfg: PipelineConfig, storage=None
 ) -> dict:
@@ -95,33 +180,12 @@ def run_pipeline(
         t_start = time.time()
         gseq = seq.filter(F.col("_group") == group).drop("_group")
         gseq = salted_repartition(gseq, cfg.num_partitions, cfg.n_buckets)
-        gseq.persist()
+        fused, (feats, rollup, quantiles, chunks) = _sequence_tables(gseq, cfg)
+        fused.persist()
         try:
-            feats = extract_features(gseq, freqs=np.asarray(cfg.freqs))
             storage.append(feats, "features", partition_by=["source"])
-
-            # array-native cascade: zero-shuffle (see rollup_tiers_arrays)
-            storage.append(
-                rollup_tiers_arrays(
-                    gseq, base_width=cfg.base_width, tiers=cfg.tiers
-                ),
-                "rollup",
-                partition_by=["tier", "source"],
-            )
-            # array-native: exact median/MAD without exploding+shuffling
-            # every point (was the pipeline's largest exchange)
-            storage.append(
-                rollup_quantiles_arrays(
-                    gseq, base_width=cfg.base_width, tiers=cfg.tiers
-                ),
-                "rollup_quantiles",
-                partition_by=["tier"],
-            )
-
-            chunks = encode_chunks(
-                gseq, max_len=cfg.max_chunk_len, with_lineage=True
-            )
-            chunks.persist()
+            storage.append(rollup, "rollup", partition_by=["tier", "source"])
+            storage.append(quantiles, "rollup_quantiles", partition_by=["tier"])
             storage.append(
                 chunks.drop("_pid", "_wall_ms"), "chunks", partition_by=["source"]
             )
@@ -139,9 +203,8 @@ def run_pipeline(
                 .withColumn("group", F.lit(group))
             )
             storage.append(lineage, "metrics")
-            chunks.unpersist()
         finally:
-            gseq.unpersist()
+            fused.unpersist()
             # release any operator-level caches (dedup inverted
             # indexes) accumulated during this group
             release_operator_caches()

@@ -104,6 +104,37 @@ def main() -> None:
     )
     assert "Exchange" not in plan3, "array rollup must not shuffle"
 
+    # 3b. run_pipeline's fused group frame: ONE Python crossing for the
+    # features, both array rollups and the chunk encode; the only
+    # Exchange is the salted repartition. Each table append is a JVM
+    # filter + select of the persisted frame
+    from light_curve_spark.plans.pipeline import PipelineConfig, _sequence_tables
+    from light_curve_spark.plans.salting import salted_repartition
+
+    cfg = PipelineConfig(out_root="", num_partitions=4)
+    fused, tables = _sequence_tables(salted_repartition(seq, cfg.num_partitions), cfg)
+    plan3b = formatted(fused)
+    sections.append(
+        (
+            "run_pipeline group frame (one MapInArrow for features, rollup, "
+            "rollup_quantiles and chunks; the salted repartition is the "
+            "only Exchange)",
+            plan3b,
+            [("MapInArrow (", 1), ("Exchange (", 1)],
+        )
+    )
+    fused.persist()
+    plan3c = formatted(tables[1])
+    fused.unpersist()
+    sections.append(
+        (
+            "run_pipeline table append over the persisted group frame "
+            "(JVM filter on _table + select; no Python crossing)",
+            plan3c,
+            ["InMemoryTableScan", "[(_table#"],
+        )
+    )
+
     # 4. parity check: broadcast join
     r = rollup_tiers_arrays(seq)
     plan4 = formatted(

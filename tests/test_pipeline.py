@@ -95,3 +95,86 @@ def test_iceberg_storage_contract_mocked():
 
     spark.sql.return_value.collect.return_value = []
     assert st.current_snapshot("db.tbl") is None
+
+
+def _sorted_pandas(df, keys):
+    return df.select(*sorted(df.columns)).toPandas().sort_values(keys).reset_index(drop=True)
+
+
+def test_pipeline_tables_equal_public_operators(spark, tmp_path):
+    """The fused single-crossing pass writes exactly what the four public
+    operators produce on the same input — including an empty sequence,
+    one of exactly two chunks' length and a split outlier — its lineage
+    rows add up to the chunk table, and its group frame holds one
+    MapInArrow."""
+    import pandas as pd
+
+    from light_curve_spark.operators.compress import encode_chunks
+    from light_curve_spark.operators.features import extract_features
+    from light_curve_spark.operators.rollup import (
+        rollup_quantiles_arrays,
+        rollup_tiers_arrays,
+    )
+    from light_curve_spark.plans.pipeline import _sequence_tables
+    from light_curve_spark.plans.salting import salted_repartition
+    from light_curve_spark.sources.synthetic import SEQUENCES_SCHEMA
+
+    rng = np.random.default_rng(5)
+    edge = spark.createDataFrame(
+        [
+            ("edge-empty", [], 0, "web"),
+            ("edge-128", rng.integers(0, 5000, 128).tolist(), 128, "code"),
+            ("edge-outlier", rng.integers(0, 5000, 1000).tolist(), 1000, "web"),
+        ],
+        SEQUENCES_SCHEMA,
+    )
+    seq = synthetic_sequences(spark, 40, seed=11).unionByName(edge)
+    out = str(tmp_path / "pipe")
+    cfg = PipelineConfig(out_root=out, n_groups=2, num_partitions=3, max_chunk_len=64)
+    storage = ParquetSnapshotStorage(spark, out)
+    assert run_pipeline(spark, seq, cfg, storage=storage)["groups_run"] == 2
+
+    expected = {
+        "features": (extract_features(seq, freqs=np.asarray(cfg.freqs)), ["doc_id"]),
+        "rollup": (
+            rollup_tiers_arrays(seq, base_width=cfg.base_width, tiers=cfg.tiers),
+            ["doc_id", "tier", "bucket"],
+        ),
+        "rollup_quantiles": (
+            rollup_quantiles_arrays(seq, base_width=cfg.base_width, tiers=cfg.tiers),
+            ["doc_id", "tier", "bucket"],
+        ),
+        "chunks": (encode_chunks(seq, max_len=cfg.max_chunk_len), ["doc_id", "chunk_no"]),
+    }
+    for table, (want, keys) in expected.items():
+        got = storage.read(table)
+        assert sorted(got.columns) == sorted(want.columns), table
+        pd.testing.assert_frame_equal(
+            _sorted_pandas(got, keys),
+            _sorted_pandas(want, keys),
+            check_dtype=False,
+            check_exact=True,
+            obj=table,
+        )
+    empty = storage.read("features").filter(F.col("doc_id") == "edge-empty").head()
+    assert empty["count"] == 0.0 and np.isnan(empty["mean"])
+    chunks = storage.read("chunks")
+    assert chunks.filter(F.col("doc_id") == "edge-128").count() == 2
+    assert chunks.filter(F.col("doc_id") == "edge-outlier").count() == 16
+    assert chunks.filter(F.col("doc_id") == "edge-empty").head().n == 0
+
+    totals = chunks.select(
+        F.count("*").alias("rows"),
+        (F.sum(F.length("ts_dod")) + F.sum(F.length("vals_gorilla"))).alias("bytes"),
+    ).head()
+    lineage = storage.read("metrics").select(
+        F.sum("rows").alias("rows"), F.sum("bytes").alias("bytes")
+    ).head()
+    assert (lineage.rows, lineage.bytes) == (totals.rows, totals.bytes)
+
+    gseq = salted_repartition(seq, cfg.num_partitions, cfg.n_buckets)
+    fused, _ = _sequence_tables(gseq, cfg)
+    fused.collect()
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1, plan

@@ -118,3 +118,40 @@ def test_cosort_matches_zip_sort_oracle(a, b):
 
     got, want = Counter(zip(sa.tolist(), sb.tolist())), Counter(pairs)
     assert got == want
+
+
+int32 = st.one_of(
+    st.sampled_from([-(2**31), 2**31 - 1]), st.integers(-(2**31), 2**31 - 1)
+)
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.lists(st.lists(int32, max_size=400), max_size=8),
+    st.sampled_from([1, 2, 16, 160]),
+)
+def test_padded_segment_median_equals_lexsort(rows, width):
+    """The quantile rollup's padded-sort median is bit-identical to the
+    lexsort segment_median, for the median pass and the MAD pass, over
+    int32 rows (extremes and empty rows included) cut into tier buckets
+    as the rollup cuts them."""
+    from light_curve_spark.kernels.features import (
+        padded_segment_median,
+        segment_median,
+    )
+
+    lengths = np.array([len(r) for r in rows], dtype=np.int64)
+    flat = np.array([v for r in rows for v in r], dtype=np.float64)
+    elem = np.repeat(np.arange(lengths.shape[0]), lengths)
+    pos = np.arange(flat.shape[0]) - (np.cumsum(lengths) - lengths)[elem]
+    gid = elem * (1 << 40) | (pos // width)
+    # [: len(flat)]: no segment at all when every row is empty
+    seg = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])[: len(flat)]
+    seg_len = np.diff(np.r_[seg, flat.shape[0]])
+    med = padded_segment_median(flat, seg_len)
+    assert med.view(np.int64).tolist() == segment_median(flat, gid, seg, seg_len).view(np.int64).tolist()
+    absd = np.abs(flat - np.repeat(med, seg_len))
+    assert (
+        padded_segment_median(absd, seg_len).view(np.int64).tolist()
+        == segment_median(absd, gid, seg, seg_len).view(np.int64).tolist()
+    )

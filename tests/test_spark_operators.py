@@ -462,6 +462,52 @@ def test_interpolate_relational_duplicate_knots_match_reference(spark):
         assert out[t] == e, (t, out[t], e)
 
 
+def test_chunk_outliers_counts_tokens_not_stale_n_tok(spark):
+    """The chunk count comes from the token array: a stale short n_tok
+    must not drop tokens, a stale long one must not add empty chunk
+    rows — in chunk_outliers and in the fused pass's batch splitter."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from light_curve_spark.operators.compress import (
+        chunk_outliers,
+        decode_chunks,
+        encode_chunks,
+        reassemble,
+        split_outliers_batch,
+    )
+
+    rows = {"short": list(range(10)), "long": [7, 8, 9]}
+    seq = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": ["short", "long"],
+                "tokens": list(rows.values()),
+                "n_tok": [3, 10],
+                "source": ["web", "web"],
+            }
+        )
+    )
+    chunks = sorted(
+        (r.doc_id, r.chunk_no, list(r.tokens))
+        for r in chunk_outliers(seq, max_len=4).collect()
+    )
+    assert chunks == [
+        ("long", 0, [7, 8, 9]),
+        ("short", 0, [0, 1, 2, 3]),
+        ("short", 1, [4, 5, 6, 7]),
+        ("short", 2, [8, 9]),
+    ]
+    back = reassemble(decode_chunks(encode_chunks(seq, max_len=4))).collect()
+    assert {r.doc_id: list(r.tokens) for r in back} == rows
+
+    batch = pa.RecordBatch.from_pandas(
+        seq.select("doc_id", "source", "tokens").toPandas(), preserve_index=False
+    )
+    split = split_outliers_batch(batch, 4).to_pydict()
+    assert sorted(zip(split["doc_id"], split["chunk_no"], split["tokens"])) == chunks
+
+
 def test_chunk_outliers_empty_sequence_single_chunk(spark):
     """n_tok == 0 must yield exactly one empty chunk, not the bogus
     [0, -1] descending-sequence pair (ADVICE r1)."""
