@@ -222,10 +222,10 @@ def segment_median(
     at once: one lexsort by (key, value), then middle-index gathers.
     ``key`` labels each element's segment (monotone non-decreasing);
     ``seg_starts``/``seg_lengths`` delimit the segments in element order.
-    Used by feature_frame's median/MAD, whose segments are whole
-    sequences (up to MAX_SEQ_LEN long); the quantile rollup's short
-    buckets use :func:`padded_segment_median`, which it must equal bit
-    for bit on finite values (hypothesis-tested)."""
+    feature_frame's median/MAD (whole sequences) and the quantile
+    rollup's buckets use :func:`padded_segment_median`, which must equal
+    this kernel for every input, NaN and ±inf included
+    (hypothesis-tested); this one is its reference."""
     order = np.lexsort((values, key))
     sv = values[order]
     hi = seg_starts + seg_lengths // 2  # index of upper middle
@@ -234,12 +234,14 @@ def segment_median(
 
 
 def padded_segment_median(values: np.ndarray, seg_lengths: np.ndarray) -> np.ndarray:
-    """The :func:`segment_median` of FINITE ``values`` cut into
-    consecutive non-empty segments of ``seg_lengths``, by row sorts
-    instead of a two-key lexsort: each segment becomes one row of a
-    +inf-padded matrix, ``sort(axis=1)`` leaves the padding at the end,
-    and the middles are gathered per row. An order of magnitude faster
-    on many short segments (the quantile rollup's tier buckets).
+    """The :func:`segment_median` of ``values`` cut into consecutive
+    non-empty segments of ``seg_lengths``, by row sorts instead of a
+    two-key lexsort: each segment becomes one row of a NaN-padded
+    matrix, ``sort(axis=1)`` leaves the padding at the end — after every
+    value, as the lexsort puts a NaN value after every number — and the
+    middles are gathered per row. An order of magnitude faster on many
+    segments (feature_frame's sequences, the quantile rollup's tier
+    buckets).
 
     Segments are grouped by power-of-two length class, one matrix per
     class padded to that class's longest segment, so the padding never
@@ -251,7 +253,7 @@ def padded_segment_median(values: np.ndarray, seg_lengths: np.ndarray) -> np.nda
     for c in np.unique(length_class):
         sel = np.flatnonzero(length_class == c)
         ln = seg_lengths[sel]
-        m = np.full((sel.shape[0], int(ln.max())), np.inf)
+        m = np.full((sel.shape[0], int(ln.max())), np.nan)
         row = np.repeat(np.arange(sel.shape[0]), ln)
         col = np.arange(row.shape[0]) - np.repeat(np.cumsum(ln) - ln, ln)
         m[row, col] = values[starts[sel][row] + col]
@@ -272,7 +274,7 @@ def feature_frame(
 
     ``flat`` is the concatenation of all series values; ``lengths[i]`` is
     series *i*'s length. One ``np.add.reduceat`` per statistic and one
-    ``np.lexsort`` per median pass — no Python loop over series, which is
+    padded row sort per median pass — no Python loop over series, which is
     what makes the Arrow-batched mapInArrow operators scale (input_hint:
     "no per-row Python"). Results are identical to calling
     :func:`feature_vector` per series (tested).
@@ -318,8 +320,8 @@ def feature_frame(
             np.nan,
         )
 
-    med = segment_median(flat, elem, starts, lengths)
-    mad = segment_median(np.abs(flat - med[elem]), elem, starts, lengths)
+    med = padded_segment_median(flat, lengths)
+    mad = padded_segment_median(np.abs(flat - med[elem]), lengths)
 
     out = {
         "mean": mean,

@@ -615,20 +615,23 @@ def _band_pb(band_id: F.Column, band_hash: F.Column, partitions: int) -> F.Colum
     """Layout partition key for a band row: band-key hash mod P. A
     delivery touches only the partitions its own band keys map to, so
     the stored-index side of the band join prunes at the directory
-    level (PartitionFilters) instead of scanning the whole corpus."""
+    level (PartitionFilters) instead of scanning the whole corpus.
+    An int, like every ``_pb`` key: the type its directories read back
+    as."""
     return F.pmod(
         F.xxhash64(band_id.cast("long"), band_hash),
         F.lit(partitions).cast("long"),
-    )
+    ).cast("int")
 
 
 def _gram_pb(doc_id: F.Column, partitions: int) -> F.Column:
     """Layout partition key for a gram row: P + doc-hash mod P — the
     second half of the directory space, so the verification step's gram
     fetch prunes to the partitions of the MATCHED docs only."""
-    return F.lit(partitions).cast("long") + F.pmod(
-        F.xxhash64(doc_id), F.lit(partitions).cast("long")
-    )
+    return (
+        F.lit(partitions).cast("long")
+        + F.pmod(F.xxhash64(doc_id), F.lit(partitions).cast("long"))
+    ).cast("int")
 
 
 def incremental_minhash_pairs(

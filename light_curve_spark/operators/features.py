@@ -6,7 +6,7 @@ Two implementations with identical semantics (SURVEY.md §7 phase 3):
   the ARRAY-form sequences table: each sequence is already one row, so
   feature extraction is a shuffle-free map; inside each Arrow batch the
   segment-vectorized kernel (:func:`...kernels.features.feature_frame`)
-  processes every series at once with reduceat/lexsort — no per-row
+  processes every series at once with reduceat/row sorts — no per-row
   Python (input_hint). Its per-batch body, :func:`features_batch`, is
   also one of the four calls of ``run_pipeline``'s single Python pass.
 

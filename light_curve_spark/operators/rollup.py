@@ -158,19 +158,17 @@ def retract_from_rollup(
     the continuous-aggregate side of the right-to-be-forgotten surface
     (round 6; the dedup/vector twins are the tombstone operators). The
     result EQUALS ``rollup_tiers(retained, ...)`` (pytest + SQL oracle)
-    without re-rolling the corpus. Only the BASE tier is retracted:
+    without re-rolling the corpus. Only the BASE tier is retracted, and
+    only in the delete's footprint — the distinct ``(keys, base
+    bucket)`` pairs of ``deleted`` (tiny; broadcast to both joins):
 
-    - decomposable stats subtract: the deleted rows' base partials (one
-      base aggregate over just the deleted rows — tiny, AQE broadcasts
-      it) come off ``n_points``/``v_sum`` in one left join; emptied
-      buckets drop;
-    - extrema cannot subtract: a base bucket needs its min (max)
-      recomputed ONLY when a deleted row achieved it (``deleted_min <=
-      v_min``) — everywhere else the stored extremum stands. Those
-      buckets recompute from ``retained`` raw SEMI-JOINED to exactly
-      them (the 100 TB posture: the raw rescan is bounded by the
-      delete's bucket footprint, and partition pruning on time keeps it
-      to those ranges).
+    - every stored base bucket outside the footprint stands as stored
+      (one broadcast anti-join: the state is scanned once);
+    - every footprint bucket is re-aggregated from ``retained`` raw
+      SEMI-JOINED to the footprint (the 100 TB posture: the raw rescan
+      is bounded by the delete's bucket footprint, and partition pruning
+      on time keeps it to those ranges) through the same base aggregate
+      as :func:`rollup_tiers`; a bucket with no retained row drops.
 
     The fixed base then goes through the same expansion and merge as
     :func:`rollup_tiers`, so every coarser tier comes from its surviving
@@ -183,53 +181,30 @@ def retract_from_rollup(
     minus ``deleted``, in the same long form the rollup was built
     from.
 
-    Float tolerance (round-6 ADVICE low): only the base ``v_sum``
-    subtracts (stored sum minus the deleted rows' partials); coarser
-    sums are re-added from the fixed base, as ``rollup_tiers`` adds its
-    base partials. ``rollup_tiers(retained)`` re-adds the retained rows,
-    so floating-point non-associativity lets a base sum diverge up to
-    its cancellation error, ~|v_sum_stored| * 2^-52 amplified by how
-    much of the bucket's mass was deleted, and coarser sums carry their
-    children's error. Equality with a re-roll is therefore exact for
-    ``n_points``/``v_min``/``v_max``, exact for ``v_sum``/``v_mean`` on
-    integer-valued input (tokens), and otherwise within that bound
-    (well under the oracle's 1e-6 rounding unless a delete cancels
-    nearly all of a large-magnitude bucket); deployments deleting most
-    of a high-|sum| bucket should re-roll those buckets from raw."""
+    Float tolerance (round-6 ADVICE low): a footprint bucket's partials
+    are exactly those ``rollup_tiers(retained)`` computes, but an
+    untouched base bucket keeps the ``v_sum`` stored when the state was
+    folded, which may have added the same rows in another order, and
+    coarser sums are re-added from the fixed base as ``rollup_tiers``
+    adds its base partials. Equality with a re-roll is therefore exact
+    for ``n_points``/``v_min``/``v_max``, exact for ``v_sum``/``v_mean``
+    on integer-valued input (tokens), and otherwise within float
+    summation-order error (well under the oracle's 1e-6 rounding)."""
     _check_tiers(tiers)
     keys = keys or ["doc_id", "source"]
     on = [*keys, "bucket"]
     width = base_width * tiers[0]
-    d = _base_partials(deleted, keys, width).toDF(*on, "_dn", "_dsum", "_dmin", "_dmax")
-    adj = (
+    footprint = F.broadcast(
+        deleted.select(*keys, bucketize("t", width).alias("bucket")).distinct()
+    )
+    kept = (
         rollup.filter(F.col("tier") == tiers[0])
-        .join(d, on, "left")
-        .select(
-            *on,
-            (F.col("n_points") - F.coalesce("_dn", F.lit(0))).alias("n_points"),
-            (F.col("v_sum") - F.coalesce("_dsum", F.lit(0.0))).alias("v_sum"),
-            "v_min",
-            "v_max",
-            # null (no deleted row in the bucket) counts as false
-            (F.col("_dmin") <= F.col("v_min")).alias("_remin"),
-            (F.col("_dmax") >= F.col("v_max")).alias("_remax"),
-        )
-        .filter(F.col("n_points") > 0)
+        .select(*on, *ROLLUP_AGG_COLS)
+        .join(footprint, on, "left_anti")
     )
-    re = (
-        retained.select(*keys, bucketize("t", width).alias("bucket"), "v")
-        .join(adj.filter(F.col("_remin") | F.col("_remax")).select(*on), on, "left_semi")
-        .groupBy(*on)
-        .agg(F.min("v").alias("_nmin"), F.max("v").alias("_nmax"))
-    )
-    fixed = adj.join(re, on, "left").select(
-        *on,
-        "n_points",
-        "v_sum",
-        F.when(F.col("_remin"), F.col("_nmin")).otherwise(F.col("v_min")).alias("v_min"),
-        F.when(F.col("_remax"), F.col("_nmax")).otherwise(F.col("v_max")).alias("v_max"),
-    )
-    return _tiers_from_base(fixed, keys, tiers)
+    touched = retained.select(*keys, "t", "v", bucketize("t", width).alias("bucket"))
+    redone = _base_partials(touched.join(footprint, on, "left_semi"), keys, width)
+    return _tiers_from_base(kept.unionByName(redone), keys, tiers)
 
 
 ROLLUP_ARRAYS_SCHEMA = StructType(

@@ -304,7 +304,7 @@ def _emb_pb(tbl: F.Column, bucket: F.Column, partitions: int) -> F.Column:
     read-side pruning filter in :func:`incremental_embedding_pairs`."""
     return F.pmod(
         F.xxhash64(tbl.cast("long"), bucket), F.lit(partitions).cast("long")
-    )
+    ).cast("int")
 
 
 def incremental_embedding_pairs(

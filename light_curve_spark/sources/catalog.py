@@ -26,6 +26,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -62,23 +63,25 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 def _fix_empty_partitioned_snapshot(
     df: DataFrame, out: str, partition_by: list[str] | None
-) -> None:
+) -> bool:
     """An EMPTY hive-partitioned write emits only ``_SUCCESS`` — no
-    parquet file, no schema — so any later read of a manifest that
-    includes that snapshot raises UNABLE_TO_INFER_SCHEMA and the table
-    is permanently unreadable (round-6 ADVICE highs: an all-tombstoned
-    incremental batch, or a compaction that erases every row). Detect
+    parquet file, no schema — so a parquet reader that infers the
+    directory's schema raises UNABLE_TO_INFER_SCHEMA (round-6 ADVICE
+    highs: an all-tombstoned incremental batch, or a compaction that
+    erases every row); the storage itself reads with the recorded
+    schema, but the directory stays self-describing for any reader. Detect
     the poison AFTER the write (zero extra Spark jobs on the non-empty
     path) and rewrite the snapshot NON-partitioned: the empty parquet
     file then carries the full schema with the partition columns as
     regular (all-null-capable, zero-row) columns, which unionByName
-    merges cleanly with hive-partitioned sibling snapshots."""
+    merges cleanly with hive-partitioned sibling snapshots. Returns
+    True when it rewrote the snapshot."""
     if not partition_by:
-        return
+        return False
     try:
         entries = os.listdir(out)
     except OSError:
-        return
+        return False
     # data present iff the write produced hive partition dirs (col=value
     # — note the engine's partition columns start with '_', e.g. _pb=3,
     # so "starts with underscore" does NOT mean metadata) or part files
@@ -87,11 +90,45 @@ def _fix_empty_partitioned_snapshot(
         for e in entries
         if not e.startswith(".")
     ):
-        return
+        return False
     import shutil
 
     shutil.rmtree(out)
     df.write.mode("error").parquet(out)
+    return True
+
+
+def _read_schema(df: DataFrame, partition_by: list[str] | None) -> StructType:
+    """The schema the parquet reader sees in a snapshot written from
+    ``df``: every column nullable, and for a hive-partitioned write the
+    data columns first, then the ``partition_by`` columns in that order
+    (with the df's own types, so a string partition value such as
+    "007" stays a string)."""
+    fields = {f.name: f for f in df.schema.toNullable().fields}
+    part = partition_by or []
+    data = [f for name, f in fields.items() if name not in part]
+    return StructType([*data, *(fields[c] for c in part)])
+
+
+def _write_snapshot(
+    df: DataFrame,
+    out: str,
+    partition_by: list[str] | None,
+    cluster_by: list[str] | None,
+) -> dict:
+    """Write ``df`` as the snapshot directory ``out``; returns the
+    ``schema`` field of its manifest entry (the read schema as
+    ``StructType`` JSON)."""
+    if cluster_by:
+        keys = [*(partition_by or []), *cluster_by]
+        df = df.repartitionByRange(*keys).sortWithinPartitions(*keys)
+    writer = df.write.mode("error")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(out)
+    if _fix_empty_partitioned_snapshot(df, out, partition_by):
+        partition_by = None
+    return json.loads(_read_schema(df, partition_by).json())
 
 
 class ParquetSnapshotStorage:
@@ -99,9 +136,12 @@ class ParquetSnapshotStorage:
 
     Layout: ``<root>/<table>/snap-<id>/part-*.parquet`` plus
     ``<root>/<table>/_snapshots.json`` listing snapshot ids in commit
-    order. Reading a table unions all snapshot dirs up to the pinned id —
-    the same semantics as Iceberg time travel, minus file-level deletes
-    (the engine only appends).
+    order, each with the read schema its writer recorded. Reading a
+    table unions all snapshot dirs up to the pinned id — the same
+    semantics as Iceberg time travel, minus file-level deletes (the
+    engine only appends). Readers never infer a schema: a snapshot is
+    opened with the recorded one, so a string partition value keeps its
+    type and opening a table runs no Spark job.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -158,16 +198,9 @@ class ParquetSnapshotStorage:
         jobs grew with index size on every arriving batch)."""
         snap_id = uuid.uuid4().hex[:16]
         out = os.path.join(self.root, table, f"snap-{snap_id}")
-        if cluster_by:
-            keys = [*(partition_by or []), *cluster_by]
-            df = df.repartitionByRange(*keys).sortWithinPartitions(*keys)
-        writer = df.write.mode("error")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out)
-        _fix_empty_partitioned_snapshot(df, out, partition_by)
+        schema = _write_snapshot(df, out, partition_by, cluster_by)
         snaps = self.snapshots(table)
-        entry = {"id": snap_id, "committed_at": time.time(), "path": out}
+        entry = {"id": snap_id, "committed_at": time.time(), "path": out, "schema": schema}
         if meta:
             entry["meta"] = meta
         snaps.append(entry)
@@ -218,16 +251,9 @@ class ParquetSnapshotStorage:
         carried) pass it forward in ``meta``."""
         snap_id = uuid.uuid4().hex[:16]
         out = os.path.join(self.root, table, f"snap-{snap_id}")
-        if cluster_by:
-            keys = [*(partition_by or []), *cluster_by]
-            df = df.repartitionByRange(*keys).sortWithinPartitions(*keys)
-        writer = df.write.mode("error")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out)
-        _fix_empty_partitioned_snapshot(df, out, partition_by)
+        schema = _write_snapshot(df, out, partition_by, cluster_by)
         old = self.snapshots(table)
-        entry = {"id": snap_id, "committed_at": time.time(), "path": out}
+        entry = {"id": snap_id, "committed_at": time.time(), "path": out, "schema": schema}
         if meta:
             entry["meta"] = meta
         self._commit_manifest(table, [entry], snap_id)
@@ -253,7 +279,7 @@ class ParquetSnapshotStorage:
         # one read per snapshot root: each root may carry hive-style
         # partition dirs (tier=X/source=Y), and Spark's partition
         # discovery rejects multiple such roots in a single read
-        dfs = [self.spark.read.parquet(s["path"]) for s in upto]
+        dfs = [self._open(table, s) for s in upto]
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df)
@@ -267,7 +293,19 @@ class ParquetSnapshotStorage:
         if not snaps:
             raise ValueError(f"table {table} has no snapshots")
         snap = snaps[-1] if snap_id is None else snaps[_index_of(snaps, snap_id)]
-        return self.spark.read.parquet(snap["path"])
+        return self._open(table, snap)
+
+    def _open(self, table: str, snap: dict) -> DataFrame:
+        """One snapshot directory, read with the schema its manifest
+        entry recorded: no schema inference, so opening a table runs no
+        Spark job. An entry without a schema was not written by this
+        layer and is refused."""
+        if "schema" not in snap:
+            raise ValueError(
+                f"table {table} snapshot {snap['id']} records no read schema"
+            )
+        schema = StructType.fromJson(snap["schema"])
+        return self.spark.read.schema(schema).parquet(snap["path"])
 
 
 def _index_of(snaps: list[dict], snap_id: str) -> int:

@@ -179,7 +179,9 @@ def run_stream_document_pipeline(
                 "doc_id",
             ).withColumn("batch_id", F.lit(cid)).withColumn(
                 "_pb",
-                F.pmod(F.xxhash64("digest"), F.lit(ATTRS_PARTITIONS).cast("long")),
+                F.pmod(
+                    F.xxhash64("digest"), F.lit(ATTRS_PARTITIONS).cast("long")
+                ).cast("int"),
             )
             if not _present(f"{prefix}_attrs"):
                 storage.append(

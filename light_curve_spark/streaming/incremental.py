@@ -7,19 +7,22 @@ over the union of partials — the tier aggregate's own partial monoid
 across tiers.
 Per new Iceberg snapshot the scheduler runs
 
-    new_partials = rollup_tiers(explode_series(new_rows))
-    rollup_table = merge_rollups(rollup_table, new_partials)
+    base = _base_partials(explode_series(new_rows))
+    rollup_table = _merge_partials(rollup_table ∪ _expand_tiers(base))
 
 and appends the result — no state store, no watermark, exactly-once by
 snapshot id (the checkpoint records which input snapshots are folded).
+The new rows' tiers are never merged on their own: the stored state and
+the expanded base partials go through one aggregate.
 
 This is the engine's one continuous-aggregate fold: the stream-fed
 rollup (streaming/structured.py) runs the same read-merge-append per
 micro-batch, so both write the same ``rollup_tiers`` state shape. Every
 writer stamps its snapshot's manifest ``batch_ids``: the stream fold
 with its input file paths, the snapshot-fed fold and the retraction
-with an empty list. A partial retraction rebuilds every tier from the
-fixed base tier: one shuffle, the shape of one fold.
+with an empty list. A partial retraction re-aggregates only the base
+buckets the delete touched, from the retained rows, and rebuilds every
+tier from that fixed base tier: one shuffle, the shape of one fold.
 """
 
 from __future__ import annotations
@@ -28,7 +31,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from light_curve_spark.operators.rollup import (
-    ROLLUP_AGG_COLS, _merge_partials, retract_from_rollup, rollup_tiers,
+    ROLLUP_AGG_COLS,
+    _base_partials,
+    _check_tiers,
+    _expand_tiers,
+    _merge_partials,
+    retract_from_rollup,
 )
 
 
@@ -49,21 +57,27 @@ def merge_rollups(existing: DataFrame, new: DataFrame, keys: list[str] | None = 
 def _fold_append(
     storage,
     table: str,
-    partials: DataFrame,
-    keys: list[str] | None,
+    base: DataFrame,
+    keys: list[str],
+    tiers: tuple[int, ...],
     batch_ids: list[str],
 ) -> str:
-    """Merge rollup ``partials`` into the table's latest full-state
-    snapshot and append the result as a new snapshot stamped with
-    ``batch_ids``; returns the snapshot id. The one read-merge-append of
-    the continuous-aggregate state, shared by the snapshot-fed and the
+    """Fold the new rows' base-tier partials ``base`` (``_base_partials``
+    rows) into the table's latest full-state snapshot and append the
+    result as a new snapshot stamped with ``batch_ids``; returns the
+    snapshot id. The new partials are expanded to every tier and folded
+    with the stored state in ONE ``_merge_partials`` (into an empty
+    store, the same merge over the expansion alone — exactly
+    ``rollup_tiers``). The one read-merge-append of the
+    continuous-aggregate state, shared by the snapshot-fed and the
     stream-fed fold."""
-    try:
+    expanded = _expand_tiers(base, [*keys, *ROLLUP_AGG_COLS], tiers[0], tiers)
+    if storage.exists(table):
         # each snapshot holds the FULL merged state -> read latest only
-        merged = merge_rollups(storage.read_snapshot(table), partials, keys=keys)
-    except ValueError:
-        merged = partials
-    return storage.append(merged, table, meta={"batch_ids": batch_ids})
+        state = merge_rollups(storage.read_snapshot(table), expanded, keys=keys)
+    else:
+        state = _merge_partials(expanded, [*keys, "tier", "bucket"])
+    return storage.append(state, table, meta={"batch_ids": batch_ids})
 
 
 def incremental_rollup(
@@ -84,10 +98,10 @@ def incremental_rollup(
     """
     from light_curve_spark.operators.series import explode_series
 
-    new_partials = rollup_tiers(
-        explode_series(new_rows), keys=keys, base_width=base_width, tiers=tiers
-    )
-    return _fold_append(storage, "rollup_continuous", new_partials, keys, [])
+    _check_tiers(tiers)
+    keys = keys or ["doc_id", "source"]
+    base = _base_partials(explode_series(new_rows), keys, base_width * tiers[0])
+    return _fold_append(storage, "rollup_continuous", base, keys, tiers, [])
 
 
 def retract_rollup_state(
@@ -117,10 +131,11 @@ def retract_rollup_state(
     - ``retained`` given: both are LONG-FORM series (keys + t + v) and
       the partial-bucket math delegates to
       :func:`~light_curve_spark.operators.rollup.retract_from_rollup`:
-      the stored BASE tier alone is fixed (decomposables subtract;
-      extrema recompute only in the base buckets a deleted row topped,
-      raw rescan bounded by that footprint) and every coarser tier is
-      rebuilt from it — one shuffle of the base tier, as in one fold.
+      the stored BASE tier alone is fixed (the base buckets holding a
+      deleted row are re-aggregated from ``retained``, raw rescan
+      bounded by that footprint; every other base bucket stands) and
+      every coarser tier is rebuilt from it — one shuffle of the base
+      tier, as in one fold.
 
     The result equals ``rollup_tiers`` over the corpus without the
     deleted data (pytest-gated both shapes), for snapshot-fed and

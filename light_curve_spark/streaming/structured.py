@@ -6,17 +6,17 @@ sequences are immutable rows, so there is no late data and nothing for a
 watermark or a state store to bound. What a landing-zone deployment needs
 from streaming is the file source's bookkeeping (which files arrived
 since the last run), so this module uses ``readStream`` for exactly that
-and folds every micro-batch through the same ``rollup_tiers`` +
-``merge_rollups`` fold as
+and folds every micro-batch through the same base-partials fold as
 :func:`~light_curve_spark.streaming.incremental.incremental_rollup`:
 
 - each micro-batch row is tagged with ``input_file_name()``;
 - rows from files already stamped in the table's snapshot manifest are
   dropped (``_manifest_batch_ids``, the library's one idempotency probe),
   so a lost checkpoint re-delivers files without double-folding them;
-- the rest is rolled up at every tier, merged into the latest snapshot,
-  and the full state is appended as one snapshot stamped with the new
-  file paths.
+- the rest is aggregated into base-tier partials, expanded to every
+  tier and merged with the latest snapshot in one aggregate, and the
+  full state is appended as one snapshot stamped with the new file
+  paths.
 
 The table holds ``rollup_tiers`` rows (key..., tier, bucket, n_points,
 v_sum, v_min, v_max, v_mean) for every tier, the same state shape as the
@@ -57,7 +57,7 @@ def run_stream_rollup(
     checkpoint re-delivers. The state equals ``rollup_tiers`` over every
     delivered file."""
     from light_curve_spark.operators.dedup import _manifest_batch_ids
-    from light_curve_spark.operators.rollup import _check_tiers, rollup_tiers
+    from light_curve_spark.operators.rollup import _base_partials, _check_tiers
     from light_curve_spark.streaming.incremental import _fold_append
 
     keys = keys or ["user_id"]
@@ -85,10 +85,8 @@ def run_stream_rollup(
         rows = tagged.filter(F.col("_file").isin(new)).select(
             *keys, epoch_us(ts_col).alias("t"), F.col(v_col).alias("v")
         )
-        partials = rollup_tiers(
-            rows, keys=keys, base_width=width_seconds * 1e6, tiers=tiers
-        )
-        _fold_append(storage, table, partials, keys, new)
+        base = _base_partials(rows, keys, width_seconds * 1e6)
+        _fold_append(storage, table, base, keys, tiers, new)
 
     (
         spark.readStream.schema(input_schema)

@@ -69,26 +69,64 @@ def main() -> None:
     )
     assert "InMemoryTableScan" not in plan2, "tier rollup must not persist"
 
-    # 2b. retraction over a materialized rollup (how retract_rollup_state
-    # sees a stored snapshot): only the base tier is retracted, so the
-    # plan expands tiers exactly once — the fixed base — and caches nothing
+    # 2b. retraction over a stored state (a snapshot read back with its
+    # recorded schema): only the base tier's footprint buckets are
+    # re-aggregated, so the plan scans the state once, joins it only by
+    # broadcast, expands tiers exactly once and caches nothing
+    import tempfile
+
     from light_curve_spark.operators.rollup import retract_from_rollup, rollup_tiers
+    from light_curve_spark.sources.catalog import ParquetSnapshotStorage
 
     ev = e._events_series(spark, SF)
     kw = dict(keys=["user_id"], base_width=e.DAY_US, tiers=(1, 10, 100))
-    full = rollup_tiers(ev, **kw)
-    stored = spark.createDataFrame(full.collect(), full.schema)
+    st2 = ParquetSnapshotStorage(spark, tempfile.mkdtemp(prefix="plans-rollup-"))
+    st2.append(rollup_tiers(ev, **kw), "state")
     cond = F.pmod(F.floor(F.col("t") / F.lit(1e6)).cast("long"), F.lit(7)) == 3
     plan2b = formatted(
-        retract_from_rollup(stored, ev.filter(cond), ev.filter(~cond), **kw)
+        retract_from_rollup(st2.read_snapshot("state"), ev.filter(cond), ev.filter(~cond), **kw)
     )
     sections.append(
         (
-            "Rollup retraction over a stored state (base tier only: one "
-            "subtract join, footprint-pruned extrema rescan, one expansion "
-            "of the fixed base to every tier, one aggregate)",
+            "Rollup retraction over a stored state (base tier only: footprint "
+            "anti-join + footprint re-aggregate, one expansion of the fixed "
+            "base to every tier, one aggregate)",
             plan2b,
-            [("Generate (", 1), ("InMemoryTableScan", 0)],
+            [("Generate (", 1), ("InMemoryTableScan", 0), ("SortMergeJoin", 0),
+             "BroadcastHashJoin", "LeftAnti", "LeftSemi"],
+        )
+    )
+
+    # 2c. the continuous-aggregate fold: the stored state and the new
+    # rows' expanded base partials go through ONE final aggregate above
+    # the union (the new rows' tiers are not merged on their own first)
+    from light_curve_spark.streaming.incremental import _fold_append
+    from light_curve_spark.operators.rollup import _base_partials
+
+    class CapturingStorage:
+        def __init__(self, inner):
+            self.inner, self.appended = inner, []
+
+        def __getattr__(self, name):
+            return getattr(self.inner, name)
+
+        def append(self, df, table, **kwargs):
+            self.appended.append(df)
+            return self.inner.append(df, table, **kwargs)
+
+    st2c = CapturingStorage(st2)
+    half = F.col("user_id") % 2 == 0
+    for part in (ev.filter(half), ev.filter(~half)):
+        _fold_append(st2c, "fold", _base_partials(part, ["user_id"], e.DAY_US),
+                     ["user_id"], (1, 10, 100), [])
+    plan2c = formatted(st2c.appended[-1])
+    sections.append(
+        (
+            "Continuous-aggregate fold into a stored state (the new rows' base "
+            "aggregate, expanded; one final aggregate over the union with the "
+            "stored state)",
+            plan2c,
+            [("Union (", 1), ("Generate (", 1), ("HashAggregate (", 4)],
         )
     )
 
@@ -294,12 +332,9 @@ def main() -> None:
     # only — candidates never leave their hyperplane bucket, so there is
     # no cartesian/BNLJ anywhere even though the operator compares
     # vectors pairwise
-    import tempfile
-
     from light_curve_spark.operators.similarity import (
         incremental_embedding_pairs,
     )
-    from light_curve_spark.sources.catalog import ParquetSnapshotStorage
 
     emb_rows = [
         (i, [float((i * 7 + j * 13) % 17) / 17.0 for j in range(8)])
