@@ -159,8 +159,8 @@ def retract_from_rollup(
     (round 6; the dedup/vector twins are the tombstone operators). The
     result EQUALS ``rollup_tiers(retained, ...)`` (pytest + SQL oracle)
     without re-rolling the corpus. Only the BASE tier is retracted, and
-    only in the delete's footprint — the distinct ``(keys, base
-    bucket)`` pairs of ``deleted`` (tiny; broadcast to both joins):
+    only in the delete's footprint — the ``(keys, base bucket)`` pairs
+    of ``deleted``, broadcast to both joins:
 
     - every stored base bucket outside the footprint stands as stored
       (one broadcast anti-join: the state is scanned once);
@@ -174,7 +174,12 @@ def retract_from_rollup(
     :func:`rollup_tiers`, so every coarser tier comes from its surviving
     base children and the stored coarser tiers are never read. Cost: one
     shuffle of the state's base tier per partial redact (the shape of
-    one fold) instead of a join plan per tier.
+    one fold) instead of a join plan per tier. The footprint is not made
+    distinct: a semi- or anti-join gives the same rows with duplicate
+    build rows, and a distinct would plan its own aggregate and shuffle
+    under the broadcast. The trade-off is a broadcast of one row per
+    deleted point rather than one per deleted base bucket (up to
+    ``base_width`` times more rows for unit-spaced ``t``).
 
     ``rollup`` must carry the ``rollup_tiers`` row shape (a ``v_mean``
     column is ignored and re-derived); ``retained`` is the raw series
@@ -194,9 +199,7 @@ def retract_from_rollup(
     keys = keys or ["doc_id", "source"]
     on = [*keys, "bucket"]
     width = base_width * tiers[0]
-    footprint = F.broadcast(
-        deleted.select(*keys, bucketize("t", width).alias("bucket")).distinct()
-    )
+    footprint = F.broadcast(deleted.select(*keys, bucketize("t", width).alias("bucket")))
     kept = (
         rollup.filter(F.col("tier") == tiers[0])
         .select(*on, *ROLLUP_AGG_COLS)

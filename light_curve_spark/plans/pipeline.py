@@ -18,14 +18,26 @@ persisted once; each table append is a JVM-only
 Python once and pay the per-task floor once. No shuffle beyond the
 salted repartition.
 
+Writes: the features append runs first and alone; it runs the Python
+pass and fills the cache. The rollup, rollup_quantiles, chunks and
+metrics tables then commit through one all-or-nothing
+``storage.append_many``, written as concurrent Spark jobs. Each of those
+writes is coalesced to ``k`` tasks, ``k`` = the cached frame's bytes over
+Spark's AQE advisory partition size, clamped to ``[1, num_partitions]``
+(:func:`_write_tasks`): a write task emits one file per partition value
+it holds, so a small group writes each table from one task.
+
 Resume model (SURVEY.md §2.9 — deliberately NOT Structured Streaming):
-the input is split into ``n_groups`` doc-bucket groups; each group runs
-as one job appending one snapshot per output table, then the group id +
-input snapshot are recorded in a JSON checkpoint. A restarted run skips
-completed groups. Partition-level lineage rows
-(partition_id, input_snapshot, rows, bytes, wall_ms) are emitted to the
-metrics table from inside the fused pass via TaskContext — no extra
-pass over the data. ``wall_ms`` covers the whole fused per-batch pass
+the input is split into ``n_groups`` doc-bucket groups; each group
+appends one snapshot per output table, each stamped in its manifest
+``meta`` with ``{input_snapshot, group}``, then the group id + input
+snapshot are recorded in a JSON checkpoint. A restarted run skips
+completed groups, and within a group every table that already holds the
+group's stamp (a crash between the features commit and the batch
+commit); a pipeline table with an unstamped snapshot raises.
+Partition-level lineage rows (partition_id, input_snapshot, rows,
+bytes, wall_ms) are emitted to the metrics table from inside the fused
+pass via TaskContext — no extra pass over the data. ``wall_ms`` covers the whole fused per-batch pass
 (features, both rollups, the outlier split and the encode); it rides on
 each batch's first chunk row, so SUM per partition stays exact.
 """
@@ -156,11 +168,52 @@ def _sequence_tables(
     return fused, tables
 
 
+PIPELINE_TABLES = ("features", "rollup", "rollup_quantiles", "chunks", "metrics")
+
+
+def _group_stamp(cfg: PipelineConfig, group: int) -> dict:
+    """The manifest ``meta`` of every snapshot a group appends."""
+    return {"batch_id": {"input_snapshot": cfg.input_snapshot, "group": group}}
+
+
+def _stamped_tables(storage, stamp: dict) -> set[str]:
+    """The pipeline tables whose manifest already holds ``stamp``. A
+    table with an unstamped snapshot raises: its rows cannot be told
+    apart from a group's, so a resume could duplicate them."""
+    done = set()
+    for table in PIPELINE_TABLES:
+        if not storage.exists(table):
+            continue
+        metas = storage.snapshot_metas(table)
+        if metas is None:
+            raise ValueError(
+                f"pipeline table {table} holds a snapshot without a group stamp"
+            )
+        if any(m.get("batch_id") == stamp["batch_id"] for m in metas):
+            done.add(table)
+    return done
+
+
+def _write_tasks(spark: SparkSession, fused: DataFrame, num_partitions: int) -> int:
+    """Write tasks per table append: the persisted group frame's cached
+    bytes over Spark's AQE advisory partition size, clamped to
+    ``[1, num_partitions]``. Each write task emits one file per partition
+    value it holds, and a file costs far more than its rows, so a small
+    group writes from one task. Read once the frame is materialized:
+    before, the plan's statistics are an estimate, and they stay cached
+    on that plan."""
+    cached = int(str(fused._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return min(max(-(-cached // advisory), 1), num_partitions)
+
+
 def run_pipeline(
     spark: SparkSession, seq: DataFrame, cfg: PipelineConfig, storage=None
 ) -> dict:
     """Run (or resume) the flagship job. Returns run stats."""
-    from light_curve_spark.sources.catalog import get_storage
+    from light_curve_spark.sources.catalog import AppendItem, get_storage
 
     storage = storage or get_storage(spark, cfg.out_root)
     state = load_checkpoint(cfg)
@@ -178,17 +231,16 @@ def run_pipeline(
         if group in done:
             continue
         t_start = time.time()
+        stamp = _group_stamp(cfg, group)
+        committed = _stamped_tables(storage, stamp)
         gseq = seq.filter(F.col("_group") == group).drop("_group")
         gseq = salted_repartition(gseq, cfg.num_partitions, cfg.n_buckets)
         fused, (feats, rollup, quantiles, chunks) = _sequence_tables(gseq, cfg)
         fused.persist()
         try:
-            storage.append(feats, "features", partition_by=["source"])
-            storage.append(rollup, "rollup", partition_by=["tier", "source"])
-            storage.append(quantiles, "rollup_quantiles", partition_by=["tier"])
-            storage.append(
-                chunks.drop("_pid", "_wall_ms"), "chunks", partition_by=["source"]
-            )
+            # first and alone: it runs the Python pass and fills the cache
+            if "features" not in committed:
+                storage.append(feats, "features", partition_by=["source"], meta=stamp)
             lineage = (
                 chunks.groupBy(F.col("_pid").alias("partition_id"))
                 .agg(
@@ -202,7 +254,22 @@ def run_pipeline(
                 .withColumn("input_snapshot", F.lit(cfg.input_snapshot))
                 .withColumn("group", F.lit(group))
             )
-            storage.append(lineage, "metrics")
+            # a resume that skipped features sizes from the plan's estimate
+            k = _write_tasks(spark, fused, cfg.num_partitions)
+            items = [
+                AppendItem(rollup.coalesce(k), "rollup", ["tier", "source"], meta=stamp),
+                AppendItem(quantiles.coalesce(k), "rollup_quantiles", ["tier"], meta=stamp),
+                AppendItem(
+                    chunks.drop("_pid", "_wall_ms").coalesce(k),
+                    "chunks",
+                    ["source"],
+                    meta=stamp,
+                ),
+                AppendItem(lineage.coalesce(k), "metrics", meta=stamp),
+            ]
+            todo = [it for it in items if it.table not in committed]
+            if todo:
+                storage.append_many(todo)
         finally:
             fused.unpersist()
             # release any operator-level caches (dedup inverted

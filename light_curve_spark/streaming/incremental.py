@@ -128,6 +128,11 @@ def retract_rollup_state(
       GDPR case). Every bucket of a deleted key dies wholesale, so no
       extremum can survive partially and the retraction is ONE
       broadcast anti-join on the state table — no raw access at all.
+      The key tuples are broadcast as given, duplicates included: an
+      anti-join gives the same rows either way, and a distinct would
+      plan its own aggregate and shuffle under the broadcast. The
+      trade-off is a broadcast of every given row rather than one per
+      distinct key.
     - ``retained`` given: both are LONG-FORM series (keys + t + v) and
       the partial-bucket math delegates to
       :func:`~light_curve_spark.operators.rollup.retract_from_rollup`:
@@ -153,9 +158,7 @@ def retract_rollup_state(
                 "series for partial-bucket retraction"
             )
         reduced = existing.join(
-            F.broadcast(deleted.select(*join_cols).distinct()),
-            join_cols,
-            "left_anti",
+            F.broadcast(deleted.select(*join_cols)), join_cols, "left_anti"
         )
     else:
         reduced = retract_from_rollup(

@@ -161,15 +161,21 @@ def main() -> None:
             [("MapInArrow (", 1), ("Exchange (", 1)],
         )
     )
+    # a small group writes each table from one task: Coalesce straight
+    # over the cached scan, and the only Exchange is the salted
+    # repartition inside the cached relation
     fused.persist()
-    plan3c = formatted(tables[1])
+    plan3c = formatted(tables[1].coalesce(1))
     fused.unpersist()
+    above_scan = plan3c.split("\n\n")[0].split("InMemoryTableScan")[0]
+    assert "Coalesce" in above_scan and "Exchange" not in above_scan, plan3c
     sections.append(
         (
             "run_pipeline table append over the persisted group frame "
-            "(JVM filter on _table + select; no Python crossing)",
+            "(JVM filter on _table + select, coalesced to one write task; "
+            "no Python crossing, no Exchange above the cached scan)",
             plan3c,
-            ["InMemoryTableScan", "[(_table#"],
+            [("Coalesce (", 1), "InMemoryTableScan", "[(_table#", ("Exchange (", 1)],
         )
     )
 

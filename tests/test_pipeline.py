@@ -2,12 +2,15 @@
 resume skips completed groups, and the compression invariant holds on the
 persisted chunk table."""
 
+import os
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from light_curve_spark.operators.compress import decode_chunks, reassemble
 from light_curve_spark.plans.pipeline import PipelineConfig, load_checkpoint, run_pipeline
-from light_curve_spark.sources.catalog import ParquetSnapshotStorage
+from light_curve_spark.sources.catalog import AppendItem, ParquetSnapshotStorage
 from light_curve_spark.sources.synthetic import synthetic_sequences
 
 
@@ -65,6 +68,88 @@ def test_storage_snapshot_pinning(spark, tmp_path):
     assert storage.read("t", as_of=s1).count() == 5  # VERSION AS OF semantics
 
 
+def test_append_many_commits_nothing_when_one_write_fails(spark, tmp_path):
+    """A failing write in ``append_many`` leaves every manifest as it was
+    and no new snapshot directory behind, whichever item failed."""
+    root = tmp_path / "store"
+    storage = ParquetSnapshotStorage(spark, str(root))
+    good = spark.range(5).select(F.col("id").alias("x"), (F.col("id") % 2).alias("p"))
+    storage.append(good, "a")
+    storage.append(good, "b", partition_by=["p"])
+
+    def state():
+        return {t: (storage.snapshots(t), sorted(os.listdir(root / t))) for t in ("a", "b")}
+
+    before = state()
+    bad = good.withColumn(
+        "x", F.when(F.col("x") < 3, F.col("x")).otherwise(F.raise_error(F.lit("boom")))
+    )
+    for items in (
+        [AppendItem(good, "a"), AppendItem(bad, "b", ["p"])],
+        [AppendItem(bad, "a"), AppendItem(good, "b", ["p"])],
+    ):
+        with pytest.raises(Exception, match="boom"):
+            storage.append_many(items)
+        assert state() == before
+    with pytest.raises(ValueError, match="at most once"):
+        storage.append_many([AppendItem(good, "a"), AppendItem(good, "a")])
+    # more concurrent writes than cores: every table commits its own rows
+    ids = storage.append_many(
+        [AppendItem(good, "a")]
+        + [AppendItem(good.withColumn("x", F.col("x") + 10 * i), f"c{i}") for i in range(1, 7)]
+    )
+    assert len(set(ids)) == 7 and storage.read("a").count() == 10
+    for i in range(1, 7):
+        assert sorted(r.x for r in storage.read(f"c{i}").collect()) == [10 * i + j for j in range(5)]
+
+
+class _CrashAfterFirstFeatures:
+    """Delegating storage that raises once, right after the first
+    ``features`` append has committed."""
+
+    def __init__(self, inner):
+        self._inner = inner
+        self.crashed = False
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+    def append(self, df, table, *args, **kwargs):
+        snap = self._inner.append(df, table, *args, **kwargs)
+        if table == "features" and not self.crashed:
+            self.crashed = True
+            raise RuntimeError("crash after the features commit")
+        return snap
+
+
+def test_pipeline_resume_after_mid_group_crash_appends_each_group_once(spark, tmp_path):
+    """A crash between a group's features commit and its other tables'
+    commit: the resume skips every table already stamped with the group,
+    so each table holds each group exactly once. A pipeline table with
+    an unstamped snapshot refuses a run."""
+    from light_curve_spark.plans.pipeline import PIPELINE_TABLES
+
+    out = str(tmp_path / "pipe")
+    cfg = PipelineConfig(out_root=out, n_groups=2, num_partitions=3, input_snapshot="v1")
+    seq = synthetic_sequences(spark, 40, seed=7)
+    storage = _CrashAfterFirstFeatures(ParquetSnapshotStorage(spark, out))
+    with pytest.raises(RuntimeError, match="crash after"):
+        run_pipeline(spark, seq, cfg, storage=storage)
+    assert run_pipeline(spark, seq, cfg, storage=storage)["groups_run"] == 2
+    for table in PIPELINE_TABLES:
+        groups = sorted(m["batch_id"]["group"] for m in storage.snapshot_metas(table))
+        assert groups == [0, 1], table
+    feats = storage.read("features")
+    assert feats.count() == 40 and feats.select("doc_id").distinct().count() == 40
+    n_chunks = storage.read("chunks").count()
+    assert storage.read("metrics").agg(F.sum("rows")).head()[0] == n_chunks
+
+    other = str(tmp_path / "unstamped")
+    ParquetSnapshotStorage(spark, other).append(spark.range(1), "metrics")
+    with pytest.raises(ValueError, match="without a group stamp"):
+        run_pipeline(spark, seq, PipelineConfig(out_root=other, n_groups=2))
+
+
 def test_iceberg_storage_contract_mocked():
     """The Iceberg backend can't execute in this sandbox (no runtime
     jar), so pin its append/read/snapshot contract against mocks: append
@@ -101,12 +186,25 @@ def _sorted_pandas(df, keys):
     return df.select(*sorted(df.columns)).toPandas().sort_values(keys).reset_index(drop=True)
 
 
-def test_pipeline_tables_equal_public_operators(spark, tmp_path):
+def _parquet_files_per_dir(storage, table) -> list[int]:
+    return [
+        n
+        for snap in storage.snapshots(table)
+        for _, _, files in os.walk(snap["path"])
+        if (n := sum(f.endswith(".parquet") for f in files))
+    ]
+
+
+@pytest.mark.parametrize("advisory", [None, "1"], ids=["one_task", "num_partitions_tasks"])
+def test_pipeline_tables_equal_public_operators(spark, tmp_path, advisory):
     """The fused single-crossing pass writes exactly what the four public
     operators produce on the same input — including an empty sequence,
     one of exactly two chunks' length and a split outlier — its lineage
     rows add up to the chunk table, and its group frame holds one
-    MapInArrow."""
+    MapInArrow. The table writes take their task count from the cached
+    group frame against the AQE advisory partition size: a small group
+    writes one file per partition directory, and a 1-byte advisory size
+    gives ``num_partitions`` write tasks."""
     import pandas as pd
 
     from light_curve_spark.operators.compress import encode_chunks
@@ -132,7 +230,20 @@ def test_pipeline_tables_equal_public_operators(spark, tmp_path):
     out = str(tmp_path / "pipe")
     cfg = PipelineConfig(out_root=out, n_groups=2, num_partitions=3, max_chunk_len=64)
     storage = ParquetSnapshotStorage(spark, out)
-    assert run_pipeline(spark, seq, cfg, storage=storage)["groups_run"] == 2
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+    if advisory is not None:
+        spark.conf.set(key, advisory)
+    try:
+        assert run_pipeline(spark, seq, cfg, storage=storage)["groups_run"] == 2
+    finally:
+        spark.conf.set(key, before)
+    files = {t: _parquet_files_per_dir(storage, t) for t in ("rollup", "rollup_quantiles", "chunks")}
+    if advisory is None:
+        assert all(n == 1 for counts in files.values() for n in counts), files
+    else:
+        assert max(n for counts in files.values() for n in counts) == cfg.num_partitions, files
+        assert all(n <= cfg.num_partitions for counts in files.values() for n in counts), files
 
     expected = {
         "features": (extract_features(seq, freqs=np.asarray(cfg.freqs)), ["doc_id"]),

@@ -115,3 +115,54 @@ def test_retract_over_stored_state_scans_it_once(spark, tmp_path):
         gn, gs, glo, ghi = got[key]
         assert gn == n and glo == lo and ghi == hi, key
         assert abs(gs - s) <= 1e-9, key
+
+
+def _broadcast_subtrees(df) -> list[list[str]]:
+    """The physical-plan lines under each ``BroadcastExchange``."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[-1].splitlines()
+    depth = [len(ln) - len(_node(ln)) for ln in lines]
+    subtrees = []
+    for i, ln in enumerate(lines):
+        if _node(ln).startswith("BroadcastExchange"):
+            end = next((j for j in range(i + 1, len(lines)) if depth[j] <= depth[i]), len(lines))
+            subtrees.append(lines[i + 1 : end])
+    return subtrees
+
+
+def test_retraction_broadcasts_hold_no_aggregate_and_ignore_duplicates(spark, tmp_path):
+    """Both ``retract_rollup_state`` shapes broadcast the deleted rows as
+    given: no aggregate (a distinct's shuffle) under either broadcast,
+    and duplicated deleted rows give the same state as unique ones."""
+    from light_curve_spark.operators.rollup import rollup_tiers
+    from light_curve_spark.plans.caching import release_operator_caches
+    from light_curve_spark.streaming.incremental import retract_rollup_state
+
+    rng = np.random.default_rng(6)
+    rows = [(k, float(i), float(rng.normal())) for k in ("a", "b", "c") for i in range(200)]
+    series = spark.createDataFrame(rows, "k string, t double, v double")
+    kw = dict(keys=["k"], base_width=16.0, tiers=(1, 10, 100))
+    cut = (F.col("k") == "b") & (F.col("t") >= 30) & (F.col("t") < 90)
+    whole = spark.createDataFrame([("a",)], "k string")
+    shapes = {
+        "whole_key": (whole, whole.unionByName(whole), None),
+        "partial": (series.filter(cut), series.filter(cut).unionByName(series.filter(cut)),
+                    series.filter(~cut)),
+    }
+    for shape, (deleted, doubled, retained) in shapes.items():
+        states = []
+        for i, dels in enumerate((deleted, doubled)):
+            st = _CapturingStorage(ParquetSnapshotStorage(spark, str(tmp_path / f"{shape}{i}")))
+            st.append(rollup_tiers(series, **kw), "state")
+            retract_rollup_state(st, dels, retained, table="state", **kw)
+            subtrees = _broadcast_subtrees(st.appended[-1])
+            assert subtrees, shape
+            for sub in subtrees:
+                assert not any("Aggregate" in ln for ln in sub), (shape, "\n".join(sub))
+            states.append(_as_map(st.read_snapshot("state"), ["k"]))
+        release_operator_caches()
+        assert states[0] == states[1], shape
+        if retained is not None:
+            assert set(states[0]) == set(_as_map(rollup_tiers(retained, **kw), ["k"])), shape
+        else:
+            assert not any(key[0] == "a" for key in states[0]), shape
