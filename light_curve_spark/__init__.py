@@ -11,3 +11,7 @@ XOR-compressed into per-partition chunk structs. See SURVEY.md.
 """
 
 __version__ = "0.1.0"
+
+from light_curve_spark._spark_archives import keep_spark_archive_indexes
+
+keep_spark_archive_indexes()
